@@ -8,25 +8,29 @@ and the "sink" is the index itself.
 
 Stages (each is a committed, resumable checkpoint):
   1. 'tf'       assign stable doc_ords, tokenize (Arrow UDF), write the
-                forward table + global stats + the (term, doc_ord, tf,
-                dl, salt) run table partitioned by term_bucket — these
-                are the SPIMI runs; Spark's sort-merge shuffle is the
-                SPIMI merge.
-  2. 'segments' per chunk of term_buckets: group runs by (term, salt)
-                and encode delta+varint blocks with block-max metadata
-                (applyInPandas, numpy codec). Salt buckets are
-                doc_ord-RANGE-disjoint, so a hot term's postings are
-                built by n_salt_buckets independent tasks and merge by
-                concatenation — no single reducer ever sees the whole
-                Zipf head (SURVEY §4.2 skew strategy; AQE is backstop).
+                forward table + global stats, and pack each input
+                partition's postings into SPIMI runs: one varint row
+                (term, salt, min_doc, n_runs, runs[, pos]) per (term,
+                salt, partition). With checkpoint_runs the runs are
+                written to tf/ partitioned by term_bucket; otherwise
+                they stream straight into stage 2.
+  2. 'segments' per chunk of term_buckets: shuffle runs by (term, salt),
+                sort by min_doc and merge-concatenate them into
+                delta+varint blocks with block-max metadata (mapInArrow,
+                numpy codec). Salt buckets are doc_ord-RANGE-disjoint,
+                so a hot term's postings are built by n_salt_buckets
+                independent tasks and merge by concatenation — no single
+                reducer ever sees the whole Zipf head (SURVEY §4.2 skew
+                strategy; AQE is backstop).
   3. 'terms'    term dictionary (term → df) aggregated from segments.
+The tf/ checkpoint is deleted once the index is complete: only a
+stage 2 that is still pending reads it.
 
 Scale notes (100 TB / 1e12 turns):
-  - per-occurrence rows carry only (term, doc_ord, tf, dl) — nothing
-    wider (SURVEY §7.3).
-  - groupBy(term, doc_ord) gets map-side partial aggregation from
-    Catalyst automatically; the only wide rows (posting blocks) are
-    bounded by block_size and salt-split.
+  - the exchanged rows are the packed runs (~3-4 varint bytes per
+    posting), never per-occurrence rows (SURVEY §7.3).
+  - the only wide rows (posting blocks) are bounded by block_size and
+    salt-split.
   - doc_ord assignment is a rangepartition + per-partition offsets
     join (broadcast) — no global window, no driver collect of data.
 """
@@ -47,18 +51,13 @@ from pyspark.storagelevel import StorageLevel
 from sparkbm25 import catalog
 from sparkbm25.config import IndexConfig
 
-def segment_schema(with_pos: bool = False, term_ids: bool = False) -> str:
+def segment_schema(with_pos: bool = False) -> str:
     pos = ",pos:binary" if with_pos else ""
-    head = ("term_id bigint, salt int" if term_ids
-            else "term_bucket int, term string, salt int")
     return (
-        f"{head}, n_docs bigint, "
+        "term_bucket int, term string, salt int, n_docs bigint, "
         "blocks array<struct<first_doc:bigint,n:int,gaps:binary,tfs:binary,"
         f"dls:binary,max_impact:double{pos}>>"
     )
-
-
-SEGMENT_SCHEMA = segment_schema()
 
 
 @dataclass
@@ -75,13 +74,14 @@ def assign_doc_ords(df: DataFrame, config: IndexConfig, doc_ord_base: int = 0,
     """Stable dense docID by (conv_id, turn_idx) order (SURVEY §7.0 O4)
     fused with tokenization — ONE Python/Arrow crossing for both.
 
-    cache_tokens=False (verify-order packed builds) keeps token LISTS
+    cache_tokens=False (verify-order builds) keeps token LISTS
     out of this stage entirely: the kernel computes dl with the cheap
     boundary-count pass, the persisted bookkeeping cache shrinks to the
     id/dl/err proxy rows (guide §8: decide with small rows), and the
     caller re-derives (doc_ord, tokens) in its own fused scan via the
     attached `_sparkbm25_dfp` (the pre-kernel scan) and
-    `_sparkbm25_offsets` ({(pid, seq): doc_ord offset}) handles.
+    `_sparkbm25_units` ({(pid, seq): (doc_ord offset, row count)})
+    handles.
 
     Scale-safe: range-repartition + partition-local index via
     mapInPandas + broadcast join of per-partition offsets. No global
@@ -352,11 +352,13 @@ def assign_doc_ords(df: DataFrame, config: IndexConfig, doc_ord_base: int = 0,
         # handles for the caller's fused (tokenize + doc_ord) re-scan:
         # the scan plan is deterministic (same files, same pinned split
         # sizing, verify-proven per-file order), so the kernel re-derives
-        # identical (pid, seq, local_idx) and maps them through offsets
+        # identical (pid, seq, local_idx) and maps them through offsets;
+        # the row counts let it prove each unit came back whole
         out._sparkbm25_dfp = dfp
-        out._sparkbm25_offsets = {
-            (int(p), int(s)): int(o)
-            for p, s, o in zip(counts["pid"], counts["seq"], offsets)}
+        out._sparkbm25_units = {
+            (int(p), int(s)): (int(o), int(c))
+            for p, s, o, c in zip(counts["pid"], counts["seq"], offsets,
+                                  counts["count"])}
     return out
 
 
@@ -391,254 +393,36 @@ def _block_pa_type(with_pos: bool = False):
     return _BLOCK_PA_TYPES[with_pos]
 
 
-def _make_segment_encoder(k1: float, b: float, avgdl: float, block_size: int):
-    """mapInArrow stage: rows (term_bucket, term, salt, postings) with
-    postings = sorted array<struct<doc_ord,tf,dl>> → segment rows.
-
-    One vectorized encode per Arrow batch (thousands of groups), not
-    one Python call per group — the groupBy/collect_list upstream is
-    pure JVM (Tungsten hash agg with map-side partials)."""
-
-    def encode(batches):
-        import pyarrow as pa
-
-        from sparkbm25.codec import encode_blocks_batch
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tb = pa.Table.from_batches([rb])
-            lv = tb.column("postings").combine_chunks()
-            offs = lv.offsets.to_numpy().astype(np.int64)
-            group_offsets = offs - offs[0]
-            flat = lv.flatten()
-            docs = flat.field("doc_ord").to_numpy(zero_copy_only=False)
-            tfs = flat.field("tf").to_numpy(zero_copy_only=False)
-            dls = flat.field("dl").to_numpy(zero_copy_only=False)
-            blocks = encode_blocks_batch(
-                docs, tfs, dls, group_offsets,
-                k1=k1, b=b, avgdl=avgdl, block_size=block_size,
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    tb.column("term_bucket").combine_chunks(),
-                    tb.column("term").combine_chunks(),
-                    tb.column("salt").combine_chunks(),
-                    pa.array(np.diff(group_offsets), type=pa.int64()),
-                    pa.array(blocks, type=_block_pa_type()),
-                ],
-                names=["term_bucket", "term", "salt", "n_docs", "blocks"],
-            )
-
-    return encode
+_RESCAN_MISMATCH = (
+    "fused pack re-scan does not reproduce the bookkeeping pass: a "
+    "(pid, seq) input unit is missing or its row count differs, so the "
+    "input changed between the two scans or its scan is not "
+    "deterministic — rebuild with input_order='shuffle'")
 
 
-def _make_stream_encoder(k1: float, b: float, avgdl: float, block_size: int,
-                         postings_acc=None, rows_acc=None,
-                         aggregated: bool = True, with_pos: bool = False,
-                         lean: dict | None = None, term_ids: bool = False):
-    """Streaming SPIMI-merge encoder: consumes Arrow batches of posting
-    rows sorted by (term[, salt], doc_ord) within the partition, emits
-    one segment row per (term, salt) group. A group may span batches —
-    the tail group is carried; nothing else is buffered, so executor
-    memory is O(one group), not O(collect_list of the hot term).
-
-    aggregated=False: input rows are raw token OCCURRENCES (no tf
-    column, duplicate doc_ords adjacent after the sort). tf is then a
-    run-length count computed inline — this removes the
-    groupBy(term, doc_ord) hash-agg shuffle from the build entirely
-    (salt is a function of doc_ord, so (term, doc) duplicates are
-    guaranteed co-located and adjacent).
-
-    lean (only with aggregated=False): the shuffled rows carry ONLY
-    (term, doc_ord, dl[, pos]) — term_bucket and salt are NOT
-    materialized through the shuffle (the dominant memory-bandwidth
-    cost of the build is shuffle row bytes; dropping 8-12 bytes/
-    occurrence cuts it ~25%). The encoder recomputes salt from doc_ord
-    (vectorized; salt is doc_ord-range monotone, so sorting by
-    (term, doc_ord) still yields contiguous (term, salt) runs) and
-    crc32 term buckets per GROUP (not per occurrence).
-    lean = {'nb': n_term_buckets, 'ns': n_salt_buckets,
-            'base': doc_ord_base, 'n': n_docs}."""
-
-    def encode(batches):
-        import zlib
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from sparkbm25.codec import encode_blocks_batch
-
-        carry = None  # dict: term_pa (pa array) + numpy int arrays
-
-        def lean_salt(docs):
-            return np.minimum(
-                lean["ns"] - 1,
-                (docs - lean["base"]) * lean["ns"] // max(lean["n"], 1)
-            ).astype(np.int32)
-
-        def emit(tb_arr, terms_pa, salts, docs, tfs, dls, group_offsets,
-                 positions=None, occ_offsets=None):
-            blocks = encode_blocks_batch(
-                docs, tfs, dls, group_offsets,
-                k1=k1, b=b, avgdl=avgdl, block_size=block_size,
-                positions=positions, occ_offsets=occ_offsets)
-            if postings_acc is not None:
-                postings_acc.add(int(docs.size))
-                rows_acc.add(int(group_offsets.size - 1))
-            if term_ids:
-                # dictionary mode: emit the int id; the term string and
-                # its crc32 bucket are joined back in the JVM after
-                # encode (segment rows are tiny relative to postings)
-                return pa.RecordBatch.from_arrays(
-                    [
-                        terms_pa.cast(pa.int64()),
-                        pa.array(salts, type=pa.int32()),
-                        pa.array(np.diff(group_offsets), type=pa.int64()),
-                        pa.array(blocks, type=_block_pa_type(with_pos)),
-                    ],
-                    names=["term_id", "salt", "n_docs", "blocks"],
-                )
-            if tb_arr is None:
-                # lean mode: crc32 bucket per GROUP start (identical to
-                # term_bucket_col's JVM crc32 — verified byte-equal)
-                nb = lean["nb"]
-                tb_arr = np.fromiter(
-                    (zlib.crc32(t.encode()) % nb for t in terms_pa.to_pylist()),
-                    dtype=np.int32, count=len(terms_pa))
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(tb_arr, type=pa.int32()),
-                    terms_pa.cast(pa.string()),
-                    pa.array(salts, type=pa.int32()),
-                    pa.array(np.diff(group_offsets), type=pa.int64()),
-                    pa.array(blocks, type=_block_pa_type(with_pos)),
-                ],
-                names=["term_bucket", "term", "salt", "n_docs", "blocks"],
-            )
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            # term strings/ids stay in Arrow (C++) end to end — no
-            # Python materialization per posting (memory-traffic hot spot)
-            term_pa = rb.column(rb.schema.get_field_index(
-                "term_id" if term_ids else "term"))
-            docs = rb.column(rb.schema.get_field_index("doc_ord")).to_numpy(
-                zero_copy_only=False)
-            if lean is not None:
-                tb = None
-                salt = lean_salt(docs)
-            else:
-                tb = rb.column(rb.schema.get_field_index("term_bucket")).to_numpy(
-                    zero_copy_only=False)
-                salt = rb.column(rb.schema.get_field_index("salt")).to_numpy(
-                    zero_copy_only=False)
-            if aggregated:
-                tfs = rb.column(rb.schema.get_field_index("tf")).to_numpy(
-                    zero_copy_only=False)
-            else:
-                tfs = np.ones(rb.num_rows, dtype=np.int64)  # placeholder
-            dls = rb.column(rb.schema.get_field_index("dl")).to_numpy(
-                zero_copy_only=False)
-            pos = (rb.column(rb.schema.get_field_index("pos")).to_numpy(
-                zero_copy_only=False) if with_pos else None)
-
-            if carry is not None:
-                term_pa = pa.concat_arrays(
-                    [carry["term_pa"].cast(term_pa.type), term_pa])
-                if tb is not None:
-                    tb = np.concatenate([carry["tb"], tb])
-                salt = np.concatenate([carry["salt"], salt])
-                docs = np.concatenate([carry["docs"], docs])
-                tfs = np.concatenate([carry["tfs"], tfs])
-                dls = np.concatenate([carry["dls"], dls])
-                if with_pos:
-                    pos = np.concatenate([carry["pos"], pos])
-                carry = None
-
-            n = docs.size
-            # group starts: term or salt changes; adjacent-inequality
-            # computed in Arrow C++
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            if n > 1:
-                neq = pc.not_equal(term_pa.slice(1), term_pa.slice(0, n - 1))
-                change[1:] = neq.to_numpy(zero_copy_only=False) | (salt[1:] != salt[:-1])
-            starts = np.flatnonzero(change)
-
-            if starts.size == 1:
-                # the whole batch is one (possibly continuing) group
-                carry = {"term_pa": term_pa, "tb": tb, "salt": salt,
-                         "docs": docs, "tfs": tfs, "dls": dls, "pos": pos}
-                continue
-
-            last_start = int(starts[-1])
-            carry = {
-                "term_pa": term_pa.slice(last_start),
-                "tb": None if tb is None else tb[last_start:],
-                "salt": salt[last_start:], "docs": docs[last_start:],
-                "tfs": tfs[last_start:], "dls": dls[last_start:],
-                "pos": pos[last_start:] if with_pos else None,
-            }
-            # complete groups: boundaries = starts (last element == the
-            # carried group's start == end of the complete region)
-            go = starts.astype(np.int64)
-            if aggregated:
-                region = (docs[:last_start], tfs[:last_start], dls[:last_start], go)
-                kw = {}
-            else:
-                region, kw = _occurrences_to_runs(
-                    change, docs, dls, last_start, go,
-                    pos if with_pos else None)
-            yield emit(
-                None if tb is None else tb[starts[:-1]],
-                term_pa.take(pa.array(starts[:-1], type=pa.int64())),
-                salt[starts[:-1]],
-                *region, **kw,
-            )
-
-        if carry is not None and carry["docs"].size:
-            docs = carry["docs"]
-            L = docs.size
-            go = np.array([0, L], dtype=np.int64)
-            if aggregated:
-                region = (docs, carry["tfs"], carry["dls"], go)
-                kw = {}
-            else:
-                cmask = np.zeros(L, dtype=bool)
-                cmask[0] = True
-                region, kw = _occurrences_to_runs(
-                    cmask, docs, carry["dls"], L, go, carry["pos"])
-            yield emit(
-                None if carry["tb"] is None else carry["tb"][:1],
-                carry["term_pa"].slice(0, 1), carry["salt"][:1],
-                *region, **kw,
-            )
-
-    return encode
-
-
-def _make_tok_ingest(offsets_bc, pattern: str, maxlen: int):
-    """Ingest factory for the FUSED tokenize+pack scan (verify-order
-    packed builds): batches carry (pid, _fid, text); the per-task
-    closure re-derives the bookkeeping pass's (seq, local_idx) from the
-    same deterministic file runs and maps them through the broadcast
-    {(pid, seq): offset} table to absolute doc_ords. Token lists exist
-    only inside the Python worker that immediately packs them — they
-    never cross to the JVM or into any cache (guide §8: the heavy
-    token bytes move exactly once, straight into the packed runs)."""
+def _make_tok_ingest(units_bc, pattern: str, maxlen: int):
+    """Ingest for the FUSED tokenize+pack scan (input_order='verify'):
+    batches carry (pid, _fid, text); the task re-derives the
+    bookkeeping pass's (seq, local_idx) from the same deterministic
+    file runs and maps them through the broadcast
+    {(pid, seq): (offset, row count)} table to absolute doc_ords. Token
+    lists exist only inside the Python worker that immediately packs
+    them — they never cross to the JVM or into any cache (guide §8:
+    the heavy token bytes move exactly once, straight into the packed
+    runs). Every unit must come back with exactly the row count the
+    bookkeeping pass saw; anything else raises, because a changed
+    input would otherwise shift doc_ords silently."""
     from sparkbm25.analysis import (DEFAULT_TOKEN_PATTERN,
                                     tokenize_arrow_ascii, tokenize_series)
 
-    def make():
+    def ingest(batches):
         import pyarrow as pa
 
-        fseq: dict = {}
-        offs: dict = {}
-        omap = offsets_bc.value
-
-        def ingest(rb):
+        units = units_bc.value
+        fseq: dict = {}   # crc32(file) -> dense seq within this task
+        seen: dict = {}   # seq -> rows re-scanned so far
+        pid = None
+        for rb in batches:
             nr = rb.num_rows
             ni = {n: i for i, n in enumerate(rb.schema.names)}
             text = rb.column(ni["text"])
@@ -656,30 +440,41 @@ def _make_tok_ingest(offsets_bc, pattern: str, maxlen: int):
             bounds = np.r_[starts, nr]
             for s, e in zip(bounds[:-1], bounds[1:]):
                 sq = fseq.setdefault(int(fid[s]), len(fseq))
-                o = offs.get(sq, 0)
-                off0 = omap.get((pid, sq))
-                if off0 is None:
-                    # the bookkeeping pass never saw this unit — the
-                    # scan is not reproducing the same split layout
-                    raise RuntimeError(
-                        "fused packed re-scan hit a (pid, seq) unit "
-                        "absent from the bookkeeping pass; the input "
-                        "scan is not deterministic — rebuild with "
-                        "encoder='stream' or input_order='shuffle'")
-                docs[s:e] = off0 + o + np.arange(e - s, dtype=np.int64)
-                offs[sq] = o + (e - s)
-            return docs, toks
+                o = seen.get(sq, 0)
+                unit = units.get((pid, sq))
+                if unit is None or o + (e - s) > unit[1]:
+                    raise RuntimeError(_RESCAN_MISMATCH)
+                docs[s:e] = unit[0] + o + np.arange(e - s, dtype=np.int64)
+                seen[sq] = o + (e - s)
+            yield docs, toks
+        if pid is None:
+            # no rows came back: the scan partition still owns the units
+            # the bookkeeping pass saw in it (the task runs in the scan's
+            # stage, so its partition id IS the scan's pid)
+            from pyspark import TaskContext
 
-        return ingest
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx is not None else None
+        if pid is not None and seen != {
+                sq: c for (p, sq), (_o, c) in units.items() if p == pid}:
+            raise RuntimeError(_RESCAN_MISMATCH)
 
-    return make
+    return ingest
+
+
+def _ingest_doc_tokens(batches):
+    """Default pack ingest: (doc_ord, tokens) rows from stage 1."""
+    for rb in batches:
+        yield (rb.column(rb.schema.get_field_index("doc_ord"))
+               .to_numpy(zero_copy_only=False),
+               rb.column(rb.schema.get_field_index("tokens")))
 
 
 def _make_pack_kernel(ns: int, base: int, n_docs: int, with_pos: bool,
-                      make_ingest=None):
-    """Map-side SPIMI combine (encoder='packed'): one Arrow pass per
-    doc-contiguous input partition that turns (doc_ord, tokens) rows
-    into ONE packed row per (term, salt):
+                      ingest=_ingest_doc_tokens):
+    """Map-side SPIMI combine: one Arrow pass per doc-contiguous input
+    partition that turns (doc_ord, tokens) rows — as yielded by
+    ingest(batches) — into ONE packed row per (term, salt):
 
         (term, salt, min_doc, n_runs, runs[, pos])
 
@@ -689,7 +484,7 @@ def _make_pack_kernel(ns: int, base: int, n_docs: int, with_pos: bool,
     within-doc positions as varints, occurrence order.
 
     Why map-side: the shuffled rows are the build's memory-bandwidth
-    ceiling (BENCH/BASELINE.md). The lean occurrence row costs ~30-40 B
+    ceiling (BENCH/BASELINE.md). An occurrence row costs ~30-40 B
     of serialization + sort traffic per token (string term + int64 doc
     + int32 dl + Tungsten row overhead); the packed run costs ~3-4
     varint bytes, the term string ships once per (partition, term,
@@ -719,28 +514,15 @@ def _make_pack_kernel(ns: int, base: int, n_docs: int, with_pos: bool,
     globally range-disjoint run, which is what the reduce-side
     min_doc concatenation merge requires."""
 
-    def default_ingest():
-        def ingest(rb):
-            return (rb.column(rb.schema.get_field_index("doc_ord"))
-                    .to_numpy(zero_copy_only=False),
-                    rb.column(rb.schema.get_field_index("tokens")))
-        return ingest
-
-    make_ingest_ = make_ingest or default_ingest
-
     def pack(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
 
         from sparkbm25.codec import varint_encode_with_offsets
 
-        ingest = make_ingest_()
         doc_chunks: list[np.ndarray] = []
         tok_chunks: list = []
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            docs_b, toks_b = ingest(rb)
+        for docs_b, toks_b in ingest(rb for rb in batches if rb.num_rows):
             doc_chunks.append(docs_b)
             tok_chunks.append(toks_b)
         if not doc_chunks:
@@ -886,14 +668,14 @@ def _binary_col_stream(col) -> tuple[bytes, np.ndarray]:
 def _make_merge_encoder(k1: float, b: float, avgdl: float, block_size: int,
                         nb: int, postings_acc=None, rows_acc=None,
                         with_pos: bool = False):
-    """Reduce-side merge for encoder='packed': input rows are packed
+    """Reduce-side SPIMI merge: input rows are packed
     (term, salt, min_doc, n_runs, runs[, pos]) sorted by
     (term, salt, min_doc) within the partition. Rows of one (term,
     salt) group concatenate into the group's posting run (partition
     doc ranges are disjoint and min_doc-ordered), which block-encodes
-    through the same codec as the stream path — segments come out
-    byte-identical. Groups spanning Arrow batches are carried; decode
-    of every blob in a batch happens in ONE varint pass."""
+    through codec.encode_blocks_batch. Groups spanning Arrow batches
+    are carried; decode of every blob in a batch happens in ONE varint
+    pass."""
 
     def merge(batches):
         import zlib
@@ -1085,6 +867,8 @@ def build_index(
     resume=True anti-joins the manifest and only builds what is missing
     (idempotency predicate analog, es_translator/es.py:131-150).
     """
+    if config.encoder != "packed":
+        raise ValueError(f"encoder must be 'packed', got {config.encoder!r}")
     t0 = time.time()
     lineage = f"{config.config_hash()}:{input_desc}"
 
@@ -1100,30 +884,39 @@ def build_index(
         else max(1, min(config.n_build_chunks, config.n_term_buckets))
     )
     pending_chunks = [c for c in range(n_chunks) if ("segments", c) not in done]
+    # a resume under another config may commit fewer chunks than the
+    # build it replaces: chunk dirs it will never rewrite would add
+    # stale duplicate postings to every query
+    seg_root = catalog.segments_dir(index_dir)
+    for name in os.listdir(seg_root) if os.path.isdir(seg_root) else ():
+        if name.startswith("chunk=") and int(name[6:]) >= n_chunks:
+            shutil.rmtree(os.path.join(seg_root, name))
+    tf_path = catalog.tf_dir(index_dir)
+    with_pos = config.store_positions
 
-    # ---------------- stage 1: docs + stats + tf runs -----------------
-    # Without the on-disk runs checkpoint, stage 1 must be recomputed
-    # whenever any segment chunk is still pending (the runs only live
-    # in the cluster cache).
-    tf_df = None
-    stage1_done = ("tf", -1) in done and (config.checkpoint_runs or not pending_chunks)
+    # ---------------- stage 1: docs + stats + packed runs -------------
+    # Pending segment chunks need the runs: from the on-disk checkpoint
+    # when there is one, else stage 1 runs again (without a checkpoint
+    # the runs only ever stream into stage 2).
+    packed = None
+    stage1_done = ("tf", -1) in done and (
+        not pending_chunks
+        or (config.checkpoint_runs and os.path.isdir(tf_path)))
     if stage1_done:
         stats = catalog.read_stats(index_dir)
         n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     else:
         s0 = time.time()
-        # verify-order packed builds keep token lists OUT of the
-        # bookkeeping cache entirely: stage 1 caches only the small
-        # id/dl/err proxy rows, and stage 2 re-derives (doc_ord,
-        # tokens) inside the fused tokenize+pack scan (see
-        # _make_tok_ingest) — the heavy token bytes go straight from
-        # the input scan into packed runs, crossing the Python
-        # boundary exactly once and never entering the block cache
-        light_packed = (config.encoder == "packed"
-                        and not config.checkpoint_runs
-                        and config.input_order == "verify")
+        # verify-order builds keep token lists OUT of the bookkeeping
+        # cache entirely: stage 1 caches only the small id/dl/err proxy
+        # rows, and the pack kernel re-derives (doc_ord, tokens) inside
+        # the fused tokenize+pack scan (see _make_tok_ingest) — the
+        # heavy token bytes go straight from the input scan into packed
+        # runs, crossing the Python boundary exactly once and never
+        # entering the block cache
+        fused = config.input_order == "verify"
         df_tok = assign_doc_ords(transcripts, config, doc_ord_base,
-                                 cache_tokens=not light_packed)
+                                 cache_tokens=not fused)
 
         # forward table (doc_ord ↔ (conv_id, turn_idx), dl) — needed for
         # top-k id resolution and the text-equality invariant check.
@@ -1155,82 +948,43 @@ def build_index(
         sum_dl = int(counts["sum_dl"].fillna(0).sum())
         avgdl = (sum_dl / n_docs) if n_docs else 0.0
 
-        nb, ns = config.n_term_buckets, config.n_salt_buckets
-        salt_col = F.least(
-            F.lit(ns - 1),
-            F.floor((F.col("doc_ord") - F.lit(doc_ord_base)) * ns
-                    / F.lit(max(n_docs, 1))),
-        ).cast("int")
-        if config.encoder == "packed" and config.checkpoint_runs:
-            raise ValueError(
-                "encoder='packed' streams map-side combined runs straight "
-                "into the merge: use checkpoint_runs=False (the resumable "
-                "pre-aggregated SPIMI runs are the 'stream' path's)")
-        if config.store_positions:
-            if config.checkpoint_runs or config.encoder not in ("stream", "packed"):
-                raise ValueError(
-                    "store_positions rides the raw occurrence stream: "
-                    "use IndexConfig(encoder='stream'|'packed', "
-                    "checkpoint_runs=False)")
-        if config.encoder == "packed":
-            # map-side SPIMI combine: NO explode — the pack kernel
-            # flattens the tokens ListArray zero-copy and aggregates
-            # (term, doc) runs inside the partition (positions ride the
-            # token order, so store_positions needs no posexplode either)
-            if light_packed:
-                # fused scan input: narrow (pid, _fid, text) columns
-                # straight off the input scan; the pack ingest
-                # tokenizes and assigns doc_ords itself
-                occurrences = df_tok._sparkbm25_dfp.select(
-                    "pid", "_fid", "text")
-                pack_offsets = df_tok._sparkbm25_offsets
-            else:
-                occurrences = df_tok.select("doc_ord", "tokens")
-                pack_offsets = None
-        elif config.store_positions:
-            occurrences = df_tok.select(
-                "doc_ord", F.col("dl").cast("int").alias("dl"),
-                F.posexplode("tokens").alias("pos", "term"))
-            occurrences = occurrences.withColumn("pos", F.col("pos").cast("int"))
+        # map-side SPIMI combine: NO explode — the pack kernel flattens
+        # the tokens ListArray zero-copy and aggregates (term, doc) runs
+        # inside the partition (positions ride the token order, so
+        # store_positions needs no posexplode either)
+        if fused:
+            # fused scan input: narrow (pid, _fid, text) columns
+            # straight off the input scan; the pack ingest tokenizes
+            # and assigns doc_ords itself
+            runs_src = df_tok._sparkbm25_dfp.select("pid", "_fid", "text")
+            ingest = _make_tok_ingest(
+                spark.sparkContext.broadcast(df_tok._sparkbm25_units),
+                config.token_pattern, config.max_content_length)
         else:
-            occurrences = df_tok.select(
-                "doc_ord", F.col("dl").cast("int").alias("dl"),
-                F.explode("tokens").alias("term"))
+            runs_src = df_tok.select("doc_ord", "tokens")
+            ingest = _ingest_doc_tokens
+        packed = runs_src.mapInArrow(
+            _make_pack_kernel(config.n_salt_buckets, doc_ord_base, n_docs,
+                              with_pos, ingest=ingest),
+            schema="term string, salt int, min_doc bigint, n_runs bigint, "
+                   "runs binary" + (", pos binary" if with_pos else ""))
         if config.checkpoint_runs:
-            # the on-disk SPIMI runs are pre-aggregated (compact) —
-            # this is the resumable configuration
-            tf = (
-                occurrences
-                .withColumn("term_bucket", term_bucket_col(F.col("term"), nb))
-                .withColumn("salt", salt_col)
-                .groupBy("term_bucket", "term", "salt", "doc_ord")
-                .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
+            # the resumable configuration: the packed runs are the
+            # on-disk SPIMI checkpoint, one directory per term_bucket so
+            # each stage-2 chunk reads only its own buckets. Co-locate
+            # each bucket in one task before the partitioned write:
+            # file count = n_buckets, not tasks × buckets
+            nb = config.n_term_buckets
+            (
+                packed.withColumn("term_bucket",
+                                  term_bucket_col(F.col("term"), nb))
+                .repartition(nb, "term_bucket")
+                .write.mode("overwrite").partitionBy("term_bucket")
+                .parquet(catalog.staging_dir(index_dir, "tf"))
             )
-            tf_staging = catalog.staging_dir(index_dir, "tf")
-            # co-locate each bucket in one task before the partitioned
-            # write: file count = n_buckets, not tasks × buckets
-            tf = tf.repartition(nb, "term_bucket")
-            tf.write.mode("overwrite").partitionBy("term_bucket").parquet(tf_staging)
-            catalog.commit_staging(index_dir, "tf", catalog.tf_dir(index_dir))
+            catalog.commit_staging(index_dir, "tf", tf_path)
             df_tok._sparkbm25_cached.unpersist()
-        elif config.encoder == "stream":
-            # direct LEAN path: raw (term, doc_ord, dl[, pos]) rows flow
-            # into the shuffle-sort encoder, which counts tf as
-            # run-lengths AND recomputes salt/term_bucket post-shuffle —
-            # the groupBy(term, doc) hash-agg shuffle disappears
-            # entirely and the shuffled rows carry no derivable columns
-            # (shuffle bytes are the build's memory-bandwidth ceiling)
-            tf_df = occurrences
-        elif config.encoder == "packed":
-            tf_df = occurrences
-        else:
-            tf_df = (
-                occurrences
-                .withColumn("term_bucket", term_bucket_col(F.col("term"), nb))
-                .withColumn("salt", salt_col)
-                .groupBy("term_bucket", "term", "salt", "doc_ord")
-                .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-            )
+            packed = None
 
         catalog.write_stats(
             index_dir,
@@ -1250,150 +1004,51 @@ def build_index(
     if n_docs == 0:
         # empty input: a valid index is just the stats (queries
         # short-circuit on n_docs == 0; nothing to encode or resolve)
-        if tf_df is not None:
+        if packed is not None:
             df_tok._sparkbm25_cached.unpersist()
-        catalog.clear_staging(index_dir)
-        catalog.write_complete_marker(index_dir)
+        _finish(index_dir)
         return BuildResult(index_dir=index_dir, n_docs=0, avgdl=0.0,
                            seconds=time.time() - t0, turns_per_sec=0.0)
 
     # ---------------- stage 2: segments, chunked ----------------------
-    k1, b, bs = config.k1, config.b, config.block_size
-    encoder = _make_segment_encoder(k1, b, float(avgdl), bs)
+    # shuffle the packed runs by (term, salt) so a group lives in one
+    # partition; the partition-local min_doc sort makes the reduce side
+    # a concatenation merge (disjoint, min_doc-ordered ranges) into the
+    # block codec. The exchange moves compressed runs (~3-4 B/posting),
+    # not occurrence rows (~30-40 B/token).
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     for chunk in pending_chunks:
         c0 = time.time()
-        if tf_df is not None:
-            tf_chunk = tf_df  # single-chunk streaming path
+        if packed is not None:
+            runs = packed  # single-chunk streaming path
+            n_out = config.n_term_buckets
         else:
             buckets = [bk for bk in range(config.n_term_buckets) if bk % n_chunks == chunk]
-            tf_chunk = (
-                spark.read.parquet(catalog.tf_dir(index_dir))
+            runs = (
+                spark.read.parquet(tf_path)
                 .where(F.col("term_bucket").isin(buckets))  # partition pruning
+                .drop("term_bucket")
             )
-        n_out = max(len(buckets) if tf_df is None else config.n_term_buckets, 1)
+            if "runs" not in runs.columns:
+                # a run table in another layout (an older release's
+                # per-posting rows) is never decoded as packed runs
+                raise RuntimeError(
+                    f"{tf_path} holds no packed runs; rebuild with "
+                    "resume=False")
+            n_out = max(len(buckets), 1)
         postings_acc = spark.sparkContext.accumulator(0)
         rows_acc = spark.sparkContext.accumulator(0)
-        if config.encoder == "stream":
-            # shuffle-sort SPIMI merge: hash-shuffle by (term, salt) so a
-            # group lives in exactly one partition, cluster it with a
-            # partition-local sort, stream-encode with group carry.
-            aggregated = "tf" in tf_chunk.columns
-            with_pos = config.store_positions and not aggregated
-            n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            vdf = None
-            if aggregated:
-                cols = ["term_bucket", "term", "salt", "doc_ord", "dl", "tf"]
-                sorted_tf = (
-                    tf_chunk.repartition(n_shuffle, "term", "salt")
-                    .sortWithinPartitions("term", "salt", "doc_ord")
-                    .select(*cols)
-                )
-                lean = None
-            else:
-                # LEAN shuffle: rows carry only (term, doc_ord, dl[,pos]).
-                # The (term, salt) partition key is hashed from an
-                # EXPRESSION (salt recomputed from doc_ord) so salt never
-                # materializes into the shuffled bytes; within a
-                # partition, salt is monotone in doc_ord for a fixed
-                # term, so sorting by (term, doc_ord[, pos]) already
-                # clusters (term, salt) groups.
-                ns2 = config.n_salt_buckets
-                salt_expr = F.least(
-                    F.lit(ns2 - 1),
-                    F.floor((F.col("doc_ord") - F.lit(doc_ord_base)) * ns2
-                            / F.lit(max(n_docs, 1))),
-                ).cast("int")
-                lean = {"nb": config.n_term_buckets, "ns": ns2,
-                        "base": doc_ord_base, "n": n_docs}
-                # dictionary encoding: replace the term string with an
-                # int64 id via a broadcast vocab join, when the vocab
-                # fits the bound — the dominant shuffle-sort then
-                # compares 8-byte ints, not strings
-                vdf = None
-                if config.dict_terms == "auto":
-                    cap = config.dict_max_vocab
-                    vocab_pdf = (
-                        tf_chunk.select("term").distinct().limit(cap + 1)
-                        .toPandas())
-                    if len(vocab_pdf) <= cap:
-                        vocab_pdf = vocab_pdf.sort_values("term").reset_index(
-                            drop=True)
-                        vocab_pdf["term_id"] = np.arange(
-                            len(vocab_pdf), dtype=np.int64)
-                        vdf = spark.createDataFrame(
-                            vocab_pdf, schema="term string, term_id bigint")
-                term_col = "term_id" if vdf is not None else "term"
-                cols = [term_col, "doc_ord", "dl"] + (["pos"] if with_pos else [])
-                src = (tf_chunk.join(F.broadcast(vdf), "term")
-                       if vdf is not None else tf_chunk)
-                sorted_tf = (
-                    src.select(*cols)
-                    .repartition(n_shuffle, F.col(term_col), salt_expr)
-                    .sortWithinPartitions(term_col, "doc_ord",
-                                          *(["pos"] if with_pos else []))
-                )
-            stream_enc = _make_stream_encoder(k1, b, float(avgdl), bs,
-                                              postings_acc, rows_acc,
-                                              aggregated=aggregated,
-                                              with_pos=with_pos,
-                                              lean=lean,
-                                              term_ids=(not aggregated
-                                                        and vdf is not None))
-            seg = sorted_tf.mapInArrow(
-                stream_enc,
-                schema=segment_schema(with_pos,
-                                      term_ids=(not aggregated
-                                                and vdf is not None)))
-            if not aggregated and vdf is not None:
-                # join the strings back onto the (tiny) segment rows and
-                # restore the bucket column in the JVM
-                seg = (
-                    seg.join(F.broadcast(vdf), "term_id").drop("term_id")
-                    .withColumn("term_bucket",
-                                term_bucket_col(F.col("term"),
-                                                config.n_term_buckets))
-                )
-        elif config.encoder == "packed":
-            # map-side SPIMI combine: the pack kernel emits one varint
-            # row per (term, salt, input partition); the exchange moves
-            # compressed runs (~3-4 B/posting) instead of occurrence
-            # rows (~30-40 B/token), and the reduce side is a
-            # concatenation merge (disjoint, min_doc-ordered ranges)
-            # into the same block codec — segments byte-identical to
-            # the 'stream' path
-            with_pos = config.store_positions
-            make_ingest = None
-            if pack_offsets is not None:
-                make_ingest = _make_tok_ingest(
-                    spark.sparkContext.broadcast(pack_offsets),
-                    config.token_pattern, config.max_content_length)
-            pack = _make_pack_kernel(
-                config.n_salt_buckets, doc_ord_base, n_docs, with_pos,
-                make_ingest=make_ingest)
-            packed_schema = (
-                "term string, salt int, min_doc bigint, n_runs bigint, "
-                "runs binary" + (", pos binary" if with_pos else ""))
-            packed = tf_chunk.mapInArrow(pack, schema=packed_schema)
-            n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            sorted_packed = (
-                packed.repartition(n_shuffle, "term", "salt")
-                .sortWithinPartitions("term", "salt", "min_doc")
-            )
-            merge = _make_merge_encoder(
-                k1, b, float(avgdl), bs, config.n_term_buckets,
-                postings_acc, rows_acc, with_pos=with_pos)
-            seg = sorted_packed.mapInArrow(
-                merge, schema=segment_schema(with_pos))
-        else:
-            grouped = tf_chunk.groupBy("term_bucket", "term", "salt").agg(
-                F.sort_array(
-                    F.collect_list(F.struct("doc_ord", "tf", "dl"))
-                ).alias("postings")
-            )
-            seg = grouped.mapInArrow(encoder, schema=SEGMENT_SCHEMA)
-        # encoded segments are compact; one shuffle aligns files with
-        # the term_bucket directory layout
-        seg = seg.repartition(n_out, "term_bucket")
+        merge = _make_merge_encoder(
+            config.k1, config.b, float(avgdl), config.block_size,
+            config.n_term_buckets, postings_acc, rows_acc, with_pos=with_pos)
+        seg = (
+            runs.repartition(n_shuffle, "term", "salt")
+            .sortWithinPartitions("term", "salt", "min_doc")
+            .mapInArrow(merge, schema=segment_schema(with_pos))
+            # encoded segments are compact; one shuffle aligns files
+            # with the term_bucket directory layout
+            .repartition(n_out, "term_bucket")
+        )
         stage_name = f"segchunk{chunk}"
         seg.write.mode("overwrite").partitionBy("term_bucket").parquet(
             catalog.staging_dir(index_dir, stage_name)
@@ -1401,19 +1056,14 @@ def build_index(
         catalog.commit_staging(
             index_dir, stage_name, catalog.segments_chunk_dir(index_dir, chunk)
         )
-        # chunk metrics: accumulators filled by the encode tasks (no
-        # extra job, no driver-side column read); footer fallback for
-        # the collect-encoder path
-        if config.encoder in ("stream", "packed"):
-            n_rows, n_postings = rows_acc.value, postings_acc.value
-        else:
-            n_rows, n_postings = _segment_chunk_metrics(
-                catalog.segments_chunk_dir(index_dir, chunk))
+        # chunk metrics: accumulators filled by the merge tasks (no
+        # extra job, no driver-side column read)
         c1 = time.time()
         catalog.append_manifest(index_dir, _mrow(
-            "segments", chunk, n_postings, n_rows, c0, c1, lineage))
+            "segments", chunk, postings_acc.value, rows_acc.value, c0, c1,
+            lineage))
 
-    if tf_df is not None:
+    if packed is not None:
         df_tok._sparkbm25_cached.unpersist()
 
     # ---------------- stage 3: term dictionary ------------------------
@@ -1441,8 +1091,7 @@ def build_index(
         catalog.append_manifest(index_dir, _mrow(
             "terms", -1, 0, n_terms, d0, d1, lineage))
 
-    catalog.clear_staging(index_dir)
-    catalog.write_complete_marker(index_dir)
+    _finish(index_dir)
     seconds = time.time() - t0
     return BuildResult(
         index_dir=index_dir,
@@ -1451,6 +1100,14 @@ def build_index(
         seconds=seconds,
         turns_per_sec=(n_docs / seconds) if seconds > 0 else 0.0,
     )
+
+
+def _finish(index_dir: str) -> None:
+    """Mark the index complete, then drop the runs checkpoint: only a
+    pending stage-2 chunk reads tf/, and a complete index has none."""
+    catalog.clear_staging(index_dir)
+    catalog.write_complete_marker(index_dir)
+    shutil.rmtree(catalog.tf_dir(index_dir), ignore_errors=True)
 
 
 def _parquet_files(root: str) -> list[str]:
@@ -1464,19 +1121,6 @@ def _parquet_num_rows(root: str) -> int:
     import pyarrow.parquet as pq
 
     return sum(pq.read_metadata(f).num_rows for f in _parquet_files(root))
-
-
-def _segment_chunk_metrics(chunk_dir: str) -> tuple[int, int]:
-    """(segment rows, total postings) from footers + the n_docs column."""
-    import pyarrow.parquet as pq
-
-    rows = 0
-    postings = 0
-    for f in _parquet_files(chunk_dir):
-        rows += pq.read_metadata(f).num_rows
-        tbl = pq.read_table(f, columns=["n_docs"])
-        postings += int(pd.Series(tbl["n_docs"].to_numpy()).sum()) if tbl.num_rows else 0
-    return rows, postings
 
 
 def _mrow(stage: str, pid: int, n_turns: int, n_terms: int,

@@ -9,8 +9,9 @@ instead — same call sites).
 
 Layout under <index_dir>/:
     docs/                 forward table (doc_ord, conv_id, turn_idx, dl)
-    tf/                   stage-1 SPIMI runs: (term, doc_ord, tf, dl,
-                          salt) partitioned by term_bucket
+    tf/                   stage-1 packed SPIMI runs: (term, salt,
+                          min_doc, n_runs, runs[, pos]) partitioned by
+                          term_bucket; deleted once the index is complete
     segments/chunk=J/     stage-2 posting segments, partitioned by
                           term_bucket inside each committed chunk
     terms/                term dictionary (term, df, term_bucket)

@@ -77,19 +77,11 @@ def cmd_build(args) -> int:
     spark = _spark(args.master, "sparkbm25-build")
     from sparkbm25.config import parse_size
 
-    if args.encoder == "packed" and not args.no_checkpoint:
-        # packed streams map-side combined runs straight into the merge
-        # (no resumable on-disk runs); make the dependency explicit at
-        # the CLI instead of failing later inside build_index
-        print(json.dumps({"error": "--encoder packed requires "
-                                   "--no-checkpoint"}))
-        return 1
     cfg = IndexConfig(
         n_term_buckets=args.term_buckets,
         n_salt_buckets=args.salt_buckets,
         n_build_chunks=args.chunks,
         checkpoint_runs=not args.no_checkpoint,
-        encoder=args.encoder,
         max_content_length=(parse_size(args.max_content_length)
                             if args.max_content_length else 0),
     )
@@ -272,11 +264,6 @@ def main(argv=None) -> int:
     pb.add_argument("--term-buckets", type=int, default=64)
     pb.add_argument("--salt-buckets", type=int, default=8)
     pb.add_argument("--chunks", type=int, default=4)
-    pb.add_argument("--encoder", default="stream",
-                    choices=["stream", "packed", "collect"],
-                    help="segment encoder: 'stream' (resumable default), "
-                         "'packed' (map-side SPIMI combine, fastest; "
-                         "needs --no-checkpoint), 'collect'")
     pb.add_argument("--no-checkpoint", action="store_true",
                     help="skip the SPIMI runs checkpoint (faster, less resumable)")
     pb.add_argument("--dry-run", action="store_true",

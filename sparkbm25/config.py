@@ -78,58 +78,35 @@ class IndexConfig:
     # (annotate) rewrite ONLY the affected blocks. 2^24 docs/block →
     # ~60k partitions at 1e12 docs.
     doc_block_size: int = 1 << 24
-    # Write the stage-1 (term,doc,tf,dl) runs to disk as the SPIMI
-    # checkpoint (resume granularity = segment chunk). False = stream
-    # runs straight into the segment build (single chunk, faster, but
-    # a resumed run recomputes stage 1).
+    # Write the stage-1 packed SPIMI runs to disk (tf/, partitioned by
+    # term_bucket) as the resume checkpoint: a crashed build resumes at
+    # the first uncommitted segment chunk. tf/ is deleted once the
+    # index is complete. False = stream the runs straight into the
+    # segment merge (single chunk, one fewer write, but a resumed run
+    # recomputes stage 1).
     checkpoint_runs: bool = True
     # Build the term dictionary table (term -> df). Queries don't need
     # it (routing is hashed; df comes from segment rows) — it exists
     # for analytics and the J5 inventory; skippable for raw throughput.
     build_terms_dict: bool = True
-    # Dictionary-encode terms through the build shuffle (stream/lean
-    # path only): terms become int64 ids via a broadcast vocabulary
-    # join before the (term, salt) exchange, so the dominant
-    # shuffle-sort compares 8-byte ints instead of strings; segment
-    # rows join the strings back post-encode. 'auto' = use when the
-    # vocabulary fits dict_max_vocab, 'off' = never. Measured neutral
-    # on the bench corpus (short Zipf vocab, lz4 already dedups the
-    # repeated strings: 29.2s vs 28.9s at local[8]/2.4M) — default off;
-    # worth 'auto' for corpora with long/unique-heavy tokens.
-    dict_terms: str = "off"
-    dict_max_vocab: int = 4_000_000
     # Store within-doc token positions in the posting blocks (the
     # Lucene positions stream analog). Required for phrase queries;
     # costs ~1 varint per occurrence of index size. Positions ride the
-    # raw occurrence stream, so this needs encoder='stream' with
-    # checkpoint_runs=False (the pre-aggregated SPIMI runs drop them).
+    # packed runs, so this works with or without checkpoint_runs.
     store_positions: bool = False
-    # Segment encoder strategy:
-    #   'collect' — JVM collect_list + sort_array per (term,salt) group,
-    #               then batch-vectorized Arrow encode (bounded by salt).
-    #   'stream'  — shuffle-sort SPIMI merge: repartition by (term,salt),
-    #               sortWithinPartitions, and a streaming mapInArrow
-    #               encoder that carries partial groups across batches —
-    #               no per-group array buffering at all.
-    #   'packed'  — map-side SPIMI combine (round 5): each doc-contiguous
-    #               input partition aggregates its own (term, doc) tf runs
-    #               in one Arrow pass (the tokens ListArray flattens
-    #               zero-copy; no explode) and shuffles ONE varint-packed
-    #               row per (term, salt) instead of one row per
-    #               occurrence. The reduce side merge-concatenates runs
-    #               (partition doc ranges are disjoint and ordered, so a
-    #               sort on min_doc is a merge) and block-encodes.
-    #               Measured at 960k turns (BENCH/r5/shuffle_bytes.json):
-    #               whole-build shuffle RECORDS drop 12.8x (17.2M ->
-    #               1.34M) — on-wire zstd bytes only 1.35x, the sorted
-    #               occurrence stream compressed well — and the explode
-    #               row materialization + partition-wide Tungsten
-    #               occurrence sort disappear entirely; net build
-    #               speedup ~9.5% at local[32] (same-JVM A/B,
-    #               BENCH/r5/packed_ab_samejvm.json). Segments are
-    #               byte-identical to 'stream'.
-    #               Requires checkpoint_runs=False.
-    encoder: str = "stream"
+    # Segment encoder. 'packed' is the only one: map-side SPIMI combine
+    # (round 5) — each doc-contiguous input partition aggregates its
+    # own (term, doc) tf runs in one Arrow pass (the tokens ListArray
+    # flattens zero-copy; no explode) and emits ONE varint-packed row
+    # per (term, salt) instead of one row per occurrence. The reduce
+    # side merge-concatenates runs (partition doc ranges are disjoint
+    # and ordered, so a sort on min_doc is a merge) and block-encodes.
+    # Measured at 960k turns (BENCH/r5/shuffle_bytes.json): whole-build
+    # shuffle RECORDS drop 12.8x (17.2M -> 1.34M) against the former
+    # per-occurrence 'stream' encoder, whose segments it reproduces
+    # byte for byte (tests/golden_segments.json). Kept as a field so
+    # configs that name it keep working; any other value raises.
+    encoder: str = "packed"
 
     def term_bucket_of(self, term: str) -> int:
         """Client-side term -> segment partition routing (the analog of
@@ -149,7 +126,17 @@ class IndexConfig:
 
     @staticmethod
     def from_json(s: str) -> "IndexConfig":
-        return IndexConfig(**json.loads(s))
+        """Rebuild a stored config (stats.json). Indexes written by
+        older releases carry fields that no longer exist (dict_terms,
+        dict_max_vocab) and encoder='stream'/'collect', whose segments
+        are byte-identical to 'packed' ones: such keys are dropped so
+        those indexes still open."""
+        d = json.loads(s)
+        names = {f.name for f in dataclasses.fields(IndexConfig)}
+        d = {k: v for k, v in d.items() if k in names}
+        if d.get("encoder") in ("stream", "collect"):
+            del d["encoder"]
+        return IndexConfig(**d)
 
 
 def parse_size(value: str) -> int:

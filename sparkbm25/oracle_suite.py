@@ -280,12 +280,11 @@ def docs_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure_index(spark: SparkSession, sf_dir: str,
-                  encoder: str = "stream") -> str:
-    """Build (once per (sf_dir, encoder) per process) the real segment
-    index over the documents table — the engine-backed path for the
-    BM25 oracles."""
-    key = os.path.abspath(sf_dir) + ":" + encoder
+def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
+    """Build (once per sf_dir per process) the real segment index over
+    the documents table — the engine-backed path for the BM25
+    oracles."""
+    key = os.path.abspath(sf_dir)
     if key in _INDEX_CACHE:
         return _INDEX_CACHE[key]
     from sparkbm25.build import build_index
@@ -296,12 +295,10 @@ def _ensure_index(spark: SparkSession, sf_dir: str,
     # earlier process with the old mapping
     index_dir = os.path.join(
         tempfile.gettempdir(),
-        "sparkbm25_entry5_" + key.strip("/").replace("/", "_")
-        .replace(":", "_"),
+        "sparkbm25_entry5_" + key.strip("/").replace("/", "_"),
     )
     cfg = IndexConfig(n_term_buckets=8, n_salt_buckets=4, n_build_chunks=1,
-                      store_positions=True, checkpoint_runs=False,
-                      encoder=encoder)
+                      store_positions=True, checkpoint_runs=False)
     build_index(spark, docs_as_transcripts(spark, sf_dir), index_dir, cfg,
                 input_desc=key)
     _INDEX_CACHE[key] = index_dir
@@ -330,14 +327,14 @@ def q_bm25_topk(spark, sf_dir):
 
 def q_bm25_packed(spark, sf_dir):
     """Flagship query served from an index built by the round-5
-    map-side SPIMI combine (encoder='packed', build._make_pack_kernel /
+    map-side SPIMI combine (build._make_pack_kernel /
     _make_merge_encoder): the driver-visible twin of
-    tests/test_packed_encoder.py's byte-identity assertion — the packed
-    build must reproduce bm25_topk's exact top-k and micro-scores
-    against the same pure-SQL oracle."""
+    tests/test_packed_encoder.py's golden-segment assertion — the
+    packed build must reproduce bm25_topk's exact top-k and
+    micro-scores against the same pure-SQL oracle."""
     from sparkbm25.search import search_batch
 
-    index_dir = _ensure_index(spark, sf_dir, encoder="packed")
+    index_dir = _ensure_index(spark, sf_dir)
     queries = pd.DataFrame(
         {"query_id": [0], "query_text": [" ".join(BM25_TERMS)], "k": [TOPK]})
     out = search_batch(spark, index_dir, queries, k=TOPK, mode="or")
@@ -2832,13 +2829,11 @@ EXCLUDED_FROM_DRIVER = (
     "bm25_topk",                 # identical query + SQL twin as the
                                  # round-5 bm25_packed entry, which
                                  # runs the SAME batch search path
-                                 # over the packed-encoder index (the
-                                 # bench default) — the swap keeps the
-                                 # new build path driver-checked while
-                                 # entry() and the local replica keep
-                                 # the stream-built flagship covered
-                                 # (plus 20+ other driver entries
-                                 # build with encoder='stream')
+                                 # over the same packed index — the
+                                 # swap keeps the flagship
+                                 # driver-checked while entry() and
+                                 # the local replica keep bm25_topk
+                                 # covered too
     "highlight_fetch",           # presentation layer OVER the driver-
                                  # checked bm25_topk/bm25_packed path
                                  # (same index, same ranked hits); the

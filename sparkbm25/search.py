@@ -30,7 +30,6 @@ Ranking contract (parity with refscore.bm25_reference_topk):
 from __future__ import annotations
 
 import heapq
-import json
 import os
 from collections import Counter
 
@@ -51,9 +50,7 @@ def _load_stats(index_dir: str) -> tuple[int, float, IndexConfig, list[dict]]:
     incrementally-built index) + per-generation info for WAND
     upper-bound correction."""
     stats = catalog.global_stats(index_dir)
-    cfg = (IndexConfig.from_json(stats["config"])
-           if isinstance(stats["config"], str)
-           else IndexConfig(**json.loads(stats["config"])))
+    cfg = IndexConfig.from_json(stats["config"])
     return int(stats["n_docs"]), float(stats["avgdl"]), cfg, stats["generations"]
 
 
@@ -825,10 +822,45 @@ def _plans_to_rows(plans: list[_QueryPlan]) -> pd.DataFrame:
         "n_terms", "slop", "k"])
 
 
+def _ordered_group_sums(s: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Sum each group s[starts[i]:starts[i + 1]] front to back, from 0.0
+    — one vectorized add per group position, so the order is exactly a
+    sequential loop's."""
+    sizes = np.diff(np.r_[starts, s.size])
+    acc = np.zeros(starts.size)
+    for j in range(int(sizes.max(initial=0))):
+        live = sizes > j
+        acc[live] += s[starts[live] + j]
+    return acc
+
+
+def _term_order_rollup(rows: DataFrame, with_mask: bool) -> DataFrame:
+    """Doc-level rollup of leaf rows (query_id, doc_ord, [slot,] tord,
+    score) -> (query_id, doc_ord, score[, mask]) in ONE shuffle.
+
+    score is a running sum over each (query_id, doc_ord) group sorted by
+    (tord, score), read at the group's last row: Spark adds a running
+    frame's rows one at a time from 0.0, so this is the sequential
+    term-order sum _scored_rows needs, all in the JVM. mask is the
+    bit_or of 1 << slot, NOT a sum: a doc matching several expansions
+    of one prefix leaf has several rows with the same slot, and summing
+    would carry into other bits."""
+    w = Window.partitionBy("query_id", "doc_ord").orderBy("tord", "score")
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cols = [F.sum("score").over(run).alias("score")]
+    if with_mask:
+        cols.append(F.expr("bit_or(shiftleft(cast(1 as bigint), slot))")
+                    .over(run).alias("mask"))
+    return (rows.select("query_id", "doc_ord", *cols,
+                        F.lead("tord").over(w).isNull().alias("_last"))
+            .where("_last").drop("_last"))
+
+
 def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
                  cfg: IndexConfig, n_docs: int, avgdl: float,
                  lean: bool = False,
-                 single_leaf_k: dict[int, int] | None = None) -> DataFrame:
+                 single_leaf_k: dict[int, int] | None = None,
+                 rollup: bool = True) -> DataFrame:
     """The posting-derived scoring pipeline: pruned segment scan →
     vectorized block decode + BM25 (plan and idf ride one broadcast) →
     (phrase verification) → per-(query, doc) rollup. Returns
@@ -836,9 +868,21 @@ def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
 
     lean=True (no phrase leaves, no caller use of the mask — plain
     disjunction batches): the kernel emits only (query_id, doc_ord,
-    score) and the rollup skips the bit_or — ~30% fewer bytes across
-    the Python boundary and through the one exchange, score values
-    bitwise identical (same rows, same order, same summation)."""
+    tord, score) and the rollup skips the bit_or — ~30% fewer bytes
+    across the Python boundary and through the one exchange, score
+    values bitwise identical (same rows, same summation order).
+
+    The rollup sums a doc's contributions in ascending term order
+    (tord = the term's rank among the batch's sorted terms), starting
+    from 0.0 — the order bm25_reference_topk and Searcher use. A plain
+    sum would add them in whatever order the shuffle delivers, so two
+    exactly tied docs could come out one ulp apart and lose the
+    (conv_id, turn_idx) tie-break.
+
+    rollup=False (lean only): return the leaf rows (query_id, doc_ord,
+    tord, score) hash-partitioned by (query_id, doc_ord) instead, for a
+    caller that sums them in the same order itself (search_batch's
+    partial top-k, which buffers its partition anyway)."""
     any_phrase = bool(qp["is_phrase"].any())
     if any_phrase and not cfg.store_positions:
         raise ValueError(
@@ -923,13 +967,14 @@ def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
 
     k1, b = cfg.k1, cfg.b
 
-    lean_cols = ("query_id", "doc_ord", "score")
+    lean_cols = ("query_id", "doc_ord", "tord", "score")
     full_cols = ("query_id", "doc_ord", "slot", "tidx", "n_terms",
-                 "score", "is_phrase")
+                 "tord", "score", "is_phrase")
     slk = single_leaf_k if lean else None
 
     def decode_score(batches):
         lm, idfs = leaf_bc.value
+        tords = {t: i for i, t in enumerate(sorted(lm))}
         cols = lean_cols if lean else full_cols
         # single-leaf (unfiltered) queries: a doc's whole score is ONE
         # contribution from one block row, so a per-partition exact
@@ -958,6 +1003,8 @@ def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
                         continue
                     out["query_id"].append(np.full(n, query_id, dtype=np.int32))
                     out["doc_ord"].append(docs)
+                    out["tord"].append(np.full(n, tords[row.term],
+                                               dtype=np.int32))
                     out["score"].append(w)
                     if not lean:
                         out["slot"].append(np.full(n, slot, dtype=np.int32))
@@ -981,23 +1028,29 @@ def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
                 out["query_id"].append(
                     np.full(d.size, query_id, dtype=np.int32))
                 out["doc_ord"].append(d)
+                # one contribution per doc: any term order sums alike
+                out["tord"].append(np.zeros(d.size, dtype=np.int32))
                 out["score"].append(s)
             yield pd.DataFrame(
                 {c: np.concatenate(v) for c, v in out.items()})
 
     parts = hits.mapInPandas(
         decode_score,
-        schema=("query_id int, doc_ord bigint, score double" if lean else
+        schema=("query_id int, doc_ord bigint, tord int, score double"
+                if lean else
                 "query_id int, doc_ord bigint, slot int, tidx int, "
-                "n_terms int, score double, is_phrase boolean"))
+                "n_terms int, tord int, score double, is_phrase boolean"))
     if lean:
         # plain-disjunction fast shape: no mask, no phrase branch
-        return parts.groupBy("query_id", "doc_ord").agg(
-            F.sum("score").alias("score"))
+        if not rollup:
+            return parts.repartition(
+                int(spark.conf.get("spark.sql.shuffle.partitions")),
+                "query_id", "doc_ord")
+        return _term_order_rollup(parts, with_mask=False)
 
     if any_phrase:
         term_rows = parts.where(~F.col("is_phrase")).select(
-            "query_id", "doc_ord", "slot", "score")
+            "query_id", "doc_ord", "slot", "tord", "score")
 
         # JVM-side prefilter (round-2 VERDICT item 2): only docs
         # matching ALL of a phrase's terms can be phrase matches, so
@@ -1152,18 +1205,15 @@ def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
         verified = pruned.groupBy("query_id", "slot").applyInPandas(
             verify_leaf,
             schema="query_id int, doc_ord bigint, slot int, score double")
-        leaf_rows = term_rows.unionByName(verified)
+        # a verified phrase adds after every term, in slot order
+        leaf_rows = term_rows.unionByName(verified.withColumn(
+            "tord", (F.lit(len(uniq_terms)) + F.col("slot")).cast("int")))
     else:
-        leaf_rows = parts.select("query_id", "doc_ord", "slot", "score")
+        leaf_rows = parts.select("query_id", "doc_ord", "slot", "tord",
+                                 "score")
 
-    # doc-level rollup: BM25 sum + matched-leaf bitmask in ONE shuffle.
-    # bit_or, NOT sum: a doc matching several expansions of one prefix
-    # leaf has multiple rows with the same slot, and summing 1<<slot
-    # would carry into other bits
-    return leaf_rows.groupBy("query_id", "doc_ord").agg(
-        F.sum("score").alias("score"),
-        F.expr("bit_or(shiftleft(cast(1 as bigint), slot))").alias("mask"),
-    )
+    # doc-level rollup: BM25 sum + matched-leaf bitmask
+    return _term_order_rollup(leaf_rows, with_mask=True)
 
 
 def search_batch(
@@ -1293,13 +1343,18 @@ def search_batch(
         if len(p.leaves) == 1 and p.leaves[0]["kind"] == "term"
         and len(p.leaves[0]["terms"]) == 1
         and not p.filters and not p.neg_filters} if lean else None
+    # with nothing between the rollup and the partial top-k (lean, no
+    # structured filter), the partial top-k sums the leaf rows itself
+    unrolled = lean and not any(p.filters or p.neg_filters
+                                for p in scored_plans)
     if qp.empty:
         scored = spark.createDataFrame(
             [], "query_id int, doc_ord bigint, score double, mask bigint")
         persisted = None
     else:
         scored = _scored_rows(spark, index_dir, qp, cfg, n_docs, avgdl,
-                              lean=lean, single_leaf_k=single_leaf_k)
+                              lean=lean, single_leaf_k=single_leaf_k,
+                              rollup=not unrolled)
         persisted = None
         if negonly or empty_ok:
             # `scored` is referenced a second time below (posting masks
@@ -1413,21 +1468,28 @@ def search_batch(
         # (query asc, score desc, doc asc — a total order: (query,
         # doc) pairs are unique per partition after the rollup), keep
         # group-rank < kmax. Exact, like the sort it replaces.
+        # Unrolled leaf rows (they carry tord) are first summed per
+        # (query, doc) in term order, as _term_order_rollup would.
         import pyarrow as pa
 
-        qs, ds, ss = [], [], []
+        cols = ("query_id", "doc_ord", "score") + (
+            ("tord",) if unrolled else ())
+        bufs = {c: [] for c in cols}
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            ni = {n: i for i, n in enumerate(rb.schema.names)}
-            qs.append(rb.column(ni["query_id"]).to_numpy(zero_copy_only=False))
-            ds.append(rb.column(ni["doc_ord"]).to_numpy(zero_copy_only=False))
-            ss.append(rb.column(ni["score"]).to_numpy(zero_copy_only=False))
-        if not qs:
+            for c in cols:
+                bufs[c].append(rb.column(rb.schema.get_field_index(c))
+                               .to_numpy(zero_copy_only=False))
+        if not bufs["query_id"]:
             return
-        q = np.concatenate(qs)
-        d = np.concatenate(ds)
-        s = np.concatenate(ss)
+        q, d, s = (np.concatenate(bufs[c]) for c in cols[:3])
+        if unrolled:
+            o = np.lexsort((s, np.concatenate(bufs["tord"]), d, q))
+            q, d, s = q[o], d[o], s[o]
+            g = np.flatnonzero(
+                np.r_[True, (q[1:] != q[:-1]) | (d[1:] != d[:-1])])
+            q, d, s = q[g], d[g], _ordered_group_sums(s, g)
         order = np.lexsort((d, -s, q))
         q, d, s = q[order], d[order], s[order]
         starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])

@@ -82,30 +82,28 @@ def test_cli_build_and_search_roundtrip(spark, tmp_path, capsys):
 
 
 def test_cli_build_packed_encoder(spark, tmp_path, capsys):
-    """--encoder packed builds a searchable index under --no-checkpoint
-    and errors cleanly (rc=1, no write) when checkpointing is left on."""
+    """The CLI builds with the packed encoder both ways: one-pass under
+    --no-checkpoint and resumable (checkpointed runs, dropped once the
+    index is complete) by default. --encoder is gone."""
     import os
 
     src = str(tmp_path / "srcp")
     spark.createDataFrame(make_transcripts(400)).write.parquet(src)
-    idx = str(tmp_path / "idxp")
-    rc = cli.main(["build", "--input", src, "--index", idx,
-                   "--encoder", "packed", "--no-checkpoint",
-                   "--term-buckets", "8", "--salt-buckets", "2",
-                   "--chunks", "1"])
-    assert rc == 0
-    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats["n_docs"] == 400
-    rc = cli.main(["search", "--index", idx, "--query", "alpha", "-k", "3"])
-    assert rc == 0
-    capsys.readouterr()
-    idx2 = str(tmp_path / "idxp2")
-    rc = cli.main(["build", "--input", src, "--index", idx2,
-                   "--encoder", "packed"])
-    assert rc == 1
-    err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert "no-checkpoint" in err["error"]
-    assert not os.path.exists(idx2)
+    for i, extra in enumerate((["--no-checkpoint"], [])):
+        idx = str(tmp_path / f"idxp{i}")
+        rc = cli.main(["build", "--input", src, "--index", idx, *extra,
+                       "--term-buckets", "8", "--salt-buckets", "2",
+                       "--chunks", "2"])
+        assert rc == 0
+        stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert stats["n_docs"] == 400
+        assert not os.path.exists(os.path.join(idx, "tf"))
+        rc = cli.main(["search", "--index", idx, "--query", "alpha", "-k", "3"])
+        assert rc == 0
+        capsys.readouterr()
+    with pytest.raises(SystemExit):
+        cli.main(["build", "--input", src, "--index", str(tmp_path / "x"),
+                  "--encoder", "packed"])
 
 
 def test_cli_dry_run_writes_nothing(spark, tmp_path, capsys):

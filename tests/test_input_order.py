@@ -5,8 +5,9 @@ is already (conv_id, turn_idx)-sorted — but PROVES it: the tokenize
 kernel checks within-partition order as it streams, the bookkeeping
 job returns per-partition key bounds, and the driver rejects any
 overlap before assigning offsets in key order. Segments must come out
-byte-identical to the 'shuffle' path; violations must raise, never
-silently misnumber docIDs.
+byte-identical to the 'shuffle' path and to the digests the former
+stream encoder froze in tests/golden_segments.json; violations must
+raise, never silently misnumber docIDs.
 """
 
 import os
@@ -38,7 +39,8 @@ def _segments(spark, idx):
 
 
 def test_verify_equals_shuffle_on_sorted_parquet(spark, corpus,
-                                                 tmp_path_factory):
+                                                 tmp_path_factory,
+                                                 golden_segments):
     """Sorted multi-file parquet input: the no-shuffle path must build
     the exact same index (same doc_ords -> byte-identical segments)."""
     root = str(tmp_path_factory.mktemp("inorder"))
@@ -67,6 +69,7 @@ def test_verify_equals_shuffle_on_sorted_parquet(spark, corpus,
     for i in range(len(a)):
         for x, y in zip(a["blocks"].iloc[i], b["blocks"].iloc[i]):
             assert dict(x) == dict(y), a["term"].iloc[i]
+    golden_segments(idx_b, "t3000_b8s4_pos0")
 
 
 def test_verify_raises_on_unsorted_partition(spark, corpus,
@@ -103,26 +106,21 @@ def test_verify_raises_on_overlapping_partitions(spark, corpus,
                     _cfg(input_order="verify"))
 
 
-def test_verify_with_packed_encoder(spark, corpus, tmp_path_factory):
+def test_verify_with_packed_encoder(spark, corpus, tmp_path_factory,
+                                    golden_segments):
     """The two round-5 build optimizations compose: verified sorted
     input (no text shuffle) + packed encoder (no occurrence shuffle) —
-    the whole build's only exchange is the varint-packed runs."""
+    the whole build's only exchange is the varint-packed runs —
+    streamed or checkpointed."""
     root = str(tmp_path_factory.mktemp("inorder_packed"))
     sorted_pdf = corpus.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     sdf = spark.createDataFrame(sorted_pdf).coalesce(3)
-    idx_a = os.path.join(root, "a")
-    idx_b = os.path.join(root, "b")
-    build_index(spark, spark.createDataFrame(corpus), idx_a,
-                _cfg(input_order="shuffle", encoder="stream"))
-    build_index(spark, sdf, idx_b,
-                _cfg(input_order="verify", encoder="packed"))
-    a, b = _segments(spark, idx_a), _segments(spark, idx_b)
-    assert len(a) == len(b) and len(a) > 0
-    for col in ("term", "salt", "n_docs"):
-        assert (a[col].values == b[col].values).all(), col
-    for i in range(len(a)):
-        for x, y in zip(a["blocks"].iloc[i], b["blocks"].iloc[i]):
-            assert dict(x) == dict(y), a["term"].iloc[i]
+    for ckpt in (False, True):
+        idx = os.path.join(root, f"ckpt{int(ckpt)}")
+        build_index(spark, sdf, idx,
+                    _cfg(input_order="verify", checkpoint_runs=ckpt,
+                         n_build_chunks=3 if ckpt else 1))
+        golden_segments(idx, "t3000_b8s4_pos0")
 
 
 def test_verify_multi_file_partitions(spark, corpus, tmp_path_factory):
@@ -188,16 +186,16 @@ def test_verify_raises_on_file_unsorted_inside_packed_partition(
 
 @pytest.mark.parametrize("store_positions", [False, True])
 def test_verify_multi_file_partitions_packed_encoder(
-        spark, corpus, tmp_path_factory, store_positions):
-    """encoder='packed' under verify-mode bin-packed partitions
+        spark, corpus, tmp_path_factory, golden_segments, store_positions):
+    """The packed encoder under verify-mode bin-packed partitions
     (final-round review finding): the pack kernel assumed partitions
     are doc_ord-ascending, but verify mode only guarantees that WITHIN
     each file run — size-ordered bin-packing makes doc_ord jump down
     at file boundaries, which silently produced negative run deltas
     (uint64 wrap) and unsorted block docs. The kernel must detect the
     non-monotonic partition and lexsort (term code, doc); segments
-    must stay byte-identical to the shuffle+stream arm, positions
-    included."""
+    must stay byte-identical to the shuffle arm and to the frozen
+    stream digests, positions included, streamed or checkpointed."""
     root = str(tmp_path_factory.mktemp(
         f"inorder_packed_{int(store_positions)}"))
     src = os.path.join(root, "src")
@@ -205,8 +203,8 @@ def test_verify_multi_file_partitions_packed_encoder(
     import pyarrow as pa
     import pyarrow.parquet as pq
     s = corpus.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    # same size-skewed contiguous slices as the stream-encoder pack
-    # test: packing order != key order
+    # same size-skewed contiguous slices as
+    # test_verify_multi_file_partitions: packing order != key order
     cuts = [0, 1200, 1350, 2100, 2250, 2900, len(s)]
     for i in range(6):
         part = s.iloc[cuts[i]:cuts[i + 1]]
@@ -214,18 +212,15 @@ def test_verify_multi_file_partitions_packed_encoder(
                        os.path.join(src, f"part-{i:04d}.parquet"))
     sdf = spark.read.parquet(src).coalesce(2)
     assert sdf.rdd.getNumPartitions() == 2  # >1 file per partition
+    key = f"t3000_b8s4_pos{int(store_positions)}"
     idx_a = os.path.join(root, "a")
-    idx_b = os.path.join(root, "b")
     build_index(spark, spark.read.parquet(src), idx_a,
-                _cfg(input_order="shuffle", encoder="stream",
-                     store_positions=store_positions))
-    build_index(spark, sdf, idx_b,
-                _cfg(input_order="verify", encoder="packed",
-                     store_positions=store_positions))
-    a, b = _segments(spark, idx_a), _segments(spark, idx_b)
-    assert len(a) == len(b) and len(a) > 0
-    for col in ("term", "salt", "n_docs", "term_bucket"):
-        assert (a[col].values == b[col].values).all(), col
-    for i in range(len(a)):
-        for x, y in zip(a["blocks"].iloc[i], b["blocks"].iloc[i]):
-            assert dict(x) == dict(y), a["term"].iloc[i]
+                _cfg(input_order="shuffle", store_positions=store_positions))
+    golden_segments(idx_a, key)
+    for ckpt in (False, True):
+        idx_b = os.path.join(root, f"b{int(ckpt)}")
+        build_index(spark, sdf, idx_b,
+                    _cfg(input_order="verify", checkpoint_runs=ckpt,
+                         n_build_chunks=4 if ckpt else 1,
+                         store_positions=store_positions))
+        golden_segments(idx_b, key)

@@ -1,21 +1,24 @@
-"""encoder='packed' (round 5): map-side SPIMI combine.
+"""The packed segment encoder (round 5): map-side SPIMI combine.
 
 The packed path shuffles one varint row per (term, salt, input
 partition) instead of one row per token occurrence, then merge-
 concatenates on the reduce side (input-partition doc ranges are
 disjoint and min_doc-ordered). The contract: segments come out
-BYTE-IDENTICAL to the 'stream' path — same groups, same blocks, same
-varint payloads, same per-block max_impact — with and without the
-positions stream, so every downstream consumer (search, compaction,
-annotate, terms dict) is automatically covered by the existing suite.
+BYTE-IDENTICAL to the former per-occurrence 'stream' encoder — same
+groups, same blocks, same varint payloads, same per-block max_impact —
+with and without the positions stream, streamed or checkpointed. The
+stream encoder's segments are frozen as digests in
+tests/golden_segments.json, so every downstream consumer (search,
+compaction, annotate, terms dict) stays covered by the existing suite.
 """
 
 import os
 import shutil
 
+import numpy as np
 import pytest
 
-from sparkbm25 import IndexConfig, Searcher, build_index
+from sparkbm25 import IndexConfig, Searcher, bm25_reference_topk, build_index
 from sparkbm25.fixtures import make_queries, make_transcripts
 
 N_TURNS = 3000
@@ -26,64 +29,49 @@ def corpus():
     return make_transcripts(N_TURNS)
 
 
-def _build(spark, corpus, root, encoder, store_positions):
-    idx = os.path.join(root, f"idx_{encoder}_{int(store_positions)}")
+def _build(spark, corpus, root, store_positions, checkpoint_runs=False):
+    idx = os.path.join(
+        root, f"idx_{int(checkpoint_runs)}_{int(store_positions)}")
     shutil.rmtree(idx, ignore_errors=True)
     cfg = IndexConfig(
-        n_term_buckets=8, n_salt_buckets=4, n_build_chunks=1,
-        n_doc_partitions=4, checkpoint_runs=False, build_terms_dict=False,
-        encoder=encoder, store_positions=store_positions,
+        n_term_buckets=8, n_salt_buckets=4,
+        n_build_chunks=4 if checkpoint_runs else 1,
+        n_doc_partitions=4, checkpoint_runs=checkpoint_runs,
+        build_terms_dict=False, store_positions=store_positions,
     )
     res = build_index(spark, spark.createDataFrame(corpus), idx, cfg)
     assert res.n_docs == N_TURNS
     return idx
 
 
-def _read_segments(spark, idx):
-    df = (
-        spark.read.parquet(os.path.join(idx, "segments"))
-        .toPandas()
-        .sort_values(["term", "salt"])
-        .reset_index(drop=True)
-    )
-    return df
-
-
 @pytest.mark.parametrize("store_positions", [False, True])
 def test_packed_segments_byte_identical(spark, corpus, tmp_path_factory,
-                                        store_positions):
+                                        golden_segments, store_positions):
     root = str(tmp_path_factory.mktemp("packed_parity"))
-    a = _read_segments(spark, _build(spark, corpus, root, "stream",
-                                     store_positions))
-    b = _read_segments(spark, _build(spark, corpus, root, "packed",
-                                     store_positions))
-    assert len(a) == len(b)
-    for col in ("term", "salt", "n_docs", "term_bucket"):
-        assert (a[col].values == b[col].values).all(), col
-    for i in range(len(a)):
-        ba, bb = a["blocks"].iloc[i], b["blocks"].iloc[i]
-        assert len(ba) == len(bb), a["term"].iloc[i]
-        for x, y in zip(ba, bb):
-            assert dict(x) == dict(y), a["term"].iloc[i]
+    for checkpoint_runs in (False, True):
+        golden_segments(
+            _build(spark, corpus, root, store_positions, checkpoint_runs),
+            f"t3000_b8s4_pos{int(store_positions)}")
 
 
 def test_packed_index_searchable(spark, corpus, tmp_path_factory):
     """End-to-end: a packed-built index answers the fixed query set
-    identically to a stream-built one on both engine paths."""
+    rank-identically to the brute-force reference scorer."""
     root = str(tmp_path_factory.mktemp("packed_search"))
-    idx_s = _build(spark, corpus, root, "stream", False)
-    idx_p = _build(spark, corpus, root, "packed", False)
+    s_p = Searcher(spark, _build(spark, corpus, root, False))
     queries = make_queries()
-    s_s, s_p = Searcher(spark, idx_s), Searcher(spark, idx_p)
-    for q in queries["query_text"]:
-        exp = s_s.search(q, k=10)
-        got = s_p.search(q, k=10)
-        for col in ("rank", "conv_id", "turn_idx"):
+    exp_all = bm25_reference_topk(corpus, queries, k=10)
+    for q in queries.itertuples(index=False):
+        got = s_p.search(q.query_text, k=10)
+        exp = exp_all[exp_all["query_id"] == q.query_id]
+        for col in ("conv_id", "turn_idx"):
             assert exp[col].tolist() == got[col].tolist(), (q, col)
-        assert len(exp) == 0 or (exp["score"] - got["score"]).abs().max() < 1e-12
+        np.testing.assert_allclose(got["score"].astype(float),
+                                   exp["score"].astype(float), rtol=1e-9)
 
 
-def test_packed_edge_corpus_byte_identical(spark, tmp_path_factory):
+def test_packed_edge_corpus_byte_identical(spark, tmp_path_factory,
+                                           golden_segments):
     """Adversarial corpus: null/empty/whitespace texts (tokenize to []
     and must vanish from postings while staying in the forward table),
     a single hot term repeated many times in one doc (tf run-length),
@@ -106,25 +94,18 @@ def test_packed_edge_corpus_byte_identical(spark, tmp_path_factory):
         "tool": [None] * len(texts),
     })
     root = str(tmp_path_factory.mktemp("packed_edge"))
-    segs = {}
-    for enc in ("stream", "packed"):
-        idx = os.path.join(root, enc)
+    for store_positions in (False, True):
+        idx = os.path.join(root, f"pos{int(store_positions)}")
         cfg = IndexConfig(n_term_buckets=4, n_salt_buckets=3,
                           n_build_chunks=1, n_doc_partitions=5,
                           checkpoint_runs=False, build_terms_dict=False,
-                          encoder=enc, store_positions=True)
+                          store_positions=store_positions)
         res = build_index(spark, spark.createDataFrame(pdf), idx, cfg)
         assert res.n_docs == len(texts)  # empties stay in the forward table
-        segs[enc] = _read_segments(spark, idx)
-    a, b = segs["stream"], segs["packed"]
-    assert len(a) == len(b) and len(a) > 0
-    for col in ("term", "salt", "n_docs", "term_bucket"):
-        assert (a[col].values == b[col].values).all(), col
-    for i in range(len(a)):
-        for x, y in zip(a["blocks"].iloc[i], b["blocks"].iloc[i]):
-            assert dict(x) == dict(y), a["term"].iloc[i]
+        golden_segments(idx, f"edge_b4s3_pos{int(store_positions)}")
     # the tf=50 run survived run-length counting
-    spk = a[a["term"] == "spark"]
+    segs = spark.read.parquet(os.path.join(idx, "segments")).toPandas()
+    spk = segs[segs["term"] == "spark"]
     assert int(spk["n_docs"].sum()) >= 1
 
 
@@ -134,13 +115,13 @@ def test_packed_incremental_append_and_compact(spark, corpus,
     update_index appends (disjoint doc_ord_base ranges exercise the
     pack kernel's absolute-first-doc encoding at a nonzero base) plus
     an auto-compact fold must answer queries identically to a one-shot
-    stream build over the full corpus."""
+    build over the full corpus."""
     from sparkbm25.streaming import update_index
 
     root = str(tmp_path_factory.mktemp("packed_gen") / "idx")
     cfg = IndexConfig(n_term_buckets=8, n_salt_buckets=4, n_build_chunks=1,
                       n_doc_partitions=4, checkpoint_runs=False,
-                      build_terms_dict=False, encoder="packed")
+                      build_terms_dict=False)
     half = N_TURNS // 2
     update_index(spark, spark.createDataFrame(corpus.iloc[:half]), root, cfg)
     res = update_index(spark, spark.createDataFrame(corpus.iloc[half:]),
@@ -148,8 +129,7 @@ def test_packed_incremental_append_and_compact(spark, corpus,
     assert res.n_docs == N_TURNS - half
 
     one_shot = _build(spark, corpus,
-                      str(tmp_path_factory.mktemp("packed_gen_ref")),
-                      "stream", False)
+                      str(tmp_path_factory.mktemp("packed_gen_ref")), False)
     s_gen, s_ref = Searcher(spark, root), Searcher(spark, one_shot)
     for q in make_queries()["query_text"]:
         got, exp = s_gen.search(q, k=10), s_ref.search(q, k=10)
@@ -157,9 +137,23 @@ def test_packed_incremental_append_and_compact(spark, corpus,
         assert len(exp) == 0 or (exp["score"] - got["score"]).abs().max() < 1e-9
 
 
-def test_packed_rejects_checkpoint_runs(spark, corpus, tmp_path_factory):
+def test_packed_checkpointed_build_succeeds(spark, corpus, tmp_path_factory):
+    """The default IndexConfig() checkpoints the packed runs: the build
+    commits every chunk, answers a query and leaves no tf/ behind."""
     root = str(tmp_path_factory.mktemp("packed_cfg"))
-    cfg = IndexConfig(encoder="packed", checkpoint_runs=True)
+    idx = os.path.join(root, "idx")
+    res = build_index(spark, spark.createDataFrame(corpus.head(50)), idx,
+                      IndexConfig())
+    assert res.n_docs == 50
+    assert sorted(os.listdir(os.path.join(idx, "segments"))) == [
+        f"chunk={c}" for c in range(4)]
+    assert not os.path.exists(os.path.join(idx, "tf"))
+    assert len(Searcher(spark, idx).search("w0001", k=3)) > 0
+
+
+def test_encoder_other_than_packed_raises(spark, corpus, tmp_path):
+    idx = str(tmp_path / "idx")
     with pytest.raises(ValueError, match="packed"):
-        build_index(spark, spark.createDataFrame(corpus.head(50)),
-                    os.path.join(root, "idx"), cfg)
+        build_index(spark, spark.createDataFrame(corpus.head(10)), idx,
+                    IndexConfig(encoder="stream"))
+    assert not os.path.exists(idx)

@@ -24,11 +24,12 @@ def queries():
 
 
 @pytest.fixture(scope="module")
-def built(spark, corpus, tmp_path_factory):
+def built(spark, corpus, tmp_path_factory, golden_segments):
     index_dir = str(tmp_path_factory.mktemp("idx") / "index")
     sdf = spark.createDataFrame(corpus)
     res = build_index(spark, sdf, index_dir, IndexConfig(), input_desc="fixture4k")
     assert res.n_docs == N_TURNS
+    golden_segments(index_dir, "t4000_b16s8_pos0")
     return index_dir
 
 
@@ -69,19 +70,23 @@ def test_driver_parity(spark, corpus, queries, built, mode, algo):
             got["score"].astype(float), eq["score"].astype(float), rtol=1e-9)
 
 
-def test_streamlined_config_parity(spark, corpus, queries, tmp_path):
-    """The bench configuration (no runs checkpoint, occurrence-stream
-    encoder — tf computed as run-lengths inside the sorted shuffle)
-    must be rank-identical too."""
-    cfg = IndexConfig(n_build_chunks=1, checkpoint_runs=False,
-                      build_terms_dict=False, encoder="stream")
-    d = str(tmp_path / "fastidx")
-    sdf = spark.createDataFrame(corpus)
-    res = build_index(spark, sdf, d, cfg, input_desc="fast")
-    assert res.n_docs == N_TURNS
+def test_streamlined_config_parity(spark, corpus, queries, tmp_path,
+                                   golden_segments):
+    """The bench configuration (no runs checkpoint: the packed runs
+    stream straight into the merge) must reproduce the frozen stream
+    segments and be rank-identical too, with and without positions."""
     exp = bm25_reference_topk(corpus, queries, k=10)
-    got = search_batch(spark, d, queries, k=10).toPandas()
-    _assert_parity(got, exp)
+    sdf = spark.createDataFrame(corpus)
+    for store_positions in (False, True):
+        cfg = IndexConfig(n_build_chunks=1, checkpoint_runs=False,
+                          build_terms_dict=False,
+                          store_positions=store_positions)
+        d = str(tmp_path / f"fastidx{int(store_positions)}")
+        res = build_index(spark, sdf, d, cfg, input_desc="fast")
+        assert res.n_docs == N_TURNS
+        golden_segments(d, f"t4000_b16s8_pos{int(store_positions)}")
+        got = search_batch(spark, d, queries, k=10).toPandas()
+        _assert_parity(got, exp)
 
 
 def test_text_equality_invariant(spark, corpus, built):
@@ -104,14 +109,63 @@ def test_text_equality_invariant(spark, corpus, built):
     assert pdf["doc_ord"].tolist() == list(range(len(pdf)))
 
 
-def test_dict_encoded_build_parity(spark, corpus, queries, tmp_path):
-    """dict_terms='auto' (int64-id shuffle + post-encode string join)
-    must produce an index that answers identically."""
-    d = str(tmp_path / "dictidx")
-    build_index(spark, spark.createDataFrame(corpus), d,
-                IndexConfig(dict_terms="auto", checkpoint_runs=False,
-                            n_build_chunks=1),
-                input_desc="dict4k")
-    exp = bm25_reference_topk(corpus, queries, k=10, mode="or")
-    got = search_batch(spark, d, queries, k=10, mode="or").toPandas()
-    _assert_parity(got, exp)
+def _tie_corpus(n: int = 2000) -> pd.DataFrame:
+    """Every 14th doc is exactly 't10 t27 t38 zz': those docs tie
+    exactly on the query 't10 t27 t38'. The three terms share term
+    bucket 0 (crc32 % 16), so their (term, salt) segment rows land in
+    one bucket file in hash-partition order, which differs per salt —
+    the tied docs' contributions reach the rollup in different term
+    orders. The filler gives the terms distinct dfs, so their BM25
+    contributions do not sum associatively."""
+    rng = np.random.default_rng(5)
+    rows = []
+    for i in range(n):
+        r = i % 14
+        if r == 0:
+            text = "t10 t27 t38 zz"
+        else:
+            words = [f"f{x}" for x in rng.integers(0, 300,
+                                                   size=rng.integers(2, 9))]
+            words += (["t10"] if 1 <= r <= 6 else []) + (
+                ["t27"] if 1 <= r <= 3 else []) + (["t38"] if r == 7 else [])
+            text = " ".join(words)
+        rows.append((f"c{i:05d}", 0, "user", text, None))
+    return pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text",
+                                       "tool"])
+
+
+def test_batch_exact_ties_keep_reference_order(spark, tmp_path):
+    """search_batch sums a doc's per-term scores in sorted term order,
+    as the reference does: exactly tied docs stay bitwise tied and rank
+    by (conv_id, turn_idx). With an order-free Spark sum, the tied docs
+    here came out one ulp apart and ranked out of order."""
+    import itertools
+    import zlib
+
+    from sparkbm25.analysis import tokenize_series
+
+    terms = ["t10", "t27", "t38"]
+    assert {zlib.crc32(t.encode()) % 16 for t in terms} == {0}
+    corpus = _tie_corpus()
+    # precondition: the three contributions of a tied doc sum to
+    # different doubles in different orders
+    toks = tokenize_series(corpus["text"], IndexConfig().token_pattern, 0)
+    avgdl = float(toks.str.len().mean())
+    n = len(corpus)
+    w = []
+    for t in terms:
+        df = int(sum(t in x for x in toks))
+        idf = float(np.log(1.0 + (n - df + 0.5) / (df + 0.5)))
+        w.append(idf * 2.2 * 1 / (1 + 1.2 * (1 - 0.75 + 0.75 * (4 / avgdl))))
+    assert len({(w[a] + w[b]) + w[c]
+                for a, b, c in itertools.permutations(range(3))}) > 1
+
+    d = str(tmp_path / "tieidx")
+    build_index(spark, spark.createDataFrame(corpus), d, IndexConfig())
+    q = pd.DataFrame({"query_id": [0, 1],
+                      "query_text": ["t10 t27 t38", "t38 t27 t10"],
+                      "k": [200, 200]})
+    for mode in ("or", "and"):
+        exp = bm25_reference_topk(corpus, q, k=200, mode=mode)
+        got = search_batch(spark, d, q, k=200, mode=mode).toPandas()
+        _assert_parity(got, exp)

@@ -6,6 +6,7 @@ idempotency predicate + plan/execute resumability
 
 import shutil
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -97,6 +98,27 @@ def test_config_change_invalidates_checkpoint(spark, corpus_df, tmp_path):
     assert mx <= 64
 
 
+def test_config_change_to_fewer_chunks_drops_stale_chunks(spark, tmp_path):
+    """A resume under a config with fewer build chunks rebuilds
+    everything; the old build's higher chunk dirs must not survive, or
+    every term's postings count twice (doubled hits, df > N)."""
+    import os
+
+    from sparkbm25 import Searcher
+
+    df = spark.createDataFrame(make_transcripts(300))
+    d = str(tmp_path / "idx")
+    build_index(spark, df, d, IndexConfig(n_build_chunks=4), input_desc="x")
+    build_index(spark, df, d, IndexConfig(n_build_chunks=2), resume=True,
+                input_desc="x")
+    assert sorted(os.listdir(f"{d}/segments")) == ["chunk=0", "chunk=1"]
+    segs = spark.read.parquet(f"{d}/segments")
+    assert segs.count() == segs.select("term", "salt").distinct().count()
+    hits = Searcher(spark, d).search("w0001", k=5)
+    keys = list(zip(hits["conv_id"], hits["turn_idx"]))
+    assert len(set(keys)) == len(keys) and (hits["score"] > 0).all()
+
+
 def test_dirty_staging_cleared(spark, corpus_df, tmp_path):
     """A crash mid-write leaves _staging; a fresh or resumed build must
     clear it and still commit correctly."""
@@ -131,3 +153,253 @@ def test_empty_corpus_build_and_search(spark, tmp_path):
     assert search_batch(spark, d, q, k=5).count() == 0
     s = Searcher(spark, d)
     assert len(s.search("alpha", k=5)) == 0
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_before_commit(monkeypatch, stage_name):
+    """Make the build die right before it commits stage_name (the
+    chunk's or the terms table's staging dir) — everything committed
+    earlier, the runs checkpoint included, stays on disk."""
+    from sparkbm25 import catalog
+
+    real = catalog.commit_staging
+
+    def commit(index_dir, name, final_path):
+        if name == stage_name:
+            raise _Crash(name)
+        real(index_dir, name, final_path)
+
+    monkeypatch.setattr(catalog, "commit_staging", commit)
+
+
+def _bigram_docs(pdf):
+    """(phrase, {(conv_id, turn_idx)} of docs holding it) for the
+    first two-token phrase of the corpus."""
+    from sparkbm25.analysis import tokenize_series
+
+    toks = tokenize_series(pdf["text"], IndexConfig().token_pattern, 0)
+    first = next(t for t in toks if len(t) >= 2)
+    a, b = first[0], first[1]
+    keys = {(c, int(i)) for c, i, t in zip(pdf["conv_id"], pdf["turn_idx"], toks)
+            if any(x == a and y == b for x, y in zip(t, t[1:]))}
+    return f'"{a} {b}"', keys
+
+
+def _crash_and_resume(spark, sdf, d, cfg, stage_name, monkeypatch):
+    import os
+
+    with monkeypatch.context() as m:
+        _crash_before_commit(m, stage_name)
+        with pytest.raises(_Crash):
+            build_index(spark, sdf, d, cfg, input_desc="crash")
+    assert os.path.isdir(f"{d}/tf")
+    assert not os.path.exists(f"{d}/_COMPLETE")
+    build_index(spark, sdf, d, cfg, resume=True, input_desc="crash")
+    m = read_manifest(d)
+    # the resume read the checkpointed runs: stage 1 ran exactly once
+    assert (m["stage"] == "tf").sum() == 1
+    assert sorted(m[m["stage"] == "segments"]["partition_id"]) == [0, 1, 2, 3]
+    assert os.path.exists(f"{d}/_COMPLETE")
+    assert not os.path.exists(f"{d}/tf")
+
+
+@pytest.mark.parametrize("stage_name", [
+    "segchunk0", "segchunk1", "segchunk2", "segchunk3", "terms"])
+def test_positions_resume_after_crash(spark, corpus_df, tmp_path,
+                                      monkeypatch, golden_segments,
+                                      stage_name):
+    """A checkpointed phrase index (store_positions) resumes after a
+    crash at any chunk: the segments equal a clean build's and phrase
+    queries work on the resumed index."""
+    from sparkbm25 import Searcher
+
+    d = str(tmp_path / "idx")
+    cfg = IndexConfig(n_build_chunks=4, store_positions=True)
+    _crash_and_resume(spark, corpus_df, d, cfg, stage_name, monkeypatch)
+    golden_segments(d, "t2000_b16s8_pos1")
+    phrase, keys = _bigram_docs(make_transcripts(2000))
+    assert keys
+    hits = Searcher(spark, d).search(phrase, k=len(keys) + 10)
+    assert set(zip(hits["conv_id"], hits["turn_idx"].astype(int))) == keys
+
+
+def test_verify_positions_resume_after_crash(spark, tmp_path, monkeypatch,
+                                             golden_segments):
+    """The same crash + resume through input_order='verify', whose
+    stage 1 packs runs in the fused tokenize+pack scan."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pdf = make_transcripts(2000).sort_values(
+        ["conv_id", "turn_idx"]).reset_index(drop=True)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for i in range(3):
+        pq.write_table(
+            pa.Table.from_pandas(pdf.iloc[i * 700:(i + 1) * 700],
+                                 preserve_index=False),
+            f"{src}/part-{i:04d}.parquet")
+    d = str(tmp_path / "idx")
+    cfg = IndexConfig(n_build_chunks=4, store_positions=True,
+                      input_order="verify")
+    _crash_and_resume(spark, spark.read.parquet(src), d, cfg, "segchunk2",
+                      monkeypatch)
+    golden_segments(d, "t2000_b16s8_pos1")
+    phrase, keys = _bigram_docs(pdf)
+    q = pd.DataFrame({"query_id": [0], "query_text": [phrase],
+                      "k": [len(keys) + 10]})
+    hits = search_batch(spark, d, q, k=len(keys) + 10).toPandas()
+    assert set(zip(hits["conv_id"], hits["turn_idx"].astype(int))) == keys
+
+
+def _old_config_json(cfg: IndexConfig) -> str:
+    """cfg as an older release serialized it: with the since-removed
+    dict_terms/dict_max_vocab fields and the 'stream' encoder."""
+    import json
+
+    d = json.loads(cfg.to_json())
+    d.update(dict_terms="off", dict_max_vocab=4_000_000, encoder="stream")
+    return json.dumps(d, sort_keys=True)
+
+
+def _forge_stream_partial(spark, corpus_df, d, cfg, lineage):
+    """Turn the complete index at d into the partial build an older
+    release leaves after committing chunks 0 and 1: its stats.json
+    config, its manifest rows under `lineage`, and its stage-1 tf/
+    table of per-posting (term, salt, doc_ord, tf, dl) rows."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkbm25 import catalog
+    from sparkbm25.build import assign_doc_ords, term_bucket_col
+
+    stats = catalog.read_stats(d)
+    stats.update(config=_old_config_json(cfg), lineage=lineage)
+    catalog.write_stats(d, stats)
+    df_tok = assign_doc_ords(corpus_df, cfg)
+    n = stats["n_docs"]
+    (df_tok.select("doc_ord", "dl", F.explode("tokens").alias("term"))
+     .withColumn("term_bucket", term_bucket_col(F.col("term"), 16))
+     .withColumn("salt", F.least(F.lit(7), F.floor(F.col("doc_ord") * 8 / n))
+                 .cast("int"))
+     .groupBy("term_bucket", "term", "salt", "doc_ord")
+     .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
+     .write.mode("overwrite").partitionBy("term_bucket").parquet(f"{d}/tf"))
+    df_tok._sparkbm25_cached.unpersist()
+    m = read_manifest(d)
+    m = m[(m["stage"] == "tf") | ((m["stage"] == "segments")
+                                  & m["partition_id"].isin([0, 1]))].copy()
+    m["lineage"] = lineage
+    shutil.rmtree(f"{d}/manifest")
+    os.makedirs(f"{d}/manifest")
+    pq.write_table(pa.Table.from_pandas(m, preserve_index=False),
+                   f"{d}/manifest/part-old.parquet")
+    for chunk in (2, 3):
+        shutil.rmtree(segments_chunk_dir(d, chunk))
+    shutil.rmtree(f"{d}/terms")
+    os.remove(f"{d}/_COMPLETE")
+    assert json.loads(catalog.read_stats(d)["config"])["encoder"] == "stream"
+
+
+def test_resume_over_stream_checkpoint(spark, corpus_df, tmp_path,
+                                       golden_segments):
+    """A partial build left by the former 'stream' encoder's checkpoint:
+    its config hash differs, so resume reruns stage 1 and rebuilds every
+    chunk, and its per-posting tf/ rows are never read as packed runs —
+    even under a lineage that did match, they raise instead."""
+    import hashlib
+    import os
+
+    cfg = IndexConfig(n_build_chunks=4)
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus_df, d, cfg, input_desc="old")
+    old_hash = hashlib.sha256(
+        _old_config_json(cfg).encode()).hexdigest()[:16]
+    assert old_hash != cfg.config_hash()
+    _forge_stream_partial(spark, corpus_df, d, cfg, f"{old_hash}:old")
+    build_index(spark, corpus_df, d, cfg, resume=True, input_desc="old")
+    m = read_manifest(d)
+    new = m[m["lineage"] == f"{cfg.config_hash()}:old"]
+    assert (new["stage"] == "tf").sum() == 1
+    assert sorted(new[new["stage"] == "segments"]["partition_id"]) == [
+        0, 1, 2, 3]
+    golden_segments(d, "t2000_b16s8_pos0")
+    assert not os.path.exists(f"{d}/tf")
+
+    _forge_stream_partial(spark, corpus_df, d, cfg,
+                          f"{cfg.config_hash()}:old")
+    with pytest.raises(RuntimeError, match="packed runs"):
+        build_index(spark, corpus_df, d, cfg, resume=True, input_desc="old")
+
+
+def test_pre_upgrade_index_still_opens(spark, tmp_path):
+    """An index whose stats.json carries the removed dict_terms /
+    dict_max_vocab fields and encoder='stream' opens with Searcher and
+    search_batch and answers like the reference."""
+    import json
+
+    import numpy as np
+
+    from sparkbm25 import Searcher, bm25_reference_topk, catalog
+
+    pdf = make_transcripts(800)
+    d = str(tmp_path / "idx")
+    cfg = IndexConfig(n_term_buckets=4, n_salt_buckets=2, n_build_chunks=1)
+    build_index(spark, spark.createDataFrame(pdf), d, cfg)
+    stats = catalog.read_stats(d)
+    stats["config"] = _old_config_json(cfg)
+    catalog.write_stats(d, stats)
+    assert "dict_terms" in json.loads(catalog.read_stats(d)["config"])
+
+    q = make_queries()
+    exp = (bm25_reference_topk(pdf, q, k=5)
+           .sort_values(["query_id", "rank"]).reset_index(drop=True))
+    got = (search_batch(spark, d, q, k=5).toPandas()
+           .sort_values(["query_id", "rank"]).reset_index(drop=True))
+    for col in ("query_id", "conv_id", "turn_idx"):
+        assert got[col].tolist() == exp[col].tolist(), col
+    np.testing.assert_allclose(got["score"], exp["score"], rtol=1e-9)
+    s = Searcher(spark, d)
+    for row in q.itertuples(index=False):
+        hits = s.search(row.query_text, k=int(row.k))
+        e = exp[exp["query_id"] == row.query_id]
+        for col in ("conv_id", "turn_idx"):
+            assert hits[col].tolist() == e[col].tolist(), (row, col)
+
+
+def test_complete_build_drops_runs_checkpoint(spark, corpus_df, tmp_path):
+    """tf/ is gone once an index is complete — one-shot builds and
+    every update_index generation — and resume=True on a complete
+    index does no work and leaves it searchable."""
+    import os
+
+    from sparkbm25 import Searcher, catalog
+    from sparkbm25.streaming import update_index
+
+    d = str(tmp_path / "idx")
+    cfg = IndexConfig(n_build_chunks=2)
+    build_index(spark, corpus_df, d, cfg, input_desc="c")
+    assert not os.path.exists(f"{d}/tf")
+    m1 = read_manifest(d)
+    build_index(spark, corpus_df, d, cfg, resume=True, input_desc="c")
+    assert len(read_manifest(d)) == len(m1)  # no stage ran again
+    assert not os.path.exists(f"{d}/tf")
+    assert len(Searcher(spark, d).search("w0001", k=3)) == 3
+
+    root = str(tmp_path / "gens")
+    pdf = make_transcripts(600)
+    for part in (pdf.iloc[:300], pdf.iloc[300:]):
+        update_index(spark, spark.createDataFrame(part), root, cfg)
+    gens = catalog.generation_dirs(root)
+    assert len(gens) == 2
+    for g in gens:
+        assert os.path.exists(f"{g}/_COMPLETE")
+        assert not os.path.exists(f"{g}/tf")
