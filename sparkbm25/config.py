@@ -15,6 +15,11 @@ import json
 from dataclasses import dataclass
 
 
+# IndexConfig fields of older releases, ignored when a stored config
+# is read back (they never changed the segment format)
+_REMOVED_FIELDS = frozenset({"dict_terms", "dict_max_vocab"})
+
+
 @dataclass(frozen=True)
 class IndexConfig:
     # --- BM25 scoring (ES/Lucene defaults; SURVEY §7.0) ---
@@ -127,13 +132,14 @@ class IndexConfig:
     @staticmethod
     def from_json(s: str) -> "IndexConfig":
         """Rebuild a stored config (stats.json). Indexes written by
-        older releases carry fields that no longer exist (dict_terms,
-        dict_max_vocab) and encoder='stream'/'collect', whose segments
-        are byte-identical to 'packed' ones: such keys are dropped so
-        those indexes still open."""
+        older releases carry the removed dict_terms / dict_max_vocab
+        fields and encoder='stream'/'collect', whose segments are
+        byte-identical to 'packed' ones: those keys are dropped so such
+        indexes still open. Any other unknown key still raises
+        TypeError, so an index written with an option this release
+        does not know never opens under defaults."""
         d = json.loads(s)
-        names = {f.name for f in dataclasses.fields(IndexConfig)}
-        d = {k: v for k, v in d.items() if k in names}
+        d = {k: v for k, v in d.items() if k not in _REMOVED_FIELDS}
         if d.get("encoder") in ("stream", "collect"):
             del d["encoder"]
         return IndexConfig(**d)

@@ -822,18 +822,6 @@ def _plans_to_rows(plans: list[_QueryPlan]) -> pd.DataFrame:
         "n_terms", "slop", "k"])
 
 
-def _ordered_group_sums(s: np.ndarray, starts: np.ndarray) -> np.ndarray:
-    """Sum each group s[starts[i]:starts[i + 1]] front to back, from 0.0
-    — one vectorized add per group position, so the order is exactly a
-    sequential loop's."""
-    sizes = np.diff(np.r_[starts, s.size])
-    acc = np.zeros(starts.size)
-    for j in range(int(sizes.max(initial=0))):
-        live = sizes > j
-        acc[live] += s[starts[live] + j]
-    return acc
-
-
 def _term_order_rollup(rows: DataFrame, with_mask: bool) -> DataFrame:
     """Doc-level rollup of leaf rows (query_id, doc_ord, [slot,] tord,
     score) -> (query_id, doc_ord, score[, mask]) in ONE shuffle.
@@ -859,8 +847,7 @@ def _term_order_rollup(rows: DataFrame, with_mask: bool) -> DataFrame:
 def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
                  cfg: IndexConfig, n_docs: int, avgdl: float,
                  lean: bool = False,
-                 single_leaf_k: dict[int, int] | None = None,
-                 rollup: bool = True) -> DataFrame:
+                 single_leaf_k: dict[int, int] | None = None) -> DataFrame:
     """The posting-derived scoring pipeline: pruned segment scan →
     vectorized block decode + BM25 (plan and idf ride one broadcast) →
     (phrase verification) → per-(query, doc) rollup. Returns
@@ -877,12 +864,7 @@ def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
     from 0.0 — the order bm25_reference_topk and Searcher use. A plain
     sum would add them in whatever order the shuffle delivers, so two
     exactly tied docs could come out one ulp apart and lose the
-    (conv_id, turn_idx) tie-break.
-
-    rollup=False (lean only): return the leaf rows (query_id, doc_ord,
-    tord, score) hash-partitioned by (query_id, doc_ord) instead, for a
-    caller that sums them in the same order itself (search_batch's
-    partial top-k, which buffers its partition anyway)."""
+    (conv_id, turn_idx) tie-break."""
     any_phrase = bool(qp["is_phrase"].any())
     if any_phrase and not cfg.store_positions:
         raise ValueError(
@@ -1042,10 +1024,6 @@ def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
                 "n_terms int, tord int, score double, is_phrase boolean"))
     if lean:
         # plain-disjunction fast shape: no mask, no phrase branch
-        if not rollup:
-            return parts.repartition(
-                int(spark.conf.get("spark.sql.shuffle.partitions")),
-                "query_id", "doc_ord")
         return _term_order_rollup(parts, with_mask=False)
 
     if any_phrase:
@@ -1343,18 +1321,13 @@ def search_batch(
         if len(p.leaves) == 1 and p.leaves[0]["kind"] == "term"
         and len(p.leaves[0]["terms"]) == 1
         and not p.filters and not p.neg_filters} if lean else None
-    # with nothing between the rollup and the partial top-k (lean, no
-    # structured filter), the partial top-k sums the leaf rows itself
-    unrolled = lean and not any(p.filters or p.neg_filters
-                                for p in scored_plans)
     if qp.empty:
         scored = spark.createDataFrame(
             [], "query_id int, doc_ord bigint, score double, mask bigint")
         persisted = None
     else:
         scored = _scored_rows(spark, index_dir, qp, cfg, n_docs, avgdl,
-                              lean=lean, single_leaf_k=single_leaf_k,
-                              rollup=not unrolled)
+                              lean=lean, single_leaf_k=single_leaf_k)
         persisted = None
         if negonly or empty_ok:
             # `scored` is referenced a second time below (posting masks
@@ -1468,28 +1441,21 @@ def search_batch(
         # (query asc, score desc, doc asc — a total order: (query,
         # doc) pairs are unique per partition after the rollup), keep
         # group-rank < kmax. Exact, like the sort it replaces.
-        # Unrolled leaf rows (they carry tord) are first summed per
-        # (query, doc) in term order, as _term_order_rollup would.
         import pyarrow as pa
 
-        cols = ("query_id", "doc_ord", "score") + (
-            ("tord",) if unrolled else ())
-        bufs = {c: [] for c in cols}
+        qs, ds, ss = [], [], []
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            for c in cols:
-                bufs[c].append(rb.column(rb.schema.get_field_index(c))
-                               .to_numpy(zero_copy_only=False))
-        if not bufs["query_id"]:
+            ni = {n: i for i, n in enumerate(rb.schema.names)}
+            qs.append(rb.column(ni["query_id"]).to_numpy(zero_copy_only=False))
+            ds.append(rb.column(ni["doc_ord"]).to_numpy(zero_copy_only=False))
+            ss.append(rb.column(ni["score"]).to_numpy(zero_copy_only=False))
+        if not qs:
             return
-        q, d, s = (np.concatenate(bufs[c]) for c in cols[:3])
-        if unrolled:
-            o = np.lexsort((s, np.concatenate(bufs["tord"]), d, q))
-            q, d, s = q[o], d[o], s[o]
-            g = np.flatnonzero(
-                np.r_[True, (q[1:] != q[:-1]) | (d[1:] != d[:-1])])
-            q, d, s = q[g], d[g], _ordered_group_sums(s, g)
+        q = np.concatenate(qs)
+        d = np.concatenate(ds)
+        s = np.concatenate(ss)
         order = np.lexsort((d, -s, q))
         q, d, s = q[order], d[order], s[order]
         starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])

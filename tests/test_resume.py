@@ -358,6 +358,10 @@ def test_pre_upgrade_index_still_opens(spark, tmp_path):
     stats["config"] = _old_config_json(cfg)
     catalog.write_stats(d, stats)
     assert "dict_terms" in json.loads(catalog.read_stats(d)["config"])
+    unknown = json.loads(stats["config"])
+    unknown["some_future_option"] = 1
+    with pytest.raises(TypeError, match="some_future_option"):
+        IndexConfig.from_json(json.dumps(unknown))
 
     q = make_queries()
     exp = (bm25_reference_topk(pdf, q, k=5)

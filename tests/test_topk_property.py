@@ -121,22 +121,3 @@ def test_and_mode_matches_brute(seed):
     assert [d for _, d in got] == [d for _, d in exp], seed
     np.testing.assert_allclose([s for s, _ in got], [s for s, _ in exp],
                                rtol=1e-9)
-
-
-@pytest.mark.parametrize("seed", range(5))
-def test_ordered_group_sums_equal_a_sequential_loop(seed):
-    """search_batch's rollup sums each (query, doc) group with one
-    vectorized add per group position; the result must equal, bit for
-    bit, a Python loop adding the group front to back from 0.0."""
-    from sparkbm25.search import _ordered_group_sums
-
-    rng = np.random.default_rng(seed)
-    sizes = rng.integers(1, 12, size=300)
-    s = rng.random(int(sizes.sum())) * 10.0 ** rng.integers(-3, 3, size=int(sizes.sum()))
-    starts = np.r_[0, np.cumsum(sizes)[:-1]]
-    got = _ordered_group_sums(s, starts)
-    for i, (a, n) in enumerate(zip(starts, sizes)):
-        acc = 0.0
-        for v in s[a:a + n]:
-            acc += float(v)
-        assert got[i] == acc, i
