@@ -60,6 +60,12 @@ def segment_schema(with_pos: bool = False) -> str:
     )
 
 
+def runs_schema(with_pos: bool = False) -> str:
+    """The pack kernel's rows: one (term, salt) run group per row."""
+    return ("term string, salt int, min_doc bigint, n_runs bigint, "
+            "runs binary" + (", pos binary" if with_pos else ""))
+
+
 @dataclass
 class BuildResult:
     index_dir: str
@@ -966,8 +972,7 @@ def build_index(
         packed = runs_src.mapInArrow(
             _make_pack_kernel(config.n_salt_buckets, doc_ord_base, n_docs,
                               with_pos, ingest=ingest),
-            schema="term string, salt int, min_doc bigint, n_runs bigint, "
-                   "runs binary" + (", pos binary" if with_pos else ""))
+            schema=runs_schema(with_pos))
         if config.checkpoint_runs:
             # the resumable configuration: the packed runs are the
             # on-disk SPIMI checkpoint, one directory per term_bucket so
@@ -1024,17 +1029,24 @@ def build_index(
             n_out = config.n_term_buckets
         else:
             buckets = [bk for bk in range(config.n_term_buckets) if bk % n_chunks == chunk]
-            runs = (
-                spark.read.parquet(tf_path)
-                .where(F.col("term_bucket").isin(buckets))  # partition pruning
-                .drop("term_bucket")
-            )
-            if "runs" not in runs.columns:
+            import pyarrow.parquet as pq
+
+            tf_files = _parquet_files(tf_path)
+            if tf_files and "runs" not in pq.read_schema(tf_files[0]).names:
                 # a run table in another layout (an older release's
                 # per-posting rows) is never decoded as packed runs
                 raise RuntimeError(
                     f"{tf_path} holds no packed runs; rebuild with "
                     "resume=False")
+            # the known schema, not inference: a corpus with no tokens
+            # leaves tf/ without a single parquet file
+            runs = (
+                spark.read.schema(
+                    runs_schema(with_pos) + ", term_bucket int")
+                .parquet(tf_path)
+                .where(F.col("term_bucket").isin(buckets))  # partition pruning
+                .drop("term_bucket")
+            )
             n_out = max(len(buckets), 1)
         postings_acc = spark.sparkContext.accumulator(0)
         rows_acc = spark.sparkContext.accumulator(0)
@@ -1069,7 +1081,8 @@ def build_index(
     # ---------------- stage 3: term dictionary ------------------------
     if config.build_terms_dict and ("terms", -1) not in done:
         d0 = time.time()
-        segs = spark.read.parquet(catalog.segments_dir(index_dir))
+        segs = (spark.read.schema(segment_schema(with_pos))
+                .parquet(catalog.segments_dir(index_dir)))
         # term-SORTED write with a length column (VERDICT r4 item 3):
         # range-partitioned + sorted-within-partition means parquet
         # row-group min/max statistics on `term` are TIGHT, so a

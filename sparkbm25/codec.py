@@ -3,7 +3,8 @@
 The reference stores postings inside Lucene (opaque to it); the
 north_rule requires us to own the codec: per-term docID lists are
 delta-gapped and varint-encoded into fixed-size blocks, each block
-carrying per-block max-score metadata for block-max WAND pruning.
+carrying per-block max-score metadata, stored for block-max pruning
+(no query path reads it yet).
 
 All encode/decode is vectorized numpy (no per-element Python loops in
 the hot path) and runs inside Arrow UDFs, producing/consuming

@@ -2,14 +2,14 @@
 (Lucene forceMerge / ES _forcemerge analog).
 
 An incrementally-grown index (streaming.update_index) is a list of
-self-contained generations; queries union G parquet roots and WAND
-inflates per-generation block maxima to stay sound under the global
-avgdl. Compaction folds all generations into ONE root:
+self-contained generations; queries union G parquet roots, and each
+generation's block maxima were encoded under its own avgdl.
+Compaction folds all generations into ONE root:
 
   * segments: all generations' rows physically co-located under a
     single term_bucket-partitioned root (one pruned scan instead of G),
     with every block's max_impact RE-COMPUTED against the global avgdl
-    — the WAND upper bound becomes exact again, no inflation slack.
+    (stored for block-max pruning; no query path reads it yet).
     Posting bytes (gaps/tfs/dls/pos) are untouched: doc_ord ranges of
     generations are disjoint and ordered by construction, so block
     lists merge by concatenation.

@@ -643,8 +643,9 @@ FROM ranked WHERE rank <= {TOPK}
 
 
 def q_bm25_wand(spark, sf_dir):
-    """The interactive Block-Max-WAND driver path, checked against the
-    SAME SQL oracle as the batch path — WAND pruning must be lossless."""
+    """The interactive driver path (the default MaxScore route; the
+    key keeps its historical name), checked against the SAME SQL
+    oracle as the batch path — MaxScore pruning must be lossless."""
     from sparkbm25.search import Searcher
 
     index_dir = _ensure_index(spark, sf_dir)
@@ -2769,7 +2770,7 @@ QUERIES = {
 # parametrized replica (tests/test_oracle_suite.py runs the FULL
 # registry) and documented in COVERAGE.md.
 EXCLUDED_FROM_DRIVER = (
-    "bm25_topk_multi",           # same path as bm25_topk at 3 terms; and/wand/boost variants checked
+    "bm25_topk_multi",           # same path as bm25_topk at 3 terms; and/driver/boost variants checked
     "truncate_text",             # plain substring; truncate_build covers P3
     "minhash_signature",         # input stage of minhash_lsh_dedup (checked)
     "quality_counts",            # inputs of quality_score (checked)

@@ -12,13 +12,12 @@ ranking — implemented natively:
     the path the DuckDB oracle checks.
   * interactive path (`Searcher.search`): one query on the driver over
     batch-decoded flat posting arrays — chunked vectorized MaxScore
-    (default) or its block-max WAND verification twin (OR mode,
-    `or_algo=`), vectorized intersection (AND mode); all pruning
-    lossless. Only the posting blocks of the query's terms are fetched
-    (term_bucket partition pruning + term predicate pushdown — the
-    analog of ES routing a query to the right shard), and bounded LRU
-    caches (decoded postings / df map / doc resolve) make warm
-    repeats run without any Spark job.
+    or an exhaustive dense scatter (OR mode), vectorized intersection
+    (AND mode); all pruning lossless. Only the posting blocks of the
+    query's terms are fetched (term_bucket partition pruning + term
+    predicate pushdown — the analog of ES routing a query to the
+    right shard), and bounded LRU caches (decoded postings / df map /
+    doc resolve) make warm repeats run without any Spark job.
 
 Ranking contract (parity with refscore.bm25_reference_topk):
   score(q,d) = Σ_t qtf·idf·(k1+1)·tf / (tf + k1(1-b+b·dl/avgdl)),
@@ -40,6 +39,7 @@ from pyspark.sql import functions as F
 
 from sparkbm25 import catalog, localio
 from sparkbm25.analysis import tokenize_one
+from sparkbm25.build import segment_schema
 from sparkbm25.codec import decode_blocks
 from sparkbm25.config import IndexConfig
 from sparkbm25.querystring import filter_columns as qs_filter_columns
@@ -47,18 +47,27 @@ from sparkbm25.querystring import filter_columns as qs_filter_columns
 
 def _load_stats(index_dir: str) -> tuple[int, float, IndexConfig, list[dict]]:
     """Global corpus stats (summed across generations for an
-    incrementally-built index) + per-generation info for WAND
-    upper-bound correction."""
+    incrementally-built index) + the per-generation info rows."""
     stats = catalog.global_stats(index_dir)
     cfg = IndexConfig.from_json(stats["config"])
     return int(stats["n_docs"]), float(stats["avgdl"]), cfg, stats["generations"]
 
 
-def _read_segments(spark: SparkSession, index_dir: str):
+def _read_segment_root(spark: SparkSession, path: str,
+                       with_pos: bool) -> DataFrame:
+    """One generation's segment table, read with its known schema (an
+    index whose docs yield no tokens has no segment file to infer
+    one from)."""
+    return spark.read.schema(segment_schema(with_pos)).parquet(path)
+
+
+def _read_segments(spark: SparkSession, index_dir: str,
+                   with_pos: bool = False):
     """Union the segment tables of all generations (each generation is
     its own partitioned-parquet root, so a single multi-path read would
     see conflicting partition structures)."""
-    dfs = [spark.read.parquet(p) for p in catalog.segments_paths(index_dir)]
+    dfs = [_read_segment_root(spark, p, with_pos)
+           for p in catalog.segments_paths(index_dir)]
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d.select(out.columns))
@@ -878,7 +887,7 @@ def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
     buckets = sorted({cfg.term_bucket_of(t) for t in uniq_terms})
 
     pruned_segs = (
-        _read_segments(spark, index_dir)
+        _read_segments(spark, index_dir, cfg.store_positions)
         .where(F.col("term_bucket").isin(buckets))     # partition pruning
         .where(F.col("term").isin(uniq_terms))         # rowgroup pushdown
     )
@@ -1560,7 +1569,7 @@ def search_batch(
 
 
 # ---------------------------------------------------------------------------
-# Interactive driver path: Block-Max WAND
+# Interactive driver path: decoded postings, MaxScore / dense / AND
 # ---------------------------------------------------------------------------
 
 
@@ -1589,14 +1598,18 @@ def _binary_child(arr) -> tuple[np.ndarray, np.ndarray]:
     return off, data
 
 
-def _term_streams_from_arrow(tb, inflate: float) -> dict[str, list]:
+def _term_streams_from_arrow(tb) -> dict[str, list]:
     """Per-term block metadata + concatenated varint streams straight
-    from a (term, n_docs, blocks) Arrow table — the no-Python-objects
-    twin of the row-dict path (blocks ordered by first_doc; same
-    min(1.0, max_impact*inflate) float semantics). Returns
-    {term: [n_docs_sum, firsts, max, ns, {stream: (u8, lens)}]}."""
+    from a (term, n_docs, blocks) Arrow table — the one decoder of both
+    postings sources (the local pyarrow read and the Spark toArrow
+    fetch), with no per-block Python objects. A term's rows may come
+    from several generations; its blocks are ordered by first_doc
+    (doc_ord ranges are disjoint across generations and salts).
+    Returns {term: [n_docs_sum, firsts, ns, {stream: bytes}]}."""
     import pyarrow as pa
 
+    if tb.num_rows == 0:
+        return {}
     terms = tb.column("term").to_pylist()
     n_docs = tb.column("n_docs").to_pylist()
     blocks = tb.column("blocks")
@@ -1612,7 +1625,6 @@ def _term_streams_from_arrow(tb, inflate: float) -> dict[str, list]:
     loff = loff - loff[0]
     fd = vals.field("first_doc").to_numpy(zero_copy_only=False)
     nn = vals.field("n").to_numpy(zero_copy_only=False)
-    mi = vals.field("max_impact").to_numpy(zero_copy_only=False)
     stream_names = ["gaps", "tfs", "dls"]
     if "pos" in (f.name for f in vals.type):
         stream_names.append("pos")
@@ -1624,49 +1636,43 @@ def _term_streams_from_arrow(tb, inflate: float) -> dict[str, list]:
     for t, rows in rows_by_term.items():
         idx = np.concatenate([np.arange(loff[i], loff[i + 1])
                               for i in rows])
-        order = np.argsort(fd[idx], kind="stable")
-        sidx = idx[order]
-        maxi = mi[sidx]
-        if inflate != 1.0:
-            maxi = np.minimum(1.0, maxi * inflate)
+        sidx = idx[np.argsort(fd[idx], kind="stable")]
         streams = {}
         for nm, (coff, cdata) in childs.items():
-            lens = coff[sidx + 1] - coff[sidx]
-            streams[nm] = (_gather_ranges(cdata, coff[sidx], lens), lens)
+            streams[nm] = _gather_ranges(cdata, coff[sidx],
+                                         coff[sidx + 1] - coff[sidx])
         out[t] = [sum(int(n_docs[i]) for i in rows),
-                  fd[sidx], maxi, nn[sidx], streams]
+                  fd[sidx], nn[sidx], streams]
     return out
 
 
-def _merge_term_streams(parts: list[list]) -> "_TermPostings":
-    """Merge one term's per-generation stream bundles (each internally
-    first_doc-ordered) into a single _TermPostings."""
-    if len(parts) == 1:
-        _nd, firsts, maxi, ns, streams = parts[0]
-        return _TermPostings.from_streams(
-            firsts, maxi, ns, streams["gaps"][0], streams["tfs"][0],
-            streams["dls"][0],
-            pos=streams["pos"][0] if "pos" in streams else None)
-    firsts = np.concatenate([p[1] for p in parts])
-    maxi = np.concatenate([p[2] for p in parts])
-    ns = np.concatenate([p[3] for p in parts])
-    order = np.argsort(firsts, kind="stable")
-    merged = {}
-    for nm in parts[0][4]:
-        data = np.concatenate([p[4][nm][0] for p in parts])
-        lens = np.concatenate([p[4][nm][1] for p in parts])
-        starts = np.zeros(lens.size + 1, dtype=np.int64)
-        np.cumsum(lens, out=starts[1:])
-        merged[nm] = _gather_ranges(data, starts[:-1][order], lens[order])
-    return _TermPostings.from_streams(
-        firsts[order], maxi[order], ns[order], merged["gaps"],
-        merged["tfs"], merged["dls"], pos=merged.get("pos"))
+def _decode_postings(tb) -> tuple[dict[str, "_TermPostings"], dict[str, int]]:
+    """(decoded postings, df) per term of a (term, n_docs, blocks)
+    Arrow table."""
+    bundles = _term_streams_from_arrow(tb)
+    return ({t: _TermPostings.from_streams(firsts, ns, streams)
+             for t, (_nd, firsts, ns, streams) in bundles.items()},
+            {t: b[0] for t, b in bundles.items()})
 
 
 _INF_DOC = 2 ** 62
 # max structured-filter predicates per one-pass explode leg (see the
 # chunking comment in search_batch)
 _FILTER_LEG = 16
+
+
+def _exact_topk(cand: np.ndarray, scores: np.ndarray,
+                k: int) -> list[tuple[float, int]]:
+    """The k best [(score, doc)] under (score desc, doc asc), in that
+    order: threshold at the kth score first (np.partition, the boundary
+    tie group kept), then lexsort only the survivors — a full lexsort
+    of a large candidate set costs more than the scoring."""
+    if scores.size > k:
+        thr = np.partition(scores, scores.size - k)[scores.size - k]
+        m = scores >= thr
+        cand, scores = cand[m], scores[m]
+    order = np.lexsort((cand, -scores))[:k]
+    return list(zip(scores[order].tolist(), cand[order].tolist()))
 
 
 class _TermPostings:
@@ -1686,94 +1692,44 @@ class _TermPostings:
     batched pass decodes the same postings ~50× faster, and caching
     the decoded arrays removes even that from warm queries. tfs/dls
     are stored float64 so scoring never pays a per-query astype copy.
-    Per-block max_impact/first_doc metadata is kept for the BMW bound
-    math."""
+    The blocks' max_impact is stored for block-max pruning; no query
+    path reads it yet."""
 
-    __slots__ = ("firsts", "max_impacts", "firsts_np", "max_np",
-                 "starts", "all_docs", "all_tfs", "all_dls", "total", "n",
-                 "pos_blobs", "pos_bytes", "pos_flat", "pos_occ",
+    __slots__ = ("all_docs", "all_tfs", "all_dls", "total",
+                 "pos_blob", "pos_bytes", "pos_flat", "pos_occ",
                  "unit", "unit_key")
 
-    def __init__(self, blocks: list):
-        self.unit = None
-        self.unit_key = None
-        blocks = sorted(blocks, key=lambda blk: blk["first_doc"] if isinstance(blk, dict) else blk.first_doc)
-        get = ((lambda blk, k: blk[k]) if (blocks and isinstance(blocks[0], dict))
-               else (lambda blk, k: getattr(blk, k)))
-        # raw positions blobs (varint, ~1-2 B/occurrence) kept per
-        # block when the index stores positions: the interactive
-        # phrase path decodes ONLY the blocks its candidate docs live
-        # in lazily (decode_positions_full). Kept compressed until a
-        # phrase query touches the term — decoded positions would
-        # several-fold the cache footprint for queries that never
-        # verify a phrase (once decoded they persist and are charged
-        # to the Searcher's budget via _charge_positions).
-        self.pos_blobs = None
-        self.pos_bytes = 0
-        self.pos_flat = None
-        self.pos_occ = None
-        if blocks:
-            try:
-                first_pos = get(blocks[0], "pos")
-            except (KeyError, AttributeError):
-                first_pos = None
-            if first_pos is not None:
-                self.pos_blobs = [get(blk, "pos") for blk in blocks]
-                self.pos_bytes = sum(len(b) for b in self.pos_blobs)
-        self.firsts_np = np.asarray(
-            [get(blk, "first_doc") for blk in blocks], dtype=np.int64)
-        self.max_np = np.asarray(
-            [float(get(blk, "max_impact")) for blk in blocks],
-            dtype=np.float64)
-        ns = np.array([get(blk, "n") for blk in blocks], dtype=np.int64)
-        self._finish(ns,
-                     b"".join(get(blk, "gaps") for blk in blocks),
-                     b"".join(get(blk, "tfs") for blk in blocks),
-                     b"".join(get(blk, "dls") for blk in blocks))
-
     @classmethod
-    def from_streams(cls, firsts_np: np.ndarray, max_np: np.ndarray,
-                     ns: np.ndarray, gaps, tfs, dls,
-                     pos=None) -> "_TermPostings":
-        """Construct from pre-gathered per-block metadata arrays plus
-        CONCATENATED byte streams in first_doc block order — the
-        zero-Python-object path the local pyarrow fetch uses (no
-        per-block dicts/bytes; the streams are single gathers over the
-        Arrow child buffers). Semantically identical to __init__ over
-        the equivalent block dicts."""
+    def from_streams(cls, firsts_np: np.ndarray, ns: np.ndarray,
+                     streams: dict) -> "_TermPostings":
+        """Construct from per-block first_doc / posting-count arrays
+        plus each stream ('gaps', 'tfs', 'dls', optional 'pos') as ONE
+        concatenated byte string in first_doc block order (single
+        gathers over the Arrow child buffers — _term_streams_from_arrow)."""
         self = cls.__new__(cls)
         self.unit = None
         self.unit_key = None
-        self.pos_blobs = None
-        self.pos_bytes = 0
+        # the raw positions stream (varint, ~1-2 B/occurrence) stays
+        # compressed until a phrase query touches the term — decoded
+        # positions would several-fold the cache footprint for queries
+        # that never verify a phrase (once decoded they persist and
+        # are charged to the Searcher's budget via _charge_positions)
+        pos = streams.get("pos")
+        self.pos_blob = pos
+        self.pos_bytes = 0 if pos is None else len(pos)
         self.pos_flat = None
         self.pos_occ = None
-        if pos is not None:
-            # one pre-concatenated blob behaves exactly like the
-            # per-block list (decode_positions_full joins them anyway)
-            blob = pos if isinstance(pos, bytes) else pos.tobytes()
-            self.pos_blobs = [blob]
-            self.pos_bytes = len(blob)
-        self.firsts_np = np.asarray(firsts_np, dtype=np.int64)
-        self.max_np = np.asarray(max_np, dtype=np.float64)
-        self._finish(np.asarray(ns, dtype=np.int64), gaps, tfs, dls)
-        return self
-
-    def _finish(self, ns: np.ndarray, gaps, tfs, dls) -> None:
-        self.firsts = self.firsts_np.tolist()
-        self.max_impacts = self.max_np.tolist()
-        self.n = self.firsts_np.size
-        total = int(ns.sum()) if self.n else 0
-        starts = np.zeros(self.n + 1, dtype=np.int64)
-        if self.n:
-            np.cumsum(ns, out=starts[1:])
-        self.starts = starts
-        self.total = total
         from sparkbm25.codec import varint_decode
 
-        gaps = varint_decode(gaps, dtype=np.int64)
-        self.all_tfs = varint_decode(tfs, dtype=np.float64)
-        self.all_dls = varint_decode(dls, dtype=np.float64)
+        firsts_np = np.asarray(firsts_np, dtype=np.int64)
+        ns = np.asarray(ns, dtype=np.int64)
+        total = int(ns.sum())
+        starts = np.zeros(firsts_np.size + 1, dtype=np.int64)
+        np.cumsum(ns, out=starts[1:])
+        self.total = total
+        gaps = varint_decode(streams["gaps"], dtype=np.int64)
+        self.all_tfs = varint_decode(streams["tfs"], dtype=np.float64)
+        self.all_dls = varint_decode(streams["dls"], dtype=np.float64)
         # grouped cumsum with a reset at every block start: gfull holds
         # the absolute first_doc at starts and the gaps elsewhere, so
         # docs = cumsum(gfull) rebased per block
@@ -1783,12 +1739,13 @@ class _TermPostings:
             mask = np.ones(total, dtype=bool)
             mask[bs] = False
             gfull[mask] = gaps
-            gfull[bs] = self.firsts_np
+            gfull[bs] = firsts_np
             cs = np.cumsum(gfull)
             base = (cs[bs] - gfull[bs]).astype(np.int64)
             self.all_docs = cs - np.repeat(base, ns)
         else:
             self.all_docs = np.empty(0, dtype=np.int64)
+        return self
 
     def decode_positions_full(self) -> tuple[np.ndarray, np.ndarray]:
         """Decode the term's ENTIRE positions stream once and cache it
@@ -1799,7 +1756,7 @@ class _TermPostings:
         (varints are self-delimiting and every blob starts at a
         posting boundary, whose first value is absolute), so this is
         ONE vectorized decode pass — the same shape as the eager
-        gaps/tfs/dls decode in __init__, and ~50× cheaper than the
+        gaps/tfs/dls decode in from_streams, and ~50× cheaper than the
         per-block positions_of loop it replaced at stopword-phrase
         candidate counts. The decoded arrays stay on the object so a
         warm phrase query touches no varints at all; the Searcher
@@ -1811,7 +1768,7 @@ class _TermPostings:
             tfs = self.all_tfs.astype(np.int64)
             occ = np.zeros(self.total + 1, dtype=np.int64)
             np.cumsum(tfs, out=occ[1:])
-            deltas = varint_decode(b"".join(self.pos_blobs)).astype(np.int64)
+            deltas = varint_decode(self.pos_blob).astype(np.int64)
             if deltas.size:
                 cs = np.cumsum(deltas)
                 starts = occ[:-1]
@@ -1850,10 +1807,8 @@ class _TermPostings:
         if self.unit is None or self.unit_key != key:
             # EXACTLY the codec's max_impact association (codec.py:
             # impacts = tfs/(tfs + k1*(1-b+b*(dls/avgdl)))), so every
-            # driver contribution weight*unit is bounded by
-            # weight*max_impact with exact float semantics — the old
-            # (weight*tf)/denom form could exceed the block bound by
-            # an ulp
+            # contribution weight*unit stays within weight*max_impact
+            # with exact float semantics
             denom = k1 * (1.0 - b + b * (self.all_dls / avgdl))
             self.unit = self.all_tfs / (self.all_tfs + denom)
             self.unit_key = key
@@ -1861,88 +1816,25 @@ class _TermPostings:
 
 
 class _Cursor:
-    """Per-query cursor over a (shared, read-only) _TermPostings.
+    """Per-query cursor over a (shared, read-only) _TermPostings: the
+    query's weight plus one flat read position `gpos` (MaxScore's
+    chunk frontier)."""
 
-    The cursor state is a single flat position `gpos` with `cur`
-    mirroring all_docs[gpos] as a plain int attribute: the BMW outer
-    loop reads the current doc millions of times, and property-call
-    overhead on it measurably dominated skip-heavy queries.
-    """
+    __slots__ = ("tp", "weight", "all_docs", "total", "gpos")
 
-    __slots__ = ("weight", "firsts", "max_impacts", "firsts_np", "max_np",
-                 "starts", "all_docs", "all_tfs", "all_dls", "total", "n",
-                 "gpos", "cur", "tp")
-
-    def __init__(self, postings, weight: float):
-        tp = postings if isinstance(postings, _TermPostings) \
-            else _TermPostings(postings)
+    def __init__(self, tp: _TermPostings, weight: float):
         self.tp = tp          # shared: unit_scores caches on it
         self.weight = weight  # qtf * idf * (k1+1)
-        self.firsts = tp.firsts
-        self.max_impacts = tp.max_impacts
-        self.firsts_np = tp.firsts_np
-        self.max_np = tp.max_np
-        self.starts = tp.starts
         self.all_docs = tp.all_docs
-        self.all_tfs = tp.all_tfs
-        self.all_dls = tp.all_dls
         self.total = tp.total
-        self.n = tp.n
         self.gpos = 0
-        self.cur = int(self.all_docs[0]) if self.total else _INF_DOC
-
-    @property
-    def exhausted(self) -> bool:
-        return self.gpos >= self.total
-
-    @property
-    def cur_doc(self) -> int:
-        return self.cur
-
-    def shallow_info(self, target: int) -> tuple[float, int]:
-        """(score upper bound, exclusive range end) of the block that
-        would contain `target` — a BMW 'shallow advance': block pointer
-        math only. A posting with doc_ord == target, if it exists,
-        lies in the block whose range [first_i, first_{i+1}) covers
-        target, so that block's max_impact bounds the term's
-        contribution over the whole range."""
-        import bisect
-
-        bi = bisect.bisect_right(self.firsts, target) - 1
-        if bi < 0:
-            bi = 0
-        end = int(self.firsts[bi + 1]) if bi + 1 < self.n else _INF_DOC
-        return self.weight * self.max_impacts[bi], end
-
-    def next_geq(self, target: int) -> int:
-        """Advance to the first posting with doc >= target: one
-        binary search over the flat doc array."""
-        if target <= self.cur:
-            return self.cur
-        g = self.gpos
-        g += int(np.searchsorted(self.all_docs[g:], target, side="left"))
-        self.gpos = g
-        self.cur = int(self.all_docs[g]) if g < self.total else _INF_DOC
-        return self.cur
-
-    def advance(self) -> None:
-        g = self.gpos + 1
-        self.gpos = g
-        self.cur = int(self.all_docs[g]) if g < self.total else _INF_DOC
-
-    def score_current(self, k1: float, b: float, avgdl: float) -> float:
-        # weight × the cached query-independent unit factor: identical
-        # association to every other driver site so exact ties stay
-        # exact across path choices
-        return self.weight * float(
-            self.tp.unit_scores(k1, b, avgdl)[self.gpos])
 
 
 class Searcher:
     """Interactive single-query search over driver-side flat posting
-    arrays: chunked vectorized MaxScore by default, block-max WAND as
-    its verification twin (`or_algo='wand'`), vectorized intersection
-    for AND mode — all lossless.
+    arrays: chunked vectorized MaxScore (or an exhaustive dense
+    scatter for hot multi-term unions) for OR mode, vectorized
+    intersection for AND mode — all lossless.
 
     max_driver_postings bounds the driver-side block collect: a cheap
     column-pruned df probe (term + n_docs only — parquet never reads
@@ -1953,24 +1845,18 @@ class Searcher:
     of blocks) is a MEMORY-SAFETY bound, not a speed heuristic — below
     it the driver path is usually faster than a distributed job.
     self.last_path records which path ran
-    ('maxscore' | 'wand' | 'and' | 'batch') for tests/observability.
+    ('maxscore' | 'dense' | 'and' | 'filtered' | 'or_merge' | 'batch')
+    for tests/observability.
     Bounded LRU caches (decoded postings, df map, doc resolve — see
     __init__) make warm repeats run with zero Spark jobs; call
     refresh() after the index grows or compacts."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  max_driver_postings: int = 10_000_000,
-                 max_cached_dict_rows: int = 2_000_000,
-                 or_algo: str = "maxscore"):
-        if or_algo not in ("maxscore", "wand"):
-            raise ValueError(f"or_algo must be maxscore|wand, got {or_algo!r}")
+                 max_cached_dict_rows: int = 2_000_000):
         self.spark = spark
         self.index_dir = index_dir
         self.max_driver_postings = max_driver_postings
-        # OR-mode driver algorithm: 'maxscore' (chunked vectorized
-        # MaxScore, default — see _maxscore_or) or 'wand' (block-max
-        # WAND, the block-metadata verification twin)
-        self.or_algo = or_algo
         # df-probe cache policy: when the segment dictionary (term ×
         # salt × generation rows) fits under this bound, the whole
         # (term -> df) map loads into the driver ONCE and every later
@@ -1992,7 +1878,7 @@ class Searcher:
         # passes, turning a sub-ms warm repeat into a multi-second
         # re-fetch (BENCH_r05 queries_warm q0 4.7 s).
         self.cache_postings_budget = 4 * max_driver_postings
-        self._post_cache: dict[str, tuple["_TermPostings | list", int, int]] = {}
+        self._post_cache: dict[str, tuple["_TermPostings | None", int, int]] = {}
         self._post_cache_postings = 0
         # doc_ord -> (conv_id, turn_idx, {attr: value}) forward-row
         # cache (LRU, bounded entries): each search resolves <= k
@@ -2064,7 +1950,9 @@ class Searcher:
     def _seg_dfs(self) -> list[DataFrame]:
         if self._seg_dfs_cache is None:
             self._seg_dfs_cache = [
-                self.spark.read.parquet(catalog.segments_dir(gen["dir"]))
+                _read_segment_root(self.spark,
+                                   catalog.segments_dir(gen["dir"]),
+                                   self.cfg.store_positions)
                 for gen in self.gens
             ] if self.n_docs > 0 else []
         return self._seg_dfs_cache
@@ -2085,23 +1973,11 @@ class Searcher:
         return self
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """df per term from the term dictionary table (analytics path;
-        the hot search path derives df from segment rows instead).
-        Sums across generations for an incrementally-built index;
-        falls back to the pruned segment probe when a generation was
-        built with build_terms_dict=False."""
-        out: dict[str, int] = {}
-        for gen in self.gens:
-            td = catalog.terms_dir(gen["dir"])
-            if not os.path.isdir(td):
-                return self._probe_dfs(sorted(terms))
-            tdf = (
-                self.spark.read.parquet(td)
-                .where(F.col("term").isin(terms)).toPandas()
-            )
-            for t, df_ in zip(tdf["term"], tdf["df"].astype(int)):
-                out[t] = out.get(t, 0) + int(df_)
-        return out
+        """df per term, summed across generations; absent terms are
+        omitted. The same segment probe the search path uses (a
+        dictionary's df is sum(n_docs) over the term's segment rows),
+        so it needs no terms/ table."""
+        return self._probe_dfs(sorted(terms))
 
     def _via_batch(self, query_text: str, k: int, mode: str) -> pd.DataFrame:
         """Route one interactive query through the distributed batch
@@ -2235,9 +2111,9 @@ class Searcher:
             n = dfs.get(t, 0)
             if n == 0:
                 if self.cache_postings_budget > 0:
-                    self._post_cache[t] = ([], 0, 0)
+                    self._post_cache[t] = (None, 0, 0)
                 continue
-            cost = n + getattr(post[t], "pos_bytes", 0) // 24
+            cost = n + post[t].pos_bytes // 24
             if cost > self.cache_postings_budget:
                 continue
             while (self._post_cache_postings + cost > self.cache_postings_budget
@@ -2275,51 +2151,29 @@ class Searcher:
             old = self._post_cache.pop(old_t)
             self._post_cache_postings -= old[2]
 
-    def _fetch_postings_scan(self, terms: list[str]) -> tuple[dict[str, list], dict[str, int]]:
+    def _fetch_postings_scan(self, terms: list[str]) -> tuple[dict[str, "_TermPostings"], dict[str, int]]:
         """The actual pruned fetch (cache-miss path): a direct pyarrow
         read for local index roots (same partition pruning + rowgroup
         pushdown, no Spark job — localio module docstring), the pruned
-        Spark collect otherwise."""
-        # block-max metadata was encoded with each generation's avgdl;
-        # inflate by max(1, avgdl_global/avgdl_gen) so the stored upper
-        # bound stays sound under the global stats
-        inflates = []
-        for gen in self.gens:
-            gen_avgdl = float(gen["avgdl"]) or self.avgdl
-            inflates.append(
-                max(1.0, self.avgdl / gen_avgdl) if gen_avgdl else 1.0)
-        post: dict[str, list] = {}
-        dfs: dict[str, int] = {}
-        if self._local_segs is not None:
-            import pyarrow.compute as pc
+        Spark scan as Arrow otherwise. Both decode through the one
+        Arrow decoder, once per term: the cache (and every cursor
+        built from it) shares the flat arrays — warm queries never
+        touch varints."""
+        if self._local_segs is None:
+            return _decode_postings(self._gen_union(
+                terms, ["term", "n_docs", "blocks"]).toArrow())
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-            buckets = sorted({self.cfg.term_bucket_of(t) for t in terms})
-            filt = pc.field("term").isin(list(terms))
-            parts: dict[str, list] = {}
-            for gi, ix in enumerate(self._local_segs):
-                tb = ix.read(buckets, ["term", "n_docs", "blocks"],
-                             filter=filt)
-                if tb is None or tb.num_rows == 0:
-                    continue
-                for t, bundle in _term_streams_from_arrow(
-                        tb, inflates[gi]).items():
-                    parts.setdefault(t, []).append(bundle)
-                    dfs[t] = dfs.get(t, 0) + bundle[0]
-            return ({t: _merge_term_streams(p) for t, p in parts.items()},
-                    dfs)
-        else:
-            rows = self._gen_union(terms, ["term", "n_docs", "blocks"]).collect()
-            for r in rows:
-                inflate = inflates[r["_g"]]
-                blks = [blk.asDict() for blk in r["blocks"]]
-                if inflate != 1.0:
-                    for blk in blks:
-                        blk["max_impact"] = min(1.0, blk["max_impact"] * inflate)
-                post.setdefault(r["term"], []).extend(blks)
-                dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["n_docs"])
-        # decode once here: the cache (and every cursor built from it)
-        # shares the flat arrays — warm queries never touch varints
-        return {t: _TermPostings(b) for t, b in post.items()}, dfs
+        buckets = sorted({self.cfg.term_bucket_of(t) for t in terms})
+        filt = pc.field("term").isin(list(terms))
+        tables = [tb for ix in self._local_segs
+                  if (tb := ix.read(buckets, ["term", "n_docs", "blocks"],
+                                    filter=filt)) is not None]
+        if not tables:
+            return {}, {}
+        return _decode_postings(
+            pa.concat_tables(tables, promote_options="default"))
 
     def _attr_cols(self) -> list[str]:
         """Structured-filter attribute columns present in the forward
@@ -2468,6 +2322,9 @@ class Searcher:
         sum in the caller's fixed cursor order, so exact float ties
         land identically to the other driver algorithms.
 
+        AND mode intersects rarest-first: the rarest cursor's docs
+        filter through each other cursor via one searchsorted
+        membership pass, so candidates never exceed the rarest list.
         OR mode uses a DENSE bincount scatter over doc_ord when the
         corpus is small enough (n_docs*8B within ~8× the postings
         volume): np.unique on P concatenated postings is an O(P log P)
@@ -2895,14 +2752,7 @@ class Searcher:
         if parsed.has_filters:
             return self._filtered_probe(parsed, cand, scores, k)
         self.last_path = "or_merge"
-        if cand.size > max(4 * k, 64):
-            kth = np.partition(scores, cand.size - k)[cand.size - k] \
-                if cand.size > k else -np.inf
-            keep = scores >= kth
-            cand, scores = cand[keep], scores[keep]
-        order = np.lexsort((cand, -scores))[:k]
-        results = [(float(scores[i]), int(cand[i])) for i in order]
-        return self._format_results(results)
+        return self._format_results(_exact_topk(cand, scores, k))
 
     def search(self, query_text: str, k: int = 10, mode: str = "or") -> pd.DataFrame:
         """-> pandas (rank, conv_id, turn_idx, score). Accepts
@@ -2948,7 +2798,7 @@ class Searcher:
                         and all(lv[0] not in ("phrase", "matchall")
                                 for lv in pos_groups[0])):
                     # plain OR-of-expandable-leaves: the theta-pruned
-                    # MaxScore/WAND algorithms are faster than the
+                    # MaxScore algorithm is faster than the
                     # full-union CNF evaluator. matchall must NOT take
                     # this route (final-round review finding): a
                     # `+filter should-term` rewrite leaves
@@ -3028,10 +2878,8 @@ class Searcher:
 
         if mode == "and":
             self.last_path = "and"
-            results = self._intersect_and(cursors, k, k1, b, avgdl)
-        elif self.or_algo == "wand":
-            self.last_path = "wand"
-            results = self._wand_or(cursors, k, k1, b, avgdl)
+            results = _exact_topk(
+                *self._score_all(cursors, "and", k1, b, avgdl), k)
         elif (len(cursors) >= 2
               and sum(c.total for c in cursors)
               >= max(self.n_docs, self.dense_min_postings)
@@ -3052,7 +2900,8 @@ class Searcher:
             # doc count with a driver-bounded postings set still takes
             # the MaxScore path.
             self.last_path = "dense"
-            results = self._dense_topk(cursors, k, k1, b, avgdl)
+            results = _exact_topk(
+                *self._score_all(cursors, "or", k1, b, avgdl), k)
         else:
             self.last_path = "maxscore"
             results = self._maxscore_or(cursors, k, k1, b, avgdl)
@@ -3074,148 +2923,13 @@ class Searcher:
         kw.setdefault("token_pattern", self.cfg.token_pattern)
         return highlight_hits(source, hits, query_text, **kw)
 
-    def _dense_topk(self, cursors: list[_Cursor], k: int, k1: float,
-                    b: float, avgdl: float) -> list:
-        """Exhaustive scoring (_score_all's dense OR path) + exact
-        top-k. Tie handling matches the pruned algorithms bit-exactly:
-        per-doc sums accumulate in cursor order (bincount consumes the
-        cursor-order concatenation sequentially) and the final cut is
-        score desc, doc asc."""
-        cand, scores = self._score_all(cursors, "or", k1, b, avgdl)
-        if scores.size > k:
-            thr = np.partition(scores, scores.size - k)[scores.size - k]
-            m = scores >= thr
-            cand, scores = cand[m], scores[m]
-        order = np.lexsort((cand, -scores))[:k]
-        return [(float(s), int(d))
-                for s, d in zip(scores[order], cand[order])]
-
-    @staticmethod
-    def _wand_or(cursors: list[_Cursor], k: int, k1: float, b: float, avgdl: float):
-        """Block-Max WAND, block-range-at-a-time (Ding & Suel BMW with
-        the scoring vectorized — VERDICT r3 item 1: the per-posting
-        Python loop ran at ~500k postings/s and WAS the interactive
-        latency). Each outer iteration either
-
-          (a) proves via block-max bounds alone that no doc in
-              [pivot, range_end) can beat theta and skips the whole
-              range without decoding, or
-          (b) scores EVERY candidate doc in the range as whole numpy
-              arrays and advances all cursors past it.
-
-        range_end = min(participating cursors' current-block ends,
-        first beyond-pivot cursor's cur_doc), so within the range the
-        participating block set is constant: no other cursor owns a
-        posting there, every in-range posting lives in one decoded
-        block per cursor, and the shallow max_impact bound stays valid
-        across the range. Scoring extra sub-threshold docs only wastes
-        work — the heap acceptance is exact — so pruning stays
-        lossless. heap holds (score, -doc_ord): the min element is
-        the one a candidate must beat under (score desc, doc asc).
-        """
-        from operator import attrgetter
-
-        heap: list[tuple[float, int]] = []  # (score, -doc_ord) min-heap
-        curkey = attrgetter("cur")
-
-        while True:
-            live = [c for c in cursors if c.cur < _INF_DOC]
-            if not live:
-                break
-            live.sort(key=curkey)
-            theta = heap[0][0] if len(heap) >= k else -1.0
-            # pivot: first index where cumulative GLOBAL ub exceeds theta
-            acc = 0.0
-            pivot_i = -1
-            for i, c in enumerate(live):
-                acc += c.weight  # weight == global ub (impact <= 1)
-                if acc > theta:
-                    pivot_i = i
-                    break
-            if pivot_i < 0:
-                break  # nothing can beat theta anymore
-            pivot_doc = live[pivot_i].cur
-            # shallow block-max check over every term that could
-            # contribute at pivot_doc (cur <= pivot_doc)
-            ub_bm = 0.0
-            bounds = []
-            part = []
-            for c in live:
-                if c.cur > pivot_doc:
-                    # first cursor past the pivot: its postings were NOT
-                    # counted in ub_bm, so the skip may not jump past it
-                    # (Ding & Suel BMW GetNewCandidate rule)
-                    bounds.append(c.cur)
-                    break
-                ub, end = c.shallow_info(pivot_doc)
-                ub_bm += ub
-                bounds.append(end)
-                part.append(c)
-            # min(bounds) > pivot_doc always (shallow ends are
-            # exclusive bounds of the block containing pivot_doc; the
-            # beyond-pivot cursor sits past pivot_doc) => progress
-            range_end = min(bounds)
-            if ub_bm <= theta:
-                # no doc in [pivot_doc, range_end) can beat theta:
-                # skip to the nearest block boundary past pivot_doc
-                target = max(range_end, pivot_doc + 1)
-                for c in live:
-                    if c.cur < target:
-                        c.next_geq(target)
-                continue
-            # vectorized range scoring: gather each participating
-            # cursor's postings in [pivot_doc, range_end) straight from
-            # the flat decoded arrays (postings below pivot_doc are
-            # skipped unscored — the pivot invariant says their
-            # cursors' total weight cannot beat theta). Contributions
-            # concatenate in the ORIGINAL cursor order, not cur-sorted
-            # order: float summation order is then deterministic and
-            # bit-identical across _wand_or/_maxscore_or/brute force,
-            # so exact score ties rank identically everywhere
-            cand_docs: list[np.ndarray] = []
-            cand_scores: list[np.ndarray] = []
-            part_ids = {id(c) for c in part}
-            part = [c for c in cursors if id(c) in part_ids]
-            for c in part:
-                if c.cur < pivot_doc:
-                    c.next_geq(pivot_doc)
-                if c.cur >= range_end:
-                    continue
-                lo = c.gpos
-                hi = lo + int(np.searchsorted(
-                    c.all_docs[lo:], range_end, side="left"))
-                cand_docs.append(c.all_docs[lo:hi])
-                cand_scores.append(
-                    c.weight * c.tp.unit_scores(k1, b, avgdl)[lo:hi])
-            for c in part:
-                if c.cur < range_end:
-                    c.next_geq(range_end)
-            if not cand_docs:
-                continue
-            alldocs = np.concatenate(cand_docs)
-            allsc = np.concatenate(cand_scores)
-            uniq, inv = np.unique(alldocs, return_inverse=True)
-            sums = np.zeros(uniq.size, dtype=np.float64)
-            np.add.at(sums, inv, allsc)
-            if len(heap) >= k:
-                # theta only rises: one vectorized prefilter against
-                # the entry threshold (ties kept — doc order decides)
-                keep = sums >= heap[0][0]
-                uniq, sums = uniq[keep], sums[keep]
-            for d, s in zip(uniq.tolist(), sums.tolist()):
-                item = (s, -d)
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-        return [(s, -nd) for s, nd in sorted(heap, reverse=True)]
-
     @staticmethod
     def _maxscore_or(cursors: list[_Cursor], k: int, k1: float, b: float,
                      avgdl: float, chunk: int = 65536):
         """Chunked vectorized MaxScore (Turtle & Flood) — the default
-        driver OR path. BMW iterates per posting/block, which fights
-        numpy; MaxScore maps onto the fully-decoded flat arrays:
+        driver OR path. Per-posting/per-block iteration (block-max
+        WAND) fights numpy; MaxScore maps onto the fully-decoded flat
+        arrays:
 
           * cursors sort by weight; the NON-ESSENTIAL prefix is the
             largest whose summed weights <= theta — a doc containing
@@ -3235,11 +2949,7 @@ class Searcher:
         skipped doc is PROVEN <= theta by the weight-prefix bound.
         Measured: the heaviest bench query's OR loop drops ~0.35 s
         (vectorized BMW) -> ~0.01-0.06 s; exhaustive-shape queries
-        degrade gracefully to one vectorized full scoring pass.
-        _wand_or stays as the block-max verification twin (parity
-        tests run both)."""
-        import heapq as _heapq
-
+        degrade gracefully to one vectorized full scoring pass."""
         cs = sorted((c for c in cursors if c.total > 0),
                     key=lambda c: c.weight)
         if not cs:
@@ -3291,7 +3001,8 @@ class Searcher:
             scores = np.zeros(cand.size)
             # score in the ORIGINAL cursor order (not weight order):
             # deterministic float summation order, bit-identical with
-            # _wand_or and the brute-force oracle even on exact ties
+            # the dense/AND routes and the brute-force oracle even on
+            # exact ties
             for c in cursors:
                 if c.total == 0:
                     continue
@@ -3310,49 +3021,11 @@ class Searcher:
             if len(heap) >= k:
                 keep = scores >= heap[0][0]
                 cand, scores = cand[keep], scores[keep]
-            if cand.size > k:
-                # exact chunk top-k incl. doc-asc tie-break: threshold
-                # by the kth score first (argpartition), lexsort only
-                # the >= -threshold survivors (tie group included) —
-                # a full lexsort of a large first chunk cost more than
-                # the scoring itself
-                thr = np.partition(scores, scores.size - k)[scores.size - k]
-                m = scores >= thr
-                cand, scores = cand[m], scores[m]
-                order = np.lexsort((cand, -scores))[:k]
-                cand, scores = cand[order], scores[order]
-            for d, sc in zip(cand.tolist(), scores.tolist()):
+            for sc, d in _exact_topk(cand, scores, k):
                 item = (sc, -d)
                 if len(heap) < k:
-                    _heapq.heappush(heap, item)
+                    heapq.heappush(heap, item)
                 elif item > heap[0]:
-                    _heapq.heapreplace(heap, item)
+                    heapq.heapreplace(heap, item)
             floor = hi_doc + 1
         return [(s, -nd) for s, nd in sorted(heap, reverse=True)]
-
-    @staticmethod
-    def _intersect_and(cursors: list[_Cursor], k: int, k1: float, b: float, avgdl: float):
-        """Vectorized intersection, rarest list drives (J4:
-        smallest-first): the rarest cursor's doc array filters through
-        each other cursor via one searchsorted membership pass — the
-        numpy shape of leapfrog — then scoring and exact top-k
-        (score desc, doc asc) are whole-array ops. Candidates never
-        exceed the rarest list's length, so memory is bounded by the
-        most selective term."""
-        if not cursors or any(c.total == 0 for c in cursors):
-            return []
-        cs = sorted(cursors, key=lambda c: c.total)
-        cand = cs[0].all_docs
-        for c in cs[1:]:
-            idx = np.searchsorted(c.all_docs, cand, side="left")
-            idx_c = np.clip(idx, 0, c.total - 1)
-            cand = cand[c.all_docs[idx_c] == cand]
-            if cand.size == 0:
-                return []
-        scores = np.zeros(cand.size)
-        # fixed summation order (the caller's sorted-term cursor list)
-        for c in cursors:
-            idx = np.searchsorted(c.all_docs, cand, side="left")
-            scores += c.weight * c.tp.unit_scores(k1, b, avgdl)[idx]
-        order = np.lexsort((cand, -scores))[:k]
-        return [(float(scores[i]), int(cand[i])) for i in order]

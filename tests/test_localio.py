@@ -6,11 +6,14 @@ indexes. The fallback stays live for non-local roots, so both paths
 are permanent and must agree forever."""
 
 import datetime
+from collections import Counter
 
+import numpy as np
 import pandas as pd
 import pytest
 
-from sparkbm25 import IndexConfig, Searcher, build_index
+from sparkbm25 import IndexConfig, Searcher, bm25_reference_topk, build_index
+from sparkbm25.analysis import tokenize_series
 from sparkbm25.fixtures import make_queries, make_transcripts
 from sparkbm25.localio import local_path
 from sparkbm25.streaming import update_index
@@ -84,6 +87,90 @@ def test_fetch_parity_multi_gen(spark, tmp_path_factory):
         b = _spark_forced(spark, root).search(qt, k=10)
         pd.testing.assert_frame_equal(a.reset_index(drop=True),
                                       b.reset_index(drop=True))
+
+
+def _two_gens(spark, root, cfg):
+    """Two update_index generations over N_TURNS turns (rows in
+    (conv_id, turn_idx) order, so doc_ords follow the reference's
+    tie-break order across generations). Returns the corpus."""
+    base = make_transcripts(N_TURNS)
+    spl = N_TURNS // 2
+    update_index(spark, spark.createDataFrame(base.iloc[:spl]), root, cfg)
+    update_index(spark, spark.createDataFrame(base.iloc[spl:]), root, cfg)
+    return base
+
+
+def _assert_ranked_like_reference(got, corpus, qt, mode):
+    exp = bm25_reference_topk(
+        corpus, pd.DataFrame({"query_id": [0], "query_text": [qt]}),
+        k=10, mode=mode)
+    assert got["conv_id"].tolist() == exp["conv_id"].tolist(), qt
+    assert got["turn_idx"].tolist() == exp["turn_idx"].tolist(), qt
+    np.testing.assert_allclose(got["score"].astype(float),
+                               exp["score"].astype(float), rtol=1e-9)
+
+
+def test_fetch_parity_multi_gen_positions(spark, tmp_path_factory):
+    """Both postings sources over two generations with positions: a
+    term's blocks and its pos stream come from both generations and
+    decode into one list. Exact and sloppy phrases, a prefix expansion
+    and an AND query answer identically through the local and Spark
+    reads, and like the reference where it applies."""
+    root = str(tmp_path_factory.mktemp("lio_gen_pos") / "index")
+    corpus = _two_gens(spark, root, IndexConfig(store_positions=True))
+    cfg = IndexConfig()
+    toks = tokenize_series(corpus["text"], cfg.token_pattern,
+                           cfg.max_content_length)
+    spl = N_TURNS // 2
+    halves = [Counter(), Counter()]
+    for i, lst in enumerate(toks):
+        halves[i >= spl].update(zip(lst, lst[1:]))
+    # the commonest distinct-word bigram that occurs in both generations
+    a, b = next(bg for bg, _ in (halves[0] + halves[1]).most_common()
+                if bg[0] != bg[1] and halves[0][bg] and halves[1][bg])
+    vocab = sorted({t for lst in toks for t in lst})
+    prefix = "w000"
+    expanded = [t for t in vocab if t.startswith(prefix)]
+    assert len(expanded) >= 2
+    cases = [(f'"{a} {b}"', "or"), (f'"{a} {b}"~2', "or"),
+             (f"{prefix}*", "or"), (f"{a} {b}", "and")]
+    first_conv = corpus["conv_id"].iloc[spl]
+    for qt, mode in cases:
+        # every hit, not only a top-k: both generations' postings show
+        s_local, s_spark = Searcher(spark, root), _spark_forced(spark, root)
+        got = s_local.search(qt, k=N_TURNS, mode=mode)
+        ref = s_spark.search(qt, k=N_TURNS, mode=mode)
+        assert s_local._local_segs is not None, qt
+        assert "batch" not in (s_local.last_path, s_spark.last_path), qt
+        assert (got["conv_id"] < first_conv).any(), qt
+        assert (got["conv_id"] >= first_conv).any(), qt
+        pd.testing.assert_frame_equal(got.reset_index(drop=True),
+                                      ref.reset_index(drop=True))
+    _assert_ranked_like_reference(
+        Searcher(spark, root).search(f"{prefix}*", k=10),
+        corpus, " ".join(expanded), "or")
+    _assert_ranked_like_reference(
+        Searcher(spark, root).search(f"{a} {b}", k=10, mode="and"),
+        corpus, f"{a} {b}", "and")
+
+
+@pytest.mark.parametrize("terms_dict", [True, False])
+def test_term_dfs_match_reference(spark, tmp_path_factory, terms_dict):
+    """Searcher.term_dfs over two generations equals the reference
+    document frequencies, with or without a terms/ table; absent
+    terms are omitted."""
+    root = str(tmp_path_factory.mktemp("lio_df") / "index")
+    corpus = _two_gens(spark, root,
+                       IndexConfig(build_terms_dict=terms_dict))
+    cfg = IndexConfig()
+    ref = Counter(t for lst in tokenize_series(
+        corpus["text"], cfg.token_pattern, cfg.max_content_length)
+        for t in set(lst))
+    terms = ["w0000", "w0001", "w0100", "w4721", "zzznotaterm"]
+    exp = {t: ref[t] for t in terms if t in ref}
+    assert "zzznotaterm" not in exp and len(exp) >= 3
+    assert Searcher(spark, root).term_dfs(terms) == exp
+    assert _spark_forced(spark, root).term_dfs(terms) == exp
 
 
 def test_doc_cache_rows_identical(spark, built):

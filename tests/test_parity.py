@@ -1,7 +1,7 @@
 """THE north_rule check (SURVEY §5.2.2): engine top-k must be
 rank-identical with scores equal to <=1e-6 vs the brute-force numpy
 reference scorer on the fixed query set, for both the batch DataFrame
-path and the driver Block-Max-WAND path, OR and AND modes."""
+path and the interactive driver path, OR and AND modes."""
 
 import numpy as np
 import pandas as pd
@@ -53,12 +53,10 @@ def test_batch_parity(spark, corpus, queries, built, mode):
 
 
 @pytest.mark.parametrize("mode", ["or", "and"])
-@pytest.mark.parametrize("algo", ["maxscore", "wand"])
-def test_driver_parity(spark, corpus, queries, built, mode, algo):
-    """Both driver OR algorithms — chunked vectorized MaxScore (the
-    default) and block-max WAND (the block-metadata twin) — must be
-    rank-identical with oracle-equal scores."""
-    searcher = Searcher(spark, built, or_algo=algo)
+def test_driver_parity(spark, corpus, queries, built, mode):
+    """The interactive driver path (MaxScore in OR mode, intersection
+    in AND mode) must be rank-identical with oracle-equal scores."""
+    searcher = Searcher(spark, built)
     exp = bm25_reference_topk(corpus, queries, k=10, mode=mode)
     for q in queries.itertuples(index=False):
         got = searcher.search(q.query_text, k=10, mode=mode)

@@ -407,3 +407,35 @@ def test_complete_build_drops_runs_checkpoint(spark, corpus_df, tmp_path):
     for g in gens:
         assert os.path.exists(f"{g}/_COMPLETE")
         assert not os.path.exists(f"{g}/tf")
+
+
+@pytest.mark.parametrize("checkpoint_runs", [True, False])
+def test_zero_token_corpus_builds(spark, tmp_path, checkpoint_runs):
+    """Docs that yield no tokens at all (null and punctuation-only
+    text) leave tf/ and segments/ without a single parquet file: the
+    build still completes, every term query answers empty on the
+    driver (local and Spark reads) and batch paths, and resume=True on
+    the result does no work."""
+    from sparkbm25 import Searcher
+
+    pdf = pd.DataFrame({"conv_id": ["c0", "c0"], "turn_idx": [0, 1],
+                        "role": ["user", "assistant"],
+                        "text": [None, "!!!"]})
+    sdf = spark.createDataFrame(
+        pdf, "conv_id string, turn_idx int, role string, text string")
+    d = str(tmp_path / "idx")
+    cfg = IndexConfig(checkpoint_runs=checkpoint_runs)
+    res = build_index(spark, sdf, d, cfg, input_desc="z")
+    assert res.n_docs == 2
+    queries = ["w0001", "alpha beta", "alpha AND beta", "alp*"]
+    s_spark = Searcher(spark, d)
+    s_spark._local_segs = s_spark._local_docs = None
+    for s in (Searcher(spark, d), s_spark):
+        for qt in queries:
+            assert s.search(qt, k=5).empty, qt
+    q = pd.DataFrame({"query_id": range(len(queries)),
+                      "query_text": queries, "k": 5})
+    assert search_batch(spark, d, q, k=5).toPandas().empty
+    m1 = read_manifest(d)
+    build_index(spark, sdf, d, cfg, resume=True, input_desc="z")
+    assert len(read_manifest(d)) == len(m1)  # no stage ran again

@@ -52,7 +52,8 @@ def test_generations_match_single_shot(spark, corpus, tmp_path):
     np.testing.assert_allclose(a["score"].astype(float),
                                b["score"].astype(float), rtol=1e-9)
 
-    # WAND path over generations (block-max inflation must stay lossless)
+    # the interactive driver path over generations: postings of both
+    # generations decode into one list per term
     s_mono, s_incr = Searcher(spark, mono), Searcher(spark, root)
     for qt in q["query_text"]:
         ga = s_mono.search(qt, k=10)
@@ -171,9 +172,8 @@ def test_worker_progress_stateful_stream(spark, tmp_path):
 
 def test_compact_generations_parity(spark, corpus, tmp_path):
     """Compaction (forceMerge analog) folds generations into one root:
-    batch AND WAND answers are identical to the multi-generation index,
-    and the compacted block maxima are exact under the global avgdl (no
-    inflation slack left for WAND to carry)."""
+    batch and driver answers are identical to the multi-generation
+    index."""
     from sparkbm25.compact import compact_index
 
     first, second = corpus
