@@ -207,7 +207,9 @@ def read_docs(spark, index_root: str):
     """Union the forward tables of all generations. Each generation's
     docs dir is its own doc_block-partitioned parquet root, so a single
     multi-path read would see conflicting partition structures (same
-    reason search._read_segments unions segment roots)."""
+    reason search._read_segments unions segment roots). A generation
+    without some attribute column (its input had none) reads it as
+    NULL."""
     paths = docs_paths(index_root)
     if not paths:
         # same guard as global_stats — a wrong --index path previously
@@ -216,7 +218,7 @@ def read_docs(spark, index_root: str):
     dfs = [spark.read.parquet(p) for p in paths]
     out = dfs[0]
     for d in dfs[1:]:
-        out = out.unionByName(d.select(out.columns))
+        out = out.unionByName(d, allowMissingColumns=True)
     return out
 
 

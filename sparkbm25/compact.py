@@ -33,6 +33,7 @@ from sparkbm25 import catalog
 from sparkbm25.build import BuildResult, _mrow, segment_schema, term_bucket_col
 from sparkbm25.codec import varint_decode
 from sparkbm25.config import IndexConfig
+from sparkbm25.search import _read_segments
 
 
 def _make_remax(k1: float, b: float, avgdl: float):
@@ -107,11 +108,10 @@ def compact_index(spark: SparkSession, index_root: str, out_dir: str) -> BuildRe
 
     # --- segments: union + re-max under the global avgdl -------------
     s0 = time.time()
-    seg_paths = catalog.segments_paths(index_root)
-    segs = spark.read.parquet(seg_paths[0])
-    for p in seg_paths[1:]:
-        segs = segs.unionByName(spark.read.parquet(p).select(segs.columns))
+    # each generation read with the known schema: a generation whose
+    # turns yield no tokens has no segment file to infer one from
     with_pos = cfg.store_positions
+    segs = _read_segments(spark, index_root, with_pos)
     # drop the partition column before the Arrow stage (mapInArrow
     # binds by position; re-derive the bucket from the term after)
     no_bucket_schema = segment_schema(with_pos).split(", ", 1)[1]
@@ -133,7 +133,8 @@ def compact_index(spark: SparkSession, index_root: str, out_dir: str) -> BuildRe
     # --- terms dictionary + stats -------------------------------------
     if cfg.build_terms_dict:
         t1 = time.time()
-        seg_new = spark.read.parquet(catalog.segments_dir(out_dir))
+        seg_new = spark.read.schema(segment_schema(with_pos)).parquet(
+            catalog.segments_dir(out_dir))
         # same sorted-with-length layout as build.py stage 3, so the
         # compacted generation keeps prefix/fuzzy band pruning
         terms = (seg_new.groupBy("term").agg(

@@ -322,10 +322,10 @@ def _is_filterish(n: "Node") -> bool:
 
 def _match_all() -> And:
     """The MatchAll sentinel: an EMPTY And. The mask evaluator
-    (search._compile_queries make_accept/eval_empty) folds it to TRUE
-    and collect_leaves yields nothing for it, which is exactly the
-    Lucene SHOULD-under-MUST shape: no candidate gate, leaves still
-    score. A fresh instance per use (dataclass lists are mutable)."""
+    (search._eval_accept) folds it to TRUE and collect_leaves yields
+    nothing for it, which is exactly the Lucene SHOULD-under-MUST
+    shape: no candidate gate, leaves still score. A fresh instance per
+    use (dataclass lists are mutable)."""
     return And([])
 
 _PREFIX_RE = re.compile(r"^([^\s*]+)\*$")

@@ -5,11 +5,13 @@ The capability the reference delegates to Elasticsearch with
 es_translator.py:313-323) — analyzed full-text retrieval with BM25
 ranking — implemented natively:
 
-  * batch path (`search_batch`): the whole query set as one DataFrame
-    job — query terms broadcast-joined to the term dictionary and the
-    pruned segment scan, blocks decoded + scored in a vectorized Arrow
-    stage, per-partition partial top-k, then a final window. This is
-    the path the DuckDB oracle checks.
+  * batch path (`search_batch`): the whole query set as one Spark job
+    partitioned by doc-ord range — the pruned segment scan of the batch
+    terms, its block lists cut at the range boundaries, plus forward
+    rows carrying one bit per structured predicate, meet in one Arrow
+    kernel per range that decodes, scores, applies the boolean trees,
+    filters and phrase checks and emits each query's exact top k; the
+    driver merges those. This is the path the DuckDB oracle checks.
   * interactive path (`Searcher.search`): one query on the driver over
     batch-decoded flat posting arrays — chunked vectorized MaxScore
     or an exhaustive dense scatter (OR mode), vectorized intersection
@@ -34,13 +36,12 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkbm25 import catalog, localio
 from sparkbm25.analysis import tokenize_one
 from sparkbm25.build import segment_schema
-from sparkbm25.codec import decode_blocks
 from sparkbm25.config import IndexConfig
 from sparkbm25.querystring import filter_columns as qs_filter_columns
 
@@ -57,8 +58,10 @@ def _read_segment_root(spark: SparkSession, path: str,
                        with_pos: bool) -> DataFrame:
     """One generation's segment table, read with its known schema (an
     index whose docs yield no tokens has no segment file to infer
-    one from)."""
-    return spark.read.schema(segment_schema(with_pos)).parquet(path)
+    one from) and only its columns (a zero-token generation has no
+    `chunk` partition directory either)."""
+    return (spark.read.schema(segment_schema(with_pos)).parquet(path)
+            .select("term_bucket", "term", "salt", "n_docs", "blocks"))
 
 
 def _read_segments(spark: SparkSession, index_dir: str,
@@ -76,33 +79,48 @@ def _read_segments(spark: SparkSession, index_dir: str,
 
 class _QueryPlan:
     """One query's compiled form: slot-numbered leaves + an acceptance
-    function over the per-doc matched-leaf bitmask."""
+    tree over the per-doc matched-leaf bitmask."""
 
     __slots__ = ("qid", "k", "filters", "neg_filters", "leaves", "accept",
-                 "accept_empty", "accept_trivial")
+                 "accept_empty")
 
-    def __init__(self, qid, k, filters, neg_filters, leaves, accept,
-                 accept_empty=False, accept_trivial=False):
+    def __init__(self, qid, k, filters, neg_filters, leaves, accept):
         self.qid = qid
         self.k = k
         self.filters = filters
         self.neg_filters = neg_filters
         self.leaves = leaves      # list of dicts: slot/kind/terms/weight
-        self.accept = accept      # mask Column -> Column(bool), or None
-        # the boolean tree evaluated at the EMPTY mask: True means a doc
+        # nested tuples ("t", slot) / ("not", x) / ("and"|"or", (xs)) —
+        # plain data, so the plan pickles into the batch kernel
+        self.accept = accept
+        # the tree evaluated at the EMPTY mask: True means a doc
         # matching no leaf at all is accepted (pure-negative trees like
         # 'NOT spam') — such docs have no posting rows and must come
         # from the forward table instead (ES/Lucene semantics)
-        self.accept_empty = accept_empty
-        # accept is PROVABLY true for every emitted posting row (the
-        # implicit-OR `mask != 0` — every row matched >= 1 leaf by
-        # construction): lets the batch path skip the mask machinery
-        # entirely for plain disjunctions
-        self.accept_trivial = accept_trivial
+        self.accept_empty = (accept is not None and bool(
+            _eval_accept(accept, np.zeros(1, dtype=np.int64))[0]))
 
     @property
     def has_positive(self) -> bool:
         return any(l["weight"] > 0.0 for l in self.leaves)
+
+
+def _eval_accept(node, m: np.ndarray) -> np.ndarray:
+    """The acceptance tree over an int64 array of matched-leaf masks ->
+    bool array. An empty AND (querystring's MatchAll sentinel) is TRUE
+    and an empty OR is FALSE."""
+    op = node[0]
+    if op == "t":
+        return (m & (1 << node[1])) != 0
+    if op == "not":
+        return ~_eval_accept(node[1], m)
+    out = np.full(m.shape, op == "and")
+    for c in node[1]:
+        if op == "and":
+            out &= _eval_accept(c, m)
+        else:
+            out |= _eval_accept(c, m)
+    return out
 
 
 def _compile_queries(queries: pd.DataFrame, cfg: IndexConfig, mode: str,
@@ -117,17 +135,17 @@ def _compile_queries(queries: pd.DataFrame, cfg: IndexConfig, mode: str,
     0 and only set their mask bit)."""
     from sparkbm25 import querystring as qs
 
-    def eval_empty(n) -> bool:
-        """The boolean tree at the empty mask (no leaf matched)."""
-        if isinstance(n, (qs.Term, qs.Phrase, qs.Prefix, qs.Fuzzy,
-                          qs.Wildcard, qs.Regexp)):
-            return False
+    leaf_types = (qs.Term, qs.Phrase, qs.Prefix, qs.Fuzzy, qs.Wildcard,
+                  qs.Regexp)
+
+    def tree_of(n, slot_map):
+        if isinstance(n, leaf_types):
+            return ("t", slot_map[id(n)])
         if isinstance(n, qs.Not):
-            return not eval_empty(n.child)
-        if isinstance(n, qs.And):
-            return all(eval_empty(c) for c in n.children)
-        if isinstance(n, qs.Or):
-            return any(eval_empty(c) for c in n.children)
+            return ("not", tree_of(n.child, slot_map))
+        if isinstance(n, (qs.And, qs.Or)):
+            return ("and" if isinstance(n, qs.And) else "or",
+                    tuple(tree_of(c, slot_map) for c in n.children))
         raise TypeError(type(n))
 
     plans: list[_QueryPlan] = []
@@ -135,25 +153,15 @@ def _compile_queries(queries: pd.DataFrame, cfg: IndexConfig, mode: str,
         qid = int(q.query_id)
         k = int(getattr(q, "k", default_k) or default_k)
         parsed = qs.parse_query_string(q.query_text, cfg.token_pattern)
-        accept_empty = False
-        accept_trivial = False
         leaves: list[dict] = []
         if not parsed.explicit:
             counts = Counter(tokenize_one(parsed.text, cfg.token_pattern))
             for term, qtf in sorted(counts.items()):
                 leaves.append({"slot": len(leaves), "kind": "term",
                                "terms": [term], "weight": float(qtf)})
-            nslots = len(leaves)
-            if mode == "and":
-                full = (1 << nslots) - 1
-                accept = (lambda m, full=full:
-                          m.bitwiseAND(F.lit(full)) == F.lit(full))
-            else:
-                accept = (lambda m: m != 0)
-                # every posting row matched >= 1 leaf by construction
-                accept_trivial = nslots > 0
-            if nslots == 0:
-                accept = None
+            accept = (("and" if mode == "and" else "or",
+                       tuple(("t", s) for s in range(len(leaves))))
+                      if leaves else None)
         else:
             pos, neg = qs.collect_leaves(parsed.tree)
             slot_of: dict[int, int] = {}
@@ -201,40 +209,12 @@ def _compile_queries(queries: pd.DataFrame, cfg: IndexConfig, mode: str,
                 raise ValueError(
                     f"query {qid}: pure-negative queries need a positive "
                     "clause or a structured predicate (Lucene semantics)")
-            accept_empty = (eval_empty(parsed.tree)
-                            if parsed.tree is not None else False)
-
-            def make_accept(tree, slot_map):
-                def bit(m, s):
-                    return m.bitwiseAND(F.lit(1 << s)) != 0
-
-                def walk(n, m):
-                    if isinstance(n, (qs.Term, qs.Phrase, qs.Prefix,
-                                      qs.Fuzzy, qs.Wildcard, qs.Regexp)):
-                        return bit(m, slot_map[id(n)])
-                    if isinstance(n, qs.Not):
-                        return ~walk(n.child, m)
-                    if isinstance(n, qs.And):
-                        out = F.lit(True)
-                        for c in n.children:
-                            out = out & walk(c, m)
-                        return out
-                    if isinstance(n, qs.Or):
-                        out = F.lit(False)
-                        for c in n.children:
-                            out = out | walk(c, m)
-                        return out
-                    raise TypeError(type(n))
-
-                return lambda m: walk(tree, m)
-
-            accept = (make_accept(parsed.tree, slot_of)
+            accept = (tree_of(parsed.tree, slot_of)
                       if parsed.tree is not None else None)
         if len(leaves) > 62:
             raise ValueError(f"query {qid}: more than 62 leaves")
         plans.append(_QueryPlan(qid, k, parsed.filters, parsed.neg_filters,
-                                leaves, accept, accept_empty,
-                                accept_trivial))
+                                leaves, accept))
     return plans
 
 
@@ -816,101 +796,294 @@ def _flatten_cnf(tree):
     return ([g], []) if g is not None else None
 
 
-def _plans_to_rows(plans: list[_QueryPlan]) -> pd.DataFrame:
-    """Leaf/term rows for the broadcast join:
-    (query_id, term, slot, tidx, weight, is_phrase, n_terms, slop, k)."""
-    rows = []
+# Doc-ord ranges of search_batch: one range per core, more once a range
+# would exceed this many docs (it sizes the kernel's dense arrays)
+_MAX_RANGE_DOCS = 1 << 20
+
+
+def _range_layout(n_docs: int, parallelism: int) -> tuple[int, int]:
+    """(number of ranges, range width) of search_batch's doc-ord split:
+    range r holds doc_ords [r*width, (r+1)*width)."""
+    nr = max(1, min(n_docs, max(parallelism, -(-n_docs // _MAX_RANGE_DOCS))))
+    return nr, -(-n_docs // nr)
+
+
+def _block_ends(vals, loff: np.ndarray) -> np.ndarray:
+    """Last doc_ord (an upper bound for all but a row's last block) of
+    every block of a flattened segment-row block list: block i ends
+    before the next block's first_doc; a row's last block ends at its
+    first_doc plus the sum of its gaps, decoded in one varint pass over
+    the last blocks only."""
+    from sparkbm25.codec import varint_decode
+
+    fd = vals.field("first_doc").to_numpy(zero_copy_only=False)
+    ends = np.empty(fd.size, dtype=np.int64)
+    ends[:-1] = fd[1:] - 1
+    last = loff[1:][loff[1:] > loff[:-1]] - 1
+    coff, cdata = _binary_child(vals.field("gaps"))
+    gaps = varint_decode(
+        _gather_ranges(cdata, coff[last], coff[last + 1] - coff[last]),
+        dtype=np.int64)
+    cnt = vals.field("n").to_numpy(zero_copy_only=False)[last] - 1
+    cs = np.zeros(gaps.size + 1, dtype=np.int64)
+    np.cumsum(gaps, out=cs[1:])
+    bnd = np.zeros(last.size + 1, dtype=np.int64)
+    np.cumsum(cnt, out=bnd[1:])
+    ends[last] = fd[last] + cs[bnd[1:]] - cs[bnd[:-1]]
+    return ends
+
+
+def _cut_at_ranges(width: int):
+    """Scan-side Arrow step of search_batch: cut each (term, blocks)
+    segment row's block list at the doc-ord range boundaries ->
+    (range_id, term, blocks). A block spanning a boundary goes to every
+    range it overlaps; the kernel keeps each range's own docs."""
+
+    def cut(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            blocks = rb.column(rb.schema.get_field_index("blocks"))
+            loff = np.frombuffer(blocks.buffers()[1], dtype=np.int32,
+                                 count=len(blocks) + 1,
+                                 offset=blocks.offset * 4).astype(np.int64)
+            loff = loff - loff[0]
+            if loff[-1] == 0:
+                continue
+            vals = blocks.flatten()
+            fd = vals.field("first_doc").to_numpy(zero_copy_only=False)
+            r0 = fd // width
+            nrep = _block_ends(vals, loff) // width - r0 + 1
+            total = int(nrep.sum())
+            blk = np.repeat(np.arange(fd.size), nrep)
+            rid = (np.repeat(r0 - np.cumsum(nrep) + nrep, nrep)
+                   + np.arange(total))
+            row = np.repeat(np.arange(len(blocks)), np.diff(loff))[blk]
+            starts = np.flatnonzero(np.r_[True, (row[1:] != row[:-1])
+                                          | (rid[1:] != rid[:-1])])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(rid[starts], type=pa.int32()),
+                 rb.column(rb.schema.get_field_index("term")).take(
+                     pa.array(row[starts])),
+                 pa.ListArray.from_arrays(
+                     pa.array(np.r_[starts, total], type=pa.int32()),
+                     vals.take(pa.array(blk)))],
+                names=["range_id", "term", "blocks"])
+
+    return cut
+
+
+def _range_kernel(qplans: list[dict], idfs: dict[str, float], width: int,
+                  nwords: int, k1: float, b: float, avgdl: float):
+    """mapInArrow kernel of search_batch: every row of one doc-ord range
+    (the range's cut blocks of every batch term, plus forward rows
+    (doc_ord, fbits) when the batch has structured predicates) meets in
+    one task, which scores the whole batch over the range and emits
+    each query's exact top k of the range as (query_id, doc_ord,
+    score).
+
+    Per-task memory: the partition's compressed rows, the decoded
+    postings of ONE range at a time (its blocks of every batch term,
+    boundary blocks whole), and two dense arrays of range width (score
+    float64, matched-leaf mask int64) for the query being scored.
+
+    Scores are bit-identical to the reference's term-order sum: a
+    doc's contributions add from 0.0 in sorted term order (several
+    leaves on one term in ascending score order), each contribution
+    the expression `weight * idf * (k1 + 1.0) * tfs / denom`, and a
+    verified phrase adds after every term, in slot order."""
+
+    def score_range(lo, post, fdoc, fwords):
+        import pyarrow as pa
+
+        hi = lo + width
+        terms: dict[str, tuple] = {}
+        if post.num_rows:
+            tb = pa.table({"term": post.column("term"),
+                           "n_docs": np.zeros(post.num_rows, np.int64),
+                           "blocks": post.column("blocks")})
+            for t, (_nd, firsts, ns, streams) in (
+                    _term_streams_from_arrow(tb).items()):
+                tp = _TermPostings.from_streams(firsts, ns, streams)
+                a, e = np.searchsorted(tp.all_docs, [lo, hi])
+                if e > a:
+                    tfs = tp.all_tfs[a:e]
+                    denom = tfs + k1 * (1.0 - b + b * (tp.all_dls[a:e]
+                                                       / avgdl))
+                    terms[t] = (tp.all_docs[a:e] - lo, tfs, denom,
+                                idfs[t], tp, a)
+        fcache: dict[int, np.ndarray] = {}
+
+        def fdocs(bit):
+            if bit not in fcache:
+                on = (fwords[:, bit // 63] >> (bit % 63)) & 1
+                fcache[bit] = np.sort(fdoc[on.astype(bool)]) - lo
+            return fcache[bit]
+
+        out_q, out_d, out_s = [], [], []
+        for qp in qplans:
+            if qp["leaves"]:
+                score = np.zeros(width, dtype=np.float64)
+                mask = np.zeros(width, dtype=np.int64)
+                for t, refs in qp["groups"]:
+                    got = terms.get(t)
+                    if got is None:
+                        continue
+                    d, tfs, denom, idf = got[:4]
+                    for _w, slot in refs:
+                        mask[d] |= 1 << slot
+                    ws = [w * idf * (k1 + 1.0) * tfs / denom
+                          for w, _slot in refs if w != 0.0]
+                    if len(ws) > 1:
+                        ws = np.sort(np.stack(ws), axis=0)
+                    for w in ws:
+                        score[d] += w
+                for slot, weight, pterms, slop in qp["phrases"]:
+                    hit = _phrase_hits([terms.get(t) for t in pterms],
+                                       weight, slop, k1)
+                    if hit is not None:
+                        score[hit[0]] += hit[1]
+                        mask[hit[0]] |= 1 << slot
+            if qp["const"] or qp["accept_empty"]:
+                cand = fdocs(qp["fbit"])
+            else:
+                cand = np.flatnonzero(mask)
+                if qp["fbit"] is not None:
+                    cand = cand[np.isin(cand, fdocs(qp["fbit"]),
+                                        assume_unique=True)]
+            if qp["accept"] is not None:
+                cand = cand[_eval_accept(qp["accept"], mask[cand])]
+            if qp["const"]:
+                # constant score 1.0 (filter context): first k docs
+                top_d = cand[:qp["k"]] + lo
+                top_s = np.ones(top_d.size)
+            else:
+                top = _exact_topk(cand + lo, score[cand], qp["k"])
+                top_s = np.array([s for s, _d in top], dtype=np.float64)
+                top_d = np.array([d for _s, d in top], dtype=np.int64)
+            out_q.append(np.full(top_d.size, qp["qid"], dtype=np.int32))
+            out_d.append(top_d)
+            out_s.append(top_s)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.concatenate(out_q), type=pa.int32()),
+             pa.array(np.concatenate(out_d), type=pa.int64()),
+             pa.array(np.concatenate(out_s), type=pa.float64())],
+            names=["query_id", "doc_ord", "score"])
+
+    def run(batches):
+        import pyarrow as pa
+
+        batches = [rb for rb in batches if rb.num_rows]
+        if not batches:
+            return
+        tb = pa.Table.from_batches(batches)
+        rid = tb.column("range_id").to_numpy()
+        is_post = tb.column("term").is_valid().to_numpy(zero_copy_only=False)
+        for r in np.unique(rid).tolist():
+            rows = np.flatnonzero(rid == r)
+            fwd = tb.take(pa.array(rows[~is_post[rows]]))
+            fdoc = fwd.column("doc_ord").to_numpy()
+            fwords = (fwd.column("fbits").combine_chunks().flatten()
+                      .to_numpy(zero_copy_only=False)
+                      .reshape(fdoc.size, nwords))
+            post = tb.take(pa.array(rows[is_post[rows]]))
+            yield score_range(r * width, post, fdoc, fwords)
+
+    return run
+
+
+def _phrase_hits(parts: list, weight: float, slop: int, k1: float):
+    """(range-relative docs, phrase scores) of one phrase leaf over a
+    range, or None. parts[i] is phrase term i's range entry (docs,
+    tfs, denom, idf, postings, offset) or None when the term has no
+    posting in the range. Candidates are the docs holding every
+    term; positions verify through _verify_phrase_sets and the score
+    is the per-term sum in phrase order."""
+    if any(p is None for p in parts):
+        return None
+    surv = parts[0][0]
+    for p in parts[1:]:
+        surv = np.intersect1d(surv, p[0], assume_unique=True)
+    if surv.size == 0:
+        return None
+    m = len(parts)
+    slot_csr, ws = [], []
+    for i, (d, tfs, denom, idf, tp, a) in enumerate(parts):
+        j = np.searchsorted(d, surv)
+        flat, offs = tp.positions_csr(a + j)
+        slot_csr.append((flat - i, offs))
+        ws.append(weight * idf * (k1 + 1.0) * tfs[j] / denom[j])
+    # the repeated-TERM case matters for the sloppy kernel: two slots of
+    # the same term share raw positions, and one token must not fill
+    # both ('"foo bar foo"~2'). Identical raw streams <=> same term: one
+    # doc position holds one token.
+    repeated = False
+    if slop > 0 and m >= 2:
+        raws = [slot_csr[s][0] + s for s in range(m)]
+        repeated = any(
+            raws[i].size == raws[j].size
+            and bool(np.array_equal(raws[i], raws[j]))
+            for i in range(m) for j in range(i + 1, m))
+    keep = _verify_phrase_sets(slot_csr, np.arange(m), slop, repeated)
+    if not keep.any():
+        return None
+    return surv[keep], np.stack(ws).sum(axis=0)[keep]
+
+
+def _kernel_plans(plans: list[_QueryPlan], pred_bit: dict) -> list[dict]:
+    """The per-query data the range kernel needs, as plain picklable
+    values: term leaves grouped by term in sorted order (the summation
+    order), phrase leaves in slot order, acceptance, filter bit."""
+    out = []
     for p in plans:
-        for leaf in p.leaves:
-            for tidx, term in enumerate(leaf["terms"]):
-                rows.append((p.qid, term, leaf["slot"], tidx, leaf["weight"],
-                             leaf["kind"] == "phrase", len(leaf["terms"]),
-                             int(leaf.get("slop", 0)), p.k))
-    return pd.DataFrame(rows, columns=[
-        "query_id", "term", "slot", "tidx", "weight", "is_phrase",
-        "n_terms", "slop", "k"])
+        if not p.leaves and not (p.filters or p.neg_filters):
+            continue
+        groups: dict[str, list] = {}
+        phrases = []
+        for l in p.leaves:
+            if l["kind"] == "phrase":
+                phrases.append((l["slot"], l["weight"], list(l["terms"]),
+                                int(l["slop"])))
+                continue
+            for t in l["terms"]:
+                groups.setdefault(t, []).append((l["weight"], l["slot"]))
+        out.append({
+            "qid": int(p.qid), "k": int(p.k), "leaves": bool(p.leaves),
+            "const": not p.has_positive, "accept": p.accept,
+            "accept_empty": p.accept_empty,
+            "fbit": pred_bit.get(_pred_key(p)),
+            "groups": sorted(groups.items()), "phrases": phrases})
+    return out
 
 
-def _term_order_rollup(rows: DataFrame, with_mask: bool) -> DataFrame:
-    """Doc-level rollup of leaf rows (query_id, doc_ord, [slot,] tord,
-    score) -> (query_id, doc_ord, score[, mask]) in ONE shuffle.
-
-    score is a running sum over each (query_id, doc_ord) group sorted by
-    (tord, score), read at the group's last row: Spark adds a running
-    frame's rows one at a time from 0.0, so this is the sequential
-    term-order sum _scored_rows needs, all in the JVM. mask is the
-    bit_or of 1 << slot, NOT a sum: a doc matching several expansions
-    of one prefix leaf has several rows with the same slot, and summing
-    would carry into other bits."""
-    w = Window.partitionBy("query_id", "doc_ord").orderBy("tord", "score")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cols = [F.sum("score").over(run).alias("score")]
-    if with_mask:
-        cols.append(F.expr("bit_or(shiftleft(cast(1 as bigint), slot))")
-                    .over(run).alias("mask"))
-    return (rows.select("query_id", "doc_ord", *cols,
-                        F.lead("tord").over(w).isNull().alias("_last"))
-            .where("_last").drop("_last"))
+def _pred_key(p: _QueryPlan) -> str:
+    return repr((p.filters, p.neg_filters))
 
 
-def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
-                 cfg: IndexConfig, n_docs: int, avgdl: float,
-                 lean: bool = False,
-                 single_leaf_k: dict[int, int] | None = None) -> DataFrame:
-    """The posting-derived scoring pipeline: pruned segment scan →
-    vectorized block decode + BM25 (plan and idf ride one broadcast) →
-    (phrase verification) → per-(query, doc) rollup. Returns
-    (query_id, doc_ord, score, mask) — every doc matching >=1 leaf.
+def _needs_pred(p: _QueryPlan) -> bool:
+    """Whether the query reads its structured predicate's doc set:
+    filtered queries, constant-score queries and trees that accept a
+    doc matching no leaf (their candidates are every doc the predicate
+    passes, TRUE when there is none)."""
+    return bool(p.filters or p.neg_filters) or (
+        bool(p.leaves) and (not p.has_positive or p.accept_empty))
 
-    lean=True (no phrase leaves, no caller use of the mask — plain
-    disjunction batches): the kernel emits only (query_id, doc_ord,
-    tord, score) and the rollup skips the bit_or — ~30% fewer bytes
-    across the Python boundary and through the one exchange, score
-    values bitwise identical (same rows, same summation order).
 
-    The rollup sums a doc's contributions in ascending term order
-    (tord = the term's rank among the batch's sorted terms), starting
-    from 0.0 — the order bm25_reference_topk and Searcher use. A plain
-    sum would add them in whatever order the shuffle delivers, so two
-    exactly tied docs could come out one ulp apart and lose the
-    (conv_id, turn_idx) tie-break."""
-    any_phrase = bool(qp["is_phrase"].any())
-    if any_phrase and not cfg.store_positions:
-        raise ValueError(
-            "phrase queries need an index built with "
-            "IndexConfig(store_positions=True)")
-
-    uniq_terms = sorted(qp["term"].unique().tolist())
-    # client-side routing: term -> bucket is a pure hash (ES _routing
-    # analog) — NO dictionary scan; df comes from the segment rows
-    # themselves (sum of per-salt n_docs via a tiny window).
-    buckets = sorted({cfg.term_bucket_of(t) for t in uniq_terms})
-
-    pruned_segs = (
-        _read_segments(spark, index_dir, cfg.store_positions)
-        .where(F.col("term_bucket").isin(buckets))     # partition pruning
-        .where(F.col("term").isin(uniq_terms))         # rowgroup pushdown
-    )
-    # df per term: for a LOCAL index root, ONE column-pruned pyarrow
-    # read of (term, n_docs) on the driver — the ES-coordinator shape
-    # (term stats come from shard metadata, not from a cluster job) —
-    # and idf ships to the decode kernels inside the same broadcast as
-    # the plan; the blocks column then flows scan → decode with no
-    # join node at all. Non-local roots keep the round-5 shape: a
-    # NARROW aggregate broadcast back to the scan — NOT a
-    # Window.partitionBy(term) over the segment rows, whose exchange
-    # would shuffle the blocks payload itself (round-2 did; at 960k
-    # turns that one exchange made a 1-query batch cost the same ~7s
-    # as a 10-query batch). The agg subplan reads only (term, n_docs)
-    # — parquet column pruning keeps the blocks bytes out.
-    idf_map: dict[str, float] | None = None
+def _idf_map(spark: SparkSession, index_dir: str, pruned_segs: DataFrame,
+             terms: list[str], buckets: list[int],
+             n_docs: int) -> dict[str, float]:
+    """idf per batch term from the summed per-row n_docs: one
+    column-pruned pyarrow read on the driver for a local root (the
+    ES-coordinator shape: term stats come from shard metadata, not
+    from a cluster job), else the narrow (term, n_docs) aggregate
+    collected — parquet column pruning keeps the blocks bytes out."""
     seg_roots = [localio.local_path(p)
                  for p in catalog.segments_paths(index_dir)]
+    df_by_term: dict[str, int] = {}
     if all(r is not None for r in seg_roots):
         import pyarrow.compute as pc
 
-        df_by_term: dict[str, int] = {}
-        filt = pc.field("term").isin(uniq_terms)
+        filt = pc.field("term").isin(terms)
         for root in seg_roots:
             ix = localio.LocalParquetIndex(root, "term_bucket")
             tb = ix.read(buckets, ["term", "n_docs"], filter=filt)
@@ -919,288 +1092,100 @@ def _scored_rows(spark: SparkSession, index_dir: str, qp: pd.DataFrame,
             for t, nd in zip(tb.column("term").to_pylist(),
                              tb.column("n_docs").to_pylist()):
                 df_by_term[t] = df_by_term.get(t, 0) + int(nd)
-        idf_map = {
-            t: float(np.log(1.0 + (float(n_docs) - df + 0.5) / (df + 0.5)))
+    else:
+        for r in (pruned_segs.groupBy("term")
+                  .agg(F.sum("n_docs").alias("df")).collect()):
+            df_by_term[r["term"]] = int(r["df"])
+    return {t: float(np.log(1.0 + (float(n_docs) - df + 0.5) / (df + 0.5)))
             for t, df in df_by_term.items()}
-        dfs = None
-    else:
-        dfs = (
-            pruned_segs.groupBy("term")
-            .agg(F.sum("n_docs").alias("df"))
-            .withColumn(
-                "idf",
-                F.log(1.0 + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-            )
-            .select("term", "idf")
-        )
-    # one (term -> leaf list) map broadcast to the decode kernels: the
-    # round-5 plan joined qdf onto the segment rows BEFORE the decode,
-    # so a term referenced by L query leaves shipped its blocks bytes
-    # through Arrow L times and decoded them L times (the bench set's
-    # hot terms appear in 2-3 queries each — measured ~25%% of the
-    # whole-batch decode stage wasted on duplicate decodes). Now the
-    # scan stays one row per segment row, each row decodes ONCE, and
-    # the kernel fans the decoded arrays out per leaf from the
-    # broadcast map. Leaf rows emit in qp order per segment row; the
-    # per-leaf float expression is kept verbatim, so every emitted
-    # score is bitwise identical to the joined plan's.
-    leaf_map: dict[str, list[tuple]] = {}
-    for row in qp.itertuples(index=False):
-        leaf_map.setdefault(row.term, []).append(
-            (int(row.query_id), int(row.slot), int(row.tidx),
-             float(row.weight), bool(row.is_phrase), int(row.n_terms),
-             int(row.slop)))
-    leaf_bc = spark.sparkContext.broadcast((leaf_map, idf_map))
 
-    hits = pruned_segs.select("term", "blocks")
-    if dfs is not None:
-        hits = hits.join(F.broadcast(dfs), "term")
 
-    k1, b = cfg.k1, cfg.b
+def _ranged_topk(spark: SparkSession, index_dir: str, docs: DataFrame,
+                 plans: list[_QueryPlan], cfg: IndexConfig, n_docs: int,
+                 avgdl: float) -> pd.DataFrame:
+    """Per-range exact top-k rows (query_id, doc_ord, score) of the
+    whole batch, from ONE Spark job: the pruned segment scan of the
+    batch terms, cut at doc-ord range boundaries, and (when the batch
+    has structured predicates or constant-score queries) the forward
+    rows (doc_ord, fbits) — one bit per distinct predicate, evaluated
+    by Catalyst — are unioned, partitioned by range and scored by
+    _range_kernel."""
+    from sparkbm25.querystring import filter_condition
 
-    lean_cols = ("query_id", "doc_ord", "tord", "score")
-    full_cols = ("query_id", "doc_ord", "slot", "tidx", "n_terms",
-                 "tord", "score", "is_phrase")
-    slk = single_leaf_k if lean else None
+    any_phrase = any(l["kind"] == "phrase" for p in plans for l in p.leaves)
+    if any_phrase and not cfg.store_positions:
+        raise ValueError(
+            "phrase queries need an index built with "
+            "IndexConfig(store_positions=True)")
+    nr, width = _range_layout(n_docs, spark.sparkContext.defaultParallelism)
+    blocks_type = segment_schema(any_phrase).split("blocks ", 1)[1]
+    legs = []
 
-    def decode_score(batches):
-        lm, idfs = leaf_bc.value
-        tords = {t: i for i, t in enumerate(sorted(lm))}
-        cols = lean_cols if lean else full_cols
-        # single-leaf (unfiltered) queries: a doc's whole score is ONE
-        # contribution from one block row, so a per-partition exact
-        # top-k is a valid pre-reduction regardless of file layout —
-        # these queries then ship k rows per partition through the
-        # rollup/reduce instead of millions (the hot single-term bench
-        # queries were ~1/3 of the sf1 rollup volume)
-        single: dict[int, list] = {}
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for row in pdf.itertuples(index=False):
-                leaves = lm.get(row.term)
-                if not leaves:
-                    continue
-                docs, tfs, dls = decode_blocks(row.blocks)
-                if docs.size == 0:
-                    continue
-                idf = idfs[row.term] if idfs is not None else row.idf
-                denom = tfs + k1 * (1.0 - b + b * (dls / avgdl))
-                n = docs.size
-                for (query_id, slot, tidx, weight, is_phrase, n_terms,
-                     _slop) in leaves:
-                    w = weight * idf * (k1 + 1.0) * tfs / denom
-                    if slk is not None and query_id in slk:
-                        single.setdefault(query_id, []).append((docs, w))
-                        continue
-                    out["query_id"].append(np.full(n, query_id, dtype=np.int32))
-                    out["doc_ord"].append(docs)
-                    out["tord"].append(np.full(n, tords[row.term],
-                                               dtype=np.int32))
-                    out["score"].append(w)
-                    if not lean:
-                        out["slot"].append(np.full(n, slot, dtype=np.int32))
-                        out["tidx"].append(np.full(n, tidx, dtype=np.int32))
-                        out["n_terms"].append(
-                            np.full(n, n_terms, dtype=np.int32))
-                        out["is_phrase"].append(
-                            np.full(n, is_phrase, dtype=bool))
-            if out["query_id"]:
-                yield pd.DataFrame(
-                    {c: np.concatenate(v) for c, v in out.items()})
-        if single:
-            out = {c: [] for c in lean_cols}
-            for query_id, parts_q in single.items():
-                d = np.concatenate([p[0] for p in parts_q])
-                s = np.concatenate([p[1] for p in parts_q])
-                kq = slk[query_id]
-                if d.size > kq:
-                    head = np.lexsort((d, -s))[:kq]
-                    d, s = d[head], s[head]
-                out["query_id"].append(
-                    np.full(d.size, query_id, dtype=np.int32))
-                out["doc_ord"].append(d)
-                # one contribution per doc: any term order sums alike
-                out["tord"].append(np.zeros(d.size, dtype=np.int32))
-                out["score"].append(s)
-            yield pd.DataFrame(
-                {c: np.concatenate(v) for c, v in out.items()})
+    pred_bit: dict[str, int] = {}
+    conds = []
+    for p in plans:
+        if _needs_pred(p) and _pred_key(p) not in pred_bit:
+            pred_bit[_pred_key(p)] = len(conds)
+            conds.append(filter_condition(p.filters, p.neg_filters))
+    if conds:
+        missing = {c for p in plans
+                   for c in qs_filter_columns(p.filters, p.neg_filters)
+                   if c not in docs.columns}
+        if missing:
+            raise ValueError(
+                "query_string filter fields not in index forward table: "
+                f"{missing}")
+        words = []
+        for lo in range(0, len(conds), 63):
+            w = F.lit(0).cast("bigint")
+            for j, c in enumerate(conds[lo:lo + 63]):
+                w = w.bitwiseOR(F.when(c, F.lit(1 << j).cast("bigint"))
+                                .otherwise(F.lit(0).cast("bigint")))
+            words.append(w.alias(f"_w{len(words)}"))
+        fwd = docs.select("doc_ord", *words)
+        anyset = None
+        for i in range(len(words)):
+            c = F.col(f"_w{i}") != 0
+            anyset = c if anyset is None else (anyset | c)
+        legs.append(fwd.where(anyset).select(
+            F.expr(f"doc_ord div {width}").cast("int").alias("range_id"),
+            F.lit(None).cast("string").alias("term"),
+            F.lit(None).cast(blocks_type).alias("blocks"),
+            "doc_ord",
+            F.array(*[F.col(f"_w{i}") for i in range(len(words))])
+            .alias("fbits")))
 
-    parts = hits.mapInPandas(
-        decode_score,
-        schema=("query_id int, doc_ord bigint, tord int, score double"
-                if lean else
-                "query_id int, doc_ord bigint, slot int, tidx int, "
-                "n_terms int, tord int, score double, is_phrase boolean"))
-    if lean:
-        # plain-disjunction fast shape: no mask, no phrase branch
-        return _term_order_rollup(parts, with_mask=False)
-
-    if any_phrase:
-        term_rows = parts.where(~F.col("is_phrase")).select(
-            "query_id", "doc_ord", "slot", "tord", "score")
-
-        # JVM-side prefilter (round-2 VERDICT item 2): only docs
-        # matching ALL of a phrase's terms can be phrase matches, so
-        # the completeness check aggregates NARROW columns first —
-        # position payloads never shuffle for the (often huge) set of
-        # docs that matched just one hot term of the phrase. The
-        # survivor set is bounded by the rarest phrase term's df
-        # (intersection), so it broadcasts; a phrase of pure stopwords
-        # is the worst case and still only ships survivors' positions.
-        survivors = (
-            parts.where(F.col("is_phrase"))
-            .groupBy("query_id", "doc_ord", "slot")
-            .agg(F.countDistinct("tidx").alias("nt"),
-                 F.max("n_terms").alias("m"))
-            .where(F.col("nt") == F.col("m"))
-            .select("query_id", "doc_ord", "slot")
-        )
-
-        def decode_pos(batches):
-            # positions stage: each block decoded ONCE (docs/tfs feed
-            # both the score and the occurrence-count split — round-2
-            # decoded twice, VERDICT item 3), and — like decode_score —
-            # once per SEGMENT ROW, fanned out per phrase leaf from the
-            # broadcast map (a term shared by P phrase leaves no longer
-            # re-decodes its blocks P times)
-            from sparkbm25.codec import decode_block, decode_block_positions
-
-            lm, idfs = leaf_bc.value
-            for pdf in batches:
-                out = {c: [] for c in ("query_id", "doc_ord", "slot",
-                                       "tidx", "slop", "score", "positions")}
-                for row in pdf.itertuples(index=False):
-                    leaves = [l for l in lm.get(row.term, ()) if l[4]]
-                    if not leaves:
-                        continue
-                    idf = idfs[row.term] if idfs is not None else row.idf
-                    for blk in row.blocks:
-                        docs, tfs, dls = decode_block(blk)
-                        if docs.size == 0:
-                            continue
-                        denom = tfs + k1 * (1.0 - b + b * (dls / avgdl))
-                        flat, occ = decode_block_positions(blk, tfs)
-                        plists = np.split(flat, occ[1:-1])
-                        # explicit object array: np.array() would build
-                        # a 2-D matrix when every posting has equal tf
-                        parr = np.empty(len(plists), dtype=object)
-                        parr[:] = plists
-                        n = docs.size
-                        for (query_id, slot, tidx, weight, _isp,
-                             _n_terms, slop) in leaves:
-                            w = weight * idf * (k1 + 1.0) * tfs / denom
-                            out["query_id"].append(
-                                np.full(n, query_id, dtype=np.int32))
-                            out["doc_ord"].append(docs)
-                            out["slot"].append(np.full(n, slot, dtype=np.int32))
-                            out["tidx"].append(np.full(n, tidx, dtype=np.int32))
-                            out["slop"].append(np.full(n, slop, dtype=np.int32))
-                            out["score"].append(w)
-                            out["positions"].append(parr)
-                if out["query_id"]:
-                    yield pd.DataFrame(
-                        {c: np.concatenate(v) for c, v in out.items()})
-
-        phrase_terms = sorted({
-            t for t, leaves in leaf_map.items() if any(l[4] for l in leaves)})
-        pos_rows = hits.where(F.col("term").isin(phrase_terms)).mapInPandas(
-            decode_pos,
-            schema="query_id int, doc_ord bigint, slot int, tidx int, "
-                   "slop int, score double, positions array<bigint>")
-        pruned = pos_rows.join(
-            F.broadcast(survivors), ["query_id", "doc_ord", "slot"],
-            "left_semi")
-
-        def verify_leaf(pdf: pd.DataFrame) -> pd.DataFrame:
-            # applyInPandas delivers ONE phrase leaf's WHOLE survivor
-            # set (round-2 grouped within Arrow batches, silently
-            # dropping matches whose rows straddled a 10k-row batch
-            # boundary — ADVICE r2 high; round-5 regrouped from
-            # per-(query,doc,slot) to per-(query,slot): a stopword
-            # phrase's ~10^5 surviving docs cost ~1ms of Python each
-            # as separate groups ≈ minutes — one group + the
-            # vectorized _verify_phrase_sets kernel is ~10^5× fewer
-            # interpreter crossings. Group memory is bounded by the
-            # rarest member term's df (the intersection), the same
-            # bound the survivors broadcast above already accepts.
-            no_match = pd.DataFrame({
-                "query_id": pd.Series(dtype="int32"),
-                "doc_ord": pd.Series(dtype="int64"),
-                "slot": pd.Series(dtype="int32"),
-                "score": pd.Series(dtype="float64")})
-            if len(pdf) == 0:
-                return no_match
-            slop = int(pdf["slop"].iloc[0])
-            tidx = pdf["tidx"].to_numpy()
-            uniq_t = np.unique(tidx)
-            m = uniq_t.size
-            # survivors guarantee every doc carries all m tidx rows
-            # exactly once, so lexsort (tidx major, doc minor) yields
-            # m equal slices over an identical doc order
-            order = np.lexsort((pdf["doc_ord"].to_numpy(), tidx))
-            doc_sorted = pdf["doc_ord"].to_numpy()[order]
-            n = len(pdf) // m
-            docs = doc_sorted[:n]
-            if len(pdf) != n * m or not np.array_equal(
-                    doc_sorted.reshape(m, n)[1:],
-                    np.broadcast_to(docs, (m - 1, n))):
-                # one row per (doc, tidx) is the survivor-join
-                # invariant; loud failure beats silent misalignment
-                raise AssertionError(
-                    "phrase survivor rows are not one-per-(doc,tidx)")
-            pos_sorted = pdf["positions"].to_numpy()[order]
-            slot_csr = []
-            for s in range(m):
-                chunk = pos_sorted[s * n:(s + 1) * n]
-                lens = np.fromiter((len(p) for p in chunk),
-                                   dtype=np.int64, count=n)
-                offs = np.zeros(n + 1, dtype=np.int64)
-                np.cumsum(lens, out=offs[1:])
-                flat = (np.concatenate(chunk).astype(np.int64)
-                        if offs[-1] else np.empty(0, dtype=np.int64))
-                slot_csr.append((flat - int(uniq_t[s]), offs))
-            repeated = False  # distinct tidx by construction; the
-            # repeated-TERM case is what matters for the sloppy
-            # kernel: two slots of the same term share raw positions.
-            # ALL slot pairs are checked, not just m==2 (final-round
-            # review finding: '"foo bar foo"~2' skipped the distinct-
-            # assignment path and accepted a doc with ONE foo token
-            # filling both slots, diverging from the driver path's
-            # len(set(terms)) < m). Identical raw streams ⇔ same term:
-            # one doc position holds one token, so two DIFFERENT terms
-            # can never produce equal streams (the first flat element
-            # of a pair always belongs to the same doc).
-            if slop > 0 and m >= 2:
-                raws = [slot_csr[s][0] + int(uniq_t[s]) for s in range(m)]
-                repeated = any(
-                    raws[i].size == raws[j].size
-                    and bool(np.array_equal(raws[i], raws[j]))
-                    for i in range(m) for j in range(i + 1, m))
-            keep = _verify_phrase_sets(slot_csr, uniq_t, slop, repeated)
-            if not keep.any():
-                return no_match
-            score = pdf["score"].to_numpy()[order].reshape(m, n).sum(axis=0)
-            return pd.DataFrame({
-                "query_id": np.full(int(keep.sum()),
-                                    int(pdf["query_id"].iloc[0]),
-                                    dtype="int32"),
-                "doc_ord": docs[keep],
-                "slot": np.full(int(keep.sum()),
-                                int(pdf["slot"].iloc[0]), dtype="int32"),
-                "score": score[keep]})
-
-        verified = pruned.groupBy("query_id", "slot").applyInPandas(
-            verify_leaf,
-            schema="query_id int, doc_ord bigint, slot int, score double")
-        # a verified phrase adds after every term, in slot order
-        leaf_rows = term_rows.unionByName(verified.withColumn(
-            "tord", (F.lit(len(uniq_terms)) + F.col("slot")).cast("int")))
-    else:
-        leaf_rows = parts.select("query_id", "doc_ord", "slot", "tord",
-                                 "score")
-
-    # doc-level rollup: BM25 sum + matched-leaf bitmask
-    return _term_order_rollup(leaf_rows, with_mask=True)
+    terms = sorted({t for p in plans for l in p.leaves for t in l["terms"]})
+    idfs: dict[str, float] = {}
+    if terms:
+        # client-side routing: term -> bucket is a pure hash (ES
+        # _routing analog) — partition pruning + term predicate pushdown
+        buckets = sorted({cfg.term_bucket_of(t) for t in terms})
+        pruned_segs = (
+            _read_segments(spark, index_dir, any_phrase)
+            .where(F.col("term_bucket").isin(buckets))
+            .where(F.col("term").isin(terms)))
+        idfs = _idf_map(spark, index_dir, pruned_segs, terms, buckets,
+                        n_docs)
+        legs.append(
+            pruned_segs.select("term", "blocks")
+            .mapInArrow(_cut_at_ranges(width),
+                        schema=f"range_id int, term string, "
+                               f"blocks {blocks_type}")
+            .select("range_id", "term", "blocks",
+                    F.lit(None).cast("bigint").alias("doc_ord"),
+                    F.lit(None).cast("array<bigint>").alias("fbits")))
+    if not legs:
+        return pd.DataFrame({"query_id": pd.Series(dtype="int32"),
+                             "doc_ord": pd.Series(dtype="int64"),
+                             "score": pd.Series(dtype="float64")})
+    rows = legs[0] if len(legs) == 1 else legs[0].unionByName(legs[1])
+    return (rows.repartitionById(nr, "range_id")
+            .mapInArrow(_range_kernel(_kernel_plans(plans, pred_bit), idfs,
+                                      width, -(-len(conds) // 63), cfg.k1,
+                                      cfg.b, avgdl),
+                        schema="query_id int, doc_ord bigint, score double")
+            .toPandas())
 
 
 def search_batch(
@@ -1216,15 +1201,15 @@ def search_batch(
     query_text may use the full query_string grammar (OR / AND / NOT /
     "phrases" / field:value — querystring.py). Every query compiles to
     slot-numbered leaves; matched leaves per doc aggregate into a
-    bitmask, and the boolean tree evaluates as a Catalyst expression
-    over that mask (legacy implicit queries compile to mask!=0 /
-    mask==full, so v1 behavior is unchanged). Scores are the sum of
-    matched positive leaves; NOT leaves weigh 0. Phrase leaves add a
-    position-verification stage over the positions stream."""
+    bitmask, and the boolean tree evaluates over that mask (legacy
+    implicit queries compile to OR / AND of every leaf). Scores are the
+    sum of matched positive leaves; NOT leaves weigh 0. Phrase leaves
+    verify positions per doc-ord range. Filter-only and negative-only
+    queries score a constant 1.0 and rank by doc order."""
     n_docs, avgdl, cfg, _gens = _load_stats(index_dir)
     plans = _compile_queries(queries, cfg, mode, k)
     # prefix/fuzzy leaves expand against the term dictionary before
-    # the posting join; every expansion shares its leaf's slot, so the
+    # the posting scan; every expansion shares its leaf's slot, so the
     # boolean mask and the disjunction-sum score fall out of the
     # existing machinery (scoring_boolean rewrite)
     prefixes = sorted({l["terms"][0] for p in plans for l in p.leaves
@@ -1249,315 +1234,40 @@ def search_batch(
                     l["terms"] = expansions.get(f"w:{l['terms'][0]}", [])
                 elif l["kind"] == "regexp":
                     l["terms"] = expansions.get(f"x:{l['terms'][0]}", [])
-    qp = _plans_to_rows(plans)
     empty = spark.createDataFrame(
         [], "query_id int, rank int, conv_id string, turn_idx int, score double")
     if n_docs == 0:
         return empty
-
-    from sparkbm25.querystring import filter_condition
-
-    # ---- classification from PRE-expansion plan shape (ADVICE r3
-    # high): round-3 classified filter-only queries from post-expansion
-    # qp rows, so a positive prefix/fuzzy leaf that expanded to zero
-    # dictionary terms ('zzz* AND role:user') fell into the filter-only
-    # path and returned match-all-under-filter. Lucene semantics: a
-    # required clause matching nothing yields zero hits — such queries
-    # keep their (never-satisfiable) boolean acceptance instead. ----
-    fonly = [p for p in plans if not p.leaves and (p.filters or p.neg_filters)]
-    negonly = [p for p in plans if p.leaves and not p.has_positive]
-    neg_qids = {int(p.qid) for p in negonly}
-    scored_plans = [p for p in plans if p.leaves and p.has_positive]
-    # mixed trees accepting the EMPTY mask ('apple OR NOT banana'):
-    # docs matching no leaf at all are accepted through the NOT branch
-    # with constant score 0.0 (no scoring clause matched) — round-3
-    # only handled accept_empty on plans with no positive leaf,
-    # silently dropping the no-term docs (ADVICE r3 medium)
-    empty_ok = [p for p in scored_plans if p.accept_empty]
-
-    docs_cache: list[DataFrame] = []
-
-    def _docs() -> DataFrame:
-        if not docs_cache:
-            docs_cache.append(catalog.read_docs(spark, index_dir))
-        return docs_cache[0]
-
-    # constant-score candidate stream (ES filter-context semantics:
-    # score 1.0, rank by doc order). Filter-only queries (e.g.
-    # 'role:en' — the reference's primary documented usage,
-    # docs/usage.md:94-103) compile to ONE forward-table pass: the
-    # per-query predicates evaluate as one projected array + explode,
-    # so scan count and Catalyst plan size stay O(1) in the number of
-    # filter-only queries (round-3 built one sub-plan + union per
-    # query — linear plan cost, VERDICT r3 item 7)
-    # predicate-array legs are CHUNKED: Catalyst's expression
-    # optimizer is superlinear in one giant CASE array (measured 19 s
-    # plan-compile for a single 200-branch array at 100 queries), so
-    # each leg carries <= _FILTER_LEG predicates — plan legs grow
-    # n/_FILTER_LEG while each stays cheap to optimize, and every leg
-    # is still ONE forward-table pass for its whole query group
-    def _const_legs(items):
-        legs = None
-        for lo in range(0, len(items), _FILTER_LEG):
-            group = items[lo:lo + _FILTER_LEG]
-            arr = F.array(*[
-                F.when(cond, F.lit(int(qid)).cast("int"))
-                for qid, cond in group])
-            leg = (_docs().select("doc_ord",
-                                  F.explode(arr).alias("query_id"))
-                   .where(F.col("query_id").isNotNull())
-                   .select("query_id", "doc_ord"))
-            legs = leg if legs is None else legs.unionByName(leg)
-        return legs
-
-    const_rows = None
-    if fonly:
-        const_rows = _const_legs(
-            [(p.qid, filter_condition(p.filters, p.neg_filters))
-             for p in fonly])
-
-    # lean shape: no phrase leaves and no consumer of the mask column
-    # (plain disjunctions with trivially-true acceptance — the common
-    # bulk-scoring batch). _scored_rows then skips the mask machinery
-    # end to end.
-    lean = (not bool(qp["is_phrase"].any()) if not qp.empty else False) \
-        and not negonly and not empty_ok \
-        and all(p.accept is None or p.accept_trivial for p in scored_plans)
-    # single-leaf unfiltered queries are eligible for the kernel's
-    # exact per-partition top-k pre-reduction (see decode_score)
-    single_leaf_k = {
-        int(p.qid): int(p.k) for p in scored_plans
-        if len(p.leaves) == 1 and p.leaves[0]["kind"] == "term"
-        and len(p.leaves[0]["terms"]) == 1
-        and not p.filters and not p.neg_filters} if lean else None
-    if qp.empty:
-        scored = spark.createDataFrame(
-            [], "query_id int, doc_ord bigint, score double, mask bigint")
-        persisted = None
-    else:
-        scored = _scored_rows(spark, index_dir, qp, cfg, n_docs, avgdl,
-                              lean=lean, single_leaf_k=single_leaf_k)
-        persisted = None
-        if negonly or empty_ok:
-            # `scored` is referenced a second time below (posting masks
-            # for negated candidates / the matched-doc anti-join);
-            # persist so the decode pipeline runs once, not per branch
-            scored = persisted = scored.persist()
-
-    # pure-negative text + structured filter ('role:user AND NOT spam',
-    # ADVICE r2 high): docs matching NO leaf never enter `scored` (no
-    # posting rows), so candidates come from the forward table; the
-    # posting-derived mask then removes docs the boolean tree rejects
-    # (anti-join on the negated terms' postings). Constant score 1.0
-    # (ES filter-context), rank by doc order — the filter-only
-    # semantics extended by the negation.
-    for p in negonly:
-        cand = (_docs().where(filter_condition(p.filters, p.neg_filters))
-                .select("doc_ord"))
-        if p.accept is not None:
-            pm = scored.where(F.col("query_id") == F.lit(int(p.qid)))
-            if p.accept_empty:
-                bad = pm.where(~p.accept(F.col("mask"))).select("doc_ord")
-                cand = cand.join(bad, "doc_ord", "left_anti")
-            else:
-                ok = pm.where(p.accept(F.col("mask"))).select("doc_ord")
-                cand = cand.join(ok, "doc_ord", "left_semi")
-        part = cand.select(
-            F.lit(int(p.qid)).cast("int").alias("query_id"), "doc_ord")
-        const_rows = part if const_rows is None else const_rows.unionByName(part)
-    if negonly:
-        scored = scored.where(~F.col("query_id").isin(list(neg_qids)))
-
-    # empty-mask candidates for mixed accept_empty trees: forward-table
-    # docs (under the query's structured filter) with NO posting row
-    # for this query, constant score 0.0, mask 0 — the boolean
-    # acceptance below admits them because accept(0) == accept_empty
-    for p in empty_ok:
-        cand = (_docs().where(filter_condition(p.filters, p.neg_filters))
-                .select("doc_ord"))
-        matched = (scored.where(F.col("query_id") == F.lit(int(p.qid)))
-                   .select("doc_ord"))
-        extra = (cand.join(matched, "doc_ord", "left_anti")
-                 .select(F.lit(int(p.qid)).cast("int").alias("query_id"),
-                         "doc_ord",
-                         F.lit(0.0).alias("score"),
-                         F.lit(0).cast("bigint").alias("mask")))
-        scored = scored.unionByName(extra)
-
-    # boolean acceptance: the per-query tree over the matched bitmask,
-    # compiled to one Catalyst predicate for the whole batch.
-    # Trivially-true accepts (implicit-OR mask != 0) skip the mask
-    # evaluation — their rows pass through the isin-negation leg, NOT
-    # by omission from the per-query OR (omission would drop them) —
-    # and in the all-trivial lean shape there is no mask column at all.
-    if not lean:
-        nontrivial = [p for p in scored_plans
-                      if p.accept is not None and not p.accept_trivial]
-        if nontrivial:
-            conds = None
-            for p in nontrivial:
-                cond = (F.col("query_id") == p.qid) & p.accept(F.col("mask"))
-                conds = cond if conds is None else (conds | cond)
-            passthru = ~F.col("query_id").isin(
-                [int(p.qid) for p in nontrivial])
-            scored = scored.where(passthru | conds)
-        scored = scored.drop("mask")
-
-    qfilters = {p.qid: (p.filters, p.neg_filters) for p in scored_plans
-                if p.filters or p.neg_filters}
-    if qfilters:
-        # structured query_string predicates (F1): restrict candidates
-        # via the forward table — Catalyst pushes the predicates to the
-        # parquet scan; BM25 stats stay index-wide (ES semantics). ONE
-        # forward-table pass for the whole batch (predicate array +
-        # explode), like the filter-only stream — a per-query
-        # scan+union grew the plan and the scan count linearly in the
-        # number of filtered queries (VERDICT r3 item 7)
-        docs_df = _docs()
-        missing = {c for fl, nfl in qfilters.values()
-                   for c in qs_filter_columns(fl, nfl)
-                   if c not in docs_df.columns}
-        if missing:
-            raise ValueError(
-                f"query_string filter fields not in index forward table: {missing}")
-        allowed = None
-        items = [(qid, filter_condition(fl, nfl))
-                 for qid, (fl, nfl) in qfilters.items()]
-        for lo in range(0, len(items), _FILTER_LEG):
-            group = items[lo:lo + _FILTER_LEG]
-            qarr = F.array(*[
-                F.when(cond, F.lit(int(qid)).cast("int"))
-                for qid, cond in group])
-            leg = (docs_df.select("doc_ord",
-                                  F.explode(qarr).alias("query_id"))
-                   .where(F.col("query_id").isNotNull())
-                   .select("query_id", "doc_ord"))
-            allowed = leg if allowed is None else allowed.unionByName(leg)
-        f_ids = [int(q) for q in qfilters]
-        scored = scored.where(~F.col("query_id").isin(f_ids)).unionByName(
-            scored.where(F.col("query_id").isin(f_ids))
-            .join(allowed, ["query_id", "doc_ord"], "left_semi")
-        )
-
-    # per-partition partial top-k before the per-query shuffle: the
-    # final merge only sees <= k rows per (query, partition).
-    kmax = max(p.k for p in plans)
-
-    def partial_topk(batches):
-        # one numpy pass per partition (round 5 ran a pandas
-        # groupby+concat+sort PER BATCH — interpreter-bound at the
-        # 36M-row sf1 rollup): buffer the narrow columns, one lexsort
-        # (query asc, score desc, doc asc — a total order: (query,
-        # doc) pairs are unique per partition after the rollup), keep
-        # group-rank < kmax. Exact, like the sort it replaces.
-        import pyarrow as pa
-
-        qs, ds, ss = [], [], []
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            ni = {n: i for i, n in enumerate(rb.schema.names)}
-            qs.append(rb.column(ni["query_id"]).to_numpy(zero_copy_only=False))
-            ds.append(rb.column(ni["doc_ord"]).to_numpy(zero_copy_only=False))
-            ss.append(rb.column(ni["score"]).to_numpy(zero_copy_only=False))
-        if not qs:
-            return
-        q = np.concatenate(qs)
-        d = np.concatenate(ds)
-        s = np.concatenate(ss)
-        order = np.lexsort((d, -s, q))
-        q, d, s = q[order], d[order], s[order]
-        starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-        rank = (np.arange(q.size, dtype=np.int64)
-                - np.repeat(starts, np.diff(np.r_[starts, q.size])))
-        keep = rank < kmax
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(q[keep].astype(np.int32), type=pa.int32()),
-             pa.array(d[keep], type=pa.int64()),
-             pa.array(s[keep], type=pa.float64())],
-            names=["query_id", "doc_ord", "score"])
-
-    reduced = scored.mapInArrow(
-        partial_topk, schema="query_id int, doc_ord bigint, score double")
-
-    # the constant-score stream (filter-only + pure-negative queries)
-    # reduces through a JVM window of its own, NOT the Arrow partial
-    # top-k: every row scores 1.0 so the ranking is doc_ord asc, and a
-    # match-all filter over a large corpus emits millions of candidate
-    # rows per query — narrow JVM shuffle+sort handles that ~10x
-    # faster than shipping the rows through pandas (measured 23s ->
-    # 2.5s for a 100-query filter-only batch at 960k docs)
-    if const_rows is not None:
-        wq = Window.partitionBy("query_id").orderBy("doc_ord")
-        const_reduced = (
-            const_rows.withColumn("rn", F.row_number().over(wq))
-            .where(F.col("rn") <= F.lit(kmax))
-            .select("query_id", "doc_ord", F.lit(1.0).alias("score")))
-        reduced = reduced.unionByName(const_reduced)
-
-    # final exact top-k merge over the reduced stream (<= kmax rows per
-    # (query, partition) — thousands of rows, not millions). With no
-    # constant-score stream the merge runs on the DRIVER in one numpy
-    # pass instead of a per-query window: one whole Spark
-    # shuffle+sort stage disappears from the common path, and the
-    # collect moves the same <= q×k×P narrow rows the window's input
-    # exchange already moved. The constant-score branch keeps the JVM
-    # window (its pre-window row counts are unbounded).
-    kbyq = {int(p.qid): int(p.k) for p in plans}
-    if const_rows is None:
-        pdf = reduced.toPandas()
-        if len(pdf):
-            q = pdf["query_id"].to_numpy()
-            d = pdf["doc_ord"].to_numpy()
-            s = pdf["score"].to_numpy()
-            order = np.lexsort((d, -s, q))
-            q, d, s = q[order], d[order], s[order]
-            starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-            rank = (np.arange(q.size, dtype=np.int64)
-                    - np.repeat(starts, np.diff(np.r_[starts, q.size])) + 1)
-            kvec = np.asarray([kbyq.get(int(x), kmax) for x in q],
-                              dtype=np.int64)
-            keep = rank <= kvec
-            topk_pdf = pd.DataFrame({
-                "query_id": q[keep], "doc_ord": d[keep],
-                "score": s[keep], "rank": rank[keep].astype(np.int32)})
-        else:
-            topk_pdf = pdf.assign(rank=pd.Series(dtype="int32"))
-    else:
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_ord"))
-        topk = (
-            reduced.withColumn("rank", F.row_number().over(w).cast("int"))
-            .where(F.col("rank") <= F.lit(kmax))
-        )
-        # per-query k (may differ): join and refilter
-        kq = spark.createDataFrame(
-            pd.DataFrame({"query_id": [p.qid for p in plans],
-                          "k": [p.k for p in plans]}),
-            schema="query_id int, k int")
-        topk = topk.join(F.broadcast(kq), "query_id").where(
-            F.col("rank") <= F.col("k")).drop("k")
-
-        # resolve doc_ord -> (conv_id, turn_idx): collect the tiny
-        # top-k once (<= k per query) so the expensive
-        # decode/score/topk pipeline runs exactly ONE action, then
-        # push the key set down to the forward-table scan (analog of
-        # ES point GET by id+routing, es_translator.py:216-227).
-        topk_pdf = topk.toPandas()
-    if persisted is not None:
-        persisted.unpersist()
-    if topk_pdf.empty:
+    # the forward table feeds the predicate leg and the final resolve
+    docs = catalog.read_docs(spark, index_dir)
+    pdf = _ranged_topk(spark, index_dir, docs, plans, cfg, n_docs, avgdl)
+    if not len(pdf):
         return empty
+
+    # final exact top-k merge on the driver: <= k rows per (query,
+    # range), one lexsort (query asc, score desc, doc asc)
+    kbyq = {int(p.qid): int(p.k) for p in plans}
+    q = pdf["query_id"].to_numpy()
+    d = pdf["doc_ord"].to_numpy()
+    s = pdf["score"].to_numpy()
+    order = np.lexsort((d, -s, q))
+    q, d, s = q[order], d[order], s[order]
+    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    rank = (np.arange(q.size, dtype=np.int64)
+            - np.repeat(starts, np.diff(np.r_[starts, q.size])) + 1)
+    keep = rank <= np.asarray([kbyq[int(x)] for x in q], dtype=np.int64)
+    topk_pdf = pd.DataFrame({
+        "query_id": q[keep], "doc_ord": d[keep],
+        "score": s[keep], "rank": rank[keep].astype(np.int32)})
+    # resolve doc_ord -> (conv_id, turn_idx): push the top-k key set
+    # down to the forward-table scan (analog of ES point GET by
+    # id+routing, es_translator.py:216-227) — doc_block partition
+    # pruning + doc_ord rowgroup pushdown
     ords = sorted(topk_pdf["doc_ord"].unique().tolist())
-    # doc_block partition pruning + doc_ord rowgroup pushdown: the
-    # resolve touches only the partition dirs holding the top-k ords
     blocks = sorted({o // cfg.doc_block_size for o in ords})
-    docs = (
-        catalog.read_docs(spark, index_dir)
-        .where(F.col("doc_block").isin(blocks))
-        .where(F.col("doc_ord").isin(ords))
-        .select("doc_ord", "conv_id", "turn_idx")
-    )
+    docs = (docs.where(F.col("doc_block").isin(blocks))
+            .where(F.col("doc_ord").isin(ords))
+            .select("doc_ord", "conv_id", "turn_idx"))
     topk_df = spark.createDataFrame(
         topk_pdf[["query_id", "doc_ord", "score", "rank"]],
         schema="query_id int, doc_ord bigint, score double, rank int")
@@ -1656,9 +1366,6 @@ def _decode_postings(tb) -> tuple[dict[str, "_TermPostings"], dict[str, int]]:
 
 
 _INF_DOC = 2 ** 62
-# max structured-filter predicates per one-pass explode leg (see the
-# chunking comment in search_batch)
-_FILTER_LEG = 16
 
 
 def _exact_topk(cand: np.ndarray, scores: np.ndarray,
@@ -2213,10 +1920,11 @@ class Searcher:
                 if tb is None or tb.num_rows == 0:
                     continue
                 tb = localio.strip_tz(tb)
+                # a generation without an attribute column reads NULL
                 for r in tb.to_pylist():
                     self._cache_doc(int(r["doc_ord"]),
                                     (r["conv_id"], int(r["turn_idx"]),
-                                     {a: r[a] for a in attrs}))
+                                     {a: r.get(a) for a in attrs}))
             return
         base = (self._forward_docs()
                 .where(F.col("doc_block").isin(blocks)))
@@ -2521,11 +2229,11 @@ class Searcher:
         the intersection docs live in, verify adjacency (slop 0) or
         the documented sloppy span (_sloppy_exists), and score
         survivors as boost × Σ member-term BM25 contributions — the
-        exact contract of the batch path's verify_leaf. Candidate
+        exact contract of the batch path's _phrase_hits. Candidate
         count is bounded by the rarest member's df; verification is
         the vectorized _verify_phrase_sets kernel over all candidates
-        at once (the batch path runs the same kernel inside
-        applyInPandas)."""
+        at once (the batch path runs the same kernel per doc-ord
+        range)."""
         zero = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
         if not terms or any(t not in dfs for t in terms):
             return zero

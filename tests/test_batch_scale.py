@@ -1,10 +1,11 @@
 """Large mixed-batch plan scaling (VERDICT r4 item 7): one
-search_batch call carrying hundreds of queries across every compiled
-stream (scored / boolean / phrase / sloppy phrase / prefix / filtered
+search_batch call carrying hundreds of queries across every query
+shape (scored / boolean / phrase / sloppy phrase / prefix / filtered
 / filter-only) must stay sublinear in plan cost — the round-3
 monolithic CASE array went superlinear in Catalyst's expression
-optimizer at 100 queries; the chunked _FILTER_LEG legs and the single
-broadcast-join scored stream are the fix under test. The full-size
+optimizer at 100 queries. Under test: the plan grows with the number
+of DISTINCT structured predicates (one bit each in the forward rows),
+not with the number of queries. The full-size
 evidence (1000 queries at 240k turns) lives in
 BENCH/r5/mixed_batch.py; this test bounds the small-corpus shape so a
 plan-cost regression fails CI rather than only the bench."""

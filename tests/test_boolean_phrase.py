@@ -323,9 +323,9 @@ def test_filter_with_boolean_tree(spark, built):
 
 def test_phrase_survives_small_arrow_batches(spark, built):
     """Round-2 bug (ADVICE high): phrase groups straddling an Arrow
-    batch boundary were silently dropped. The verify stage now uses
-    groupBy().applyInPandas (structural group completeness); force
-    tiny batches so any per-batch grouping regression loses matches."""
+    batch boundary were silently dropped. The batch kernel now buffers
+    its whole doc-ord range before verifying; force tiny batches so any
+    per-batch grouping regression loses matches."""
     t, d, texts = built
     toks = t["text"].iloc[0].lower().split()
     w1, w2 = toks[2], toks[3]
