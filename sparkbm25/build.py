@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from sparkbm25 import catalog
+from sparkbm25 import catalog, localio
 from sparkbm25.config import IndexConfig
 
 def segment_schema(with_pos: bool = False) -> str:
@@ -872,7 +872,9 @@ def build_index(
     resume=False wipes index_dir (the reference's --force, cli.py:147);
     resume=True anti-joins the manifest and only builds what is missing
     (idempotency predicate analog, es_translator/es.py:131-150).
+    index_dir must be a local path (localio.require_local_root).
     """
+    localio.require_local_root(spark, index_dir)
     if config.encoder != "packed":
         raise ValueError(f"encoder must be 'packed', got {config.encoder!r}")
     t0 = time.time()

@@ -1,4 +1,5 @@
-"""Driver-side direct parquet reads for LOCAL index roots.
+"""Driver-side pyarrow reads of an index root: the one reader behind
+every point read of the interactive Searcher and search_batch's idf map.
 
 The interactive Searcher's per-query work is a handful of point reads:
 the pruned posting fetch of a few terms, the (term, n_docs) df probe,
@@ -9,28 +10,32 @@ job+collect is 0.25-1.1 s per cold query while the same pruned read
 through pyarrow.dataset is 7-120 ms (guide §1.2: fix the shape before
 the constants; a point lookup does not need a cluster job, the same
 way the reference's ES client GETs a document without running a
-distributed search).
+distributed search). The reads keep Spark's pruning: term_bucket= /
+doc_block= hive directories and rowgroup-statistics pushdown.
 
-When the index root lives on the local filesystem (file: or bare
-paths), the same pruned reads run directly through pyarrow.dataset:
-identical partition pruning (term_bucket= / doc_block= hive dirs),
-identical rowgroup-statistics pushdown, identical rows out — just no
-job. Non-local roots (hdfs://, s3a://...) keep the Spark path; every
-caller falls back whenever `local_path` returns None. On a real
-cluster the analog is the driver reading the hot metadata tier through
-the filesystem client instead of scheduling a job per query — the
-bytes moved are identical.
+Index roots are local paths. The catalog commits with os.rename, lists
+generations with os.listdir and reads stats.json with open(), so a
+root with a URI scheme, or a bare path that Spark would resolve
+against a non-local fs.defaultFS, can be neither built nor opened;
+`require_local_root` refuses both before a build touches disk. On a
+real cluster the analog is the driver reading the hot metadata tier
+through the filesystem client instead of scheduling a job per query —
+the bytes moved are identical. The distributed reads (search_batch's
+range job, catalog.read_docs, compaction) stay on Spark.
 
-Dataset objects cache per directory (a dataset holds the file listing
-+ parquet footers — the exact analog of the Searcher's cached
-_seg_dfs); they carry no row data, so this is metadata caching, not
-result caching: every query still reads its postings from parquet.
+`IndexReader` is bound once per generation set (Searcher binds it at
+construction and on refresh()). Dataset objects cache per directory (a
+dataset holds the file listing + parquet footers); they carry no row
+data, so this is metadata caching, not result caching: every query
+still reads its postings from parquet.
 """
 
 from __future__ import annotations
 
 import os
 import re
+
+from sparkbm25 import catalog
 
 _SCHEME = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
 
@@ -52,6 +57,22 @@ def local_path(path: str) -> str | None:
     if _SCHEME.match(path):
         return None
     return path
+
+
+def require_local_root(spark, root: str) -> None:
+    """Raise ValueError naming `root` unless the catalog can commit to
+    it: a bare path (no URI scheme) under a local fs.defaultFS, which
+    is where Spark's writes of a bare path land. Reads the Hadoop conf
+    only; the filesystem is never contacted."""
+    if local_path(root) != root:
+        raise ValueError(
+            f"index root {root!r} has a URI scheme; index roots are "
+            "local filesystem paths")
+    fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    if fs and not fs.startswith("file:"):
+        raise ValueError(
+            f"index root {root!r} would resolve against fs.defaultFS="
+            f"{fs}; index roots are local filesystem paths")
 
 
 def _parquet_files(directory: str) -> list[str]:
@@ -158,16 +179,94 @@ class LocalParquetIndex:
         return []
 
 
-def strip_tz(table):
+def _naive_micros(table):
     """Match Spark's collect() rendering of TimestampType (naive
-    datetimes in the UTC session timezone this engine pins): drop the
-    UTC tz annotation pyarrow surfaces for Spark-written timestamp
-    columns. Values are unchanged (the same UTC micros)."""
+    datetimes in the UTC session timezone this engine pins): a
+    Spark-written timestamp column reads as UTC-annotated micros, as
+    INT96 nanos (session-zone input) or as naive micros
+    (TIMESTAMP_NTZ input), and generations of one root may differ.
+    Every one casts to naive micros; values are unchanged (Spark
+    timestamps are whole micros, and a lossy cast would raise)."""
     import pyarrow as pa
 
+    us = pa.timestamp("us")
     for i, f in enumerate(table.schema):
-        if pa.types.is_timestamp(f.type) and f.type.tz is not None:
-            table = table.set_column(
-                i, pa.field(f.name, pa.timestamp(f.type.unit)),
-                table.column(i).cast(pa.timestamp(f.type.unit)))
+        if pa.types.is_timestamp(f.type) and f.type != us:
+            table = table.set_column(i, pa.field(f.name, us),
+                                     table.column(i).cast(us))
     return table
+
+
+def _concat(tables: list, cols: list[str]):
+    """One table of exactly `cols` from per-generation reads (None for
+    a generation with no files): a column some generation lacks reads
+    NULL there, and NULL everywhere when no generation read has it."""
+    import pyarrow as pa
+
+    tables = [_naive_micros(t) for t in tables if t is not None]
+    tb = (pa.concat_tables(tables, promote_options="default")
+          if tables else pa.table({}))
+    for c in cols:
+        if c not in tb.column_names:
+            tb = tb.append_column(c, pa.nulls(tb.num_rows))
+    return tb.select(cols)
+
+
+class IndexReader:
+    """Every driver-side read of one generation set: the segment trees
+    (term_bucket routing + term pushdown) and the forward tables
+    (doc_block routing + doc_ord pushdown) of all generations, each
+    read through its own LocalParquetIndex and concatenated."""
+
+    def __init__(self, gen_dirs: list[str], cfg):
+        self._bucket_of = cfg.term_bucket_of
+        self._doc_block_size = cfg.doc_block_size
+        self._segs = [LocalParquetIndex(catalog.segments_dir(g), "term_bucket")
+                      for g in gen_dirs]
+        self._docs = [LocalParquetIndex(catalog.docs_dir(g), "doc_block")
+                      for g in gen_dirs]
+        self._columns: list[str] | None = None
+
+    def segments(self, terms: list[str] | None, cols: list[str]):
+        """Segment rows of `terms` (None = every row), `cols` only."""
+        import pyarrow.compute as pc
+
+        parts = filt = None
+        if terms is not None:
+            parts = sorted({self._bucket_of(t) for t in terms})
+            filt = pc.field("term").isin(list(terms))
+        return _concat([ix.read(parts, cols, filter=filt)
+                        for ix in self._segs], cols)
+
+    def segment_rows(self) -> int:
+        """Segment rows of every generation, from parquet footers."""
+        return sum(ix.count_rows() for ix in self._segs)
+
+    def dfs(self, terms: list[str] | None = None) -> dict[str, int]:
+        """df per term (summed per-salt, per-generation n_docs) of
+        `terms` (None = the whole dictionary); absent terms omitted."""
+        tb = self.segments(terms, ["term", "n_docs"])
+        if tb.num_rows == 0:
+            return {}
+        agg = tb.group_by("term").aggregate([("n_docs", "sum")])
+        return dict(zip(agg.column("term").to_pylist(),
+                        agg.column("n_docs_sum").to_pylist()))
+
+    def docs(self, ords: list[int], cols: list[str]):
+        """Forward rows of `ords`, `cols` only (attribute columns a
+        generation lacks read NULL; timestamps naive UTC)."""
+        import pyarrow.compute as pc
+
+        parts = sorted({o // self._doc_block_size for o in ords})
+        filt = pc.field("doc_ord").isin(list(ords))
+        return _concat([ix.read(parts, cols, filter=filt)
+                        for ix in self._docs], cols)
+
+    def columns(self) -> list[str]:
+        """Forward-table columns of ALL generations (plus doc_block)."""
+        if self._columns is None:
+            names: list[str] = []
+            for ix in self._docs:
+                names += [c for c in ix.schema_names() if c not in names]
+            self._columns = names
+        return self._columns

@@ -18,8 +18,10 @@ ranking — implemented natively:
     (AND mode); all pruning lossless. Only the posting blocks of the
     query's terms are fetched (term_bucket partition pruning + term
     predicate pushdown — the analog of ES routing a query to the
-    right shard), and bounded LRU caches (decoded postings / df map /
-    doc resolve) make warm repeats run without any Spark job.
+    right shard) through the driver's pyarrow index reader
+    (localio.IndexReader, no Spark job), and bounded LRU caches
+    (decoded postings / df map / doc resolve) make warm repeats read
+    nothing.
 
 Ranking contract (parity with refscore.bm25_reference_topk):
   score(q,d) = Σ_t qtf·idf·(k1+1)·tf / (tf + k1(1-b+b·dl/avgdl)),
@@ -1069,35 +1071,15 @@ def _needs_pred(p: _QueryPlan) -> bool:
         bool(p.leaves) and (not p.has_positive or p.accept_empty))
 
 
-def _idf_map(spark: SparkSession, index_dir: str, pruned_segs: DataFrame,
-             terms: list[str], buckets: list[int],
+def _idf_map(index_dir: str, cfg: IndexConfig, terms: list[str],
              n_docs: int) -> dict[str, float]:
     """idf per batch term from the summed per-row n_docs: one
-    column-pruned pyarrow read on the driver for a local root (the
-    ES-coordinator shape: term stats come from shard metadata, not
-    from a cluster job), else the narrow (term, n_docs) aggregate
-    collected — parquet column pruning keeps the blocks bytes out."""
-    seg_roots = [localio.local_path(p)
-                 for p in catalog.segments_paths(index_dir)]
-    df_by_term: dict[str, int] = {}
-    if all(r is not None for r in seg_roots):
-        import pyarrow.compute as pc
-
-        filt = pc.field("term").isin(terms)
-        for root in seg_roots:
-            ix = localio.LocalParquetIndex(root, "term_bucket")
-            tb = ix.read(buckets, ["term", "n_docs"], filter=filt)
-            if tb is None:
-                continue
-            for t, nd in zip(tb.column("term").to_pylist(),
-                             tb.column("n_docs").to_pylist()):
-                df_by_term[t] = df_by_term.get(t, 0) + int(nd)
-    else:
-        for r in (pruned_segs.groupBy("term")
-                  .agg(F.sum("n_docs").alias("df")).collect()):
-            df_by_term[r["term"]] = int(r["df"])
+    column-pruned pyarrow read on the driver (the ES-coordinator shape:
+    term stats come from shard metadata, not from a cluster job)."""
+    dfs = localio.IndexReader(catalog.generation_dirs(index_dir),
+                              cfg).dfs(terms)
     return {t: float(np.log(1.0 + (float(n_docs) - df + 0.5) / (df + 0.5)))
-            for t, df in df_by_term.items()}
+            for t, df in dfs.items()}
 
 
 def _ranged_topk(spark: SparkSession, index_dir: str, docs: DataFrame,
@@ -1165,8 +1147,7 @@ def _ranged_topk(spark: SparkSession, index_dir: str, docs: DataFrame,
             _read_segments(spark, index_dir, any_phrase)
             .where(F.col("term_bucket").isin(buckets))
             .where(F.col("term").isin(terms)))
-        idfs = _idf_map(spark, index_dir, pruned_segs, terms, buckets,
-                        n_docs)
+        idfs = _idf_map(index_dir, cfg, terms, n_docs)
         legs.append(
             pruned_segs.select("term", "blocks")
             .mapInArrow(_cut_at_ranges(width),
@@ -1310,9 +1291,9 @@ def _binary_child(arr) -> tuple[np.ndarray, np.ndarray]:
 
 def _term_streams_from_arrow(tb) -> dict[str, list]:
     """Per-term block metadata + concatenated varint streams straight
-    from a (term, n_docs, blocks) Arrow table — the one decoder of both
-    postings sources (the local pyarrow read and the Spark toArrow
-    fetch), with no per-block Python objects. A term's rows may come
+    from a (term, n_docs, blocks) Arrow table — the one decoder of the
+    Searcher's index-reader fetch and the batch range kernel, with no
+    per-block Python objects. A term's rows may come
     from several generations; its blocks are ordered by first_doc
     (doc_ord ranges are disjoint across generations and salts).
     Returns {term: [n_docs_sum, firsts, ns, {stream: bytes}]}."""
@@ -1567,9 +1548,9 @@ class Searcher:
         # df-probe cache policy: when the segment dictionary (term ×
         # salt × generation rows) fits under this bound, the whole
         # (term -> df) map loads into the driver ONCE and every later
-        # probe is a dict lookup instead of a Spark job (~0.15-0.5s
-        # saved per interactive query). A web-scale vocabulary blows
-        # the bound and keeps the per-query column-pruned probe scan.
+        # probe is a dict lookup instead of a pruned read. A web-scale
+        # vocabulary blows the bound and keeps the per-query
+        # column-pruned probe read.
         self.max_cached_dict_rows = max_cached_dict_rows
         self._df_cache: dict[str, int] | None = None
         self._df_cache_checked = False
@@ -1595,9 +1576,6 @@ class Searcher:
         # query, filtered or not, then runs ZERO Spark jobs
         self.doc_cache_max = 200_000
         self._doc_cache: dict[int, tuple] = {}
-        # forward-table DataFrame cache (filtered driver path + doc
-        # resolve): created lazily, rebound by refresh()
-        self._docs_df: DataFrame | None = None
         # multi-term expansion cache (prefix/fuzzy/wildcard/regexp leaf key
         # -> sorted dictionary expansions): interactive sessions
         # repeat patterns, and the banded dictionary job is the only
@@ -1619,60 +1597,29 @@ class Searcher:
         self._bind_generations()
 
     def _bind_generations(self) -> None:
-        """Bind the per-generation readers for the CURRENT self.gens.
-
-        Local index roots get direct pyarrow readers for the driver's
-        point reads (postings fetch / df probe / doc resolve) — no
-        Spark job per cold query (localio module docstring has the
-        measurements); non-local roots leave them None and every
-        caller falls back to the Spark path. The per-generation
-        segment DataFrames are created LAZILY (first _gen_union):
-        repeated queries reuse the resolved file index + parquet
-        footers instead of re-listing the segment tree per search,
-        and a Searcher whose queries are all served locally never
-        pays the Spark-side listing at all. A Searcher is bound to
-        the generation set it saw at construction — after
+        """Bind the one index reader (localio.IndexReader) for the
+        CURRENT self.gens: every driver read — postings fetch, df
+        probe, doc resolve, forward-table columns — is a pruned
+        pyarrow read through it, with no Spark job per cold query
+        (localio module docstring has the measurements). The reader
+        caches file listings + parquet footers per directory, so
+        repeated queries do not re-list the trees. A Searcher is bound
+        to the generation set it saw at construction — after
         update_index / compact_generations on the same root, call
         refresh() (or build a new Searcher); compaction DELETES the
-        superseded generation dirs, so a stale snapshot would fail.
-        (an empty-corpus index has no readable segment schema; its
-        searches return empty before ever touching segments)"""
-        self._seg_dfs_cache: list[DataFrame] | None = None
-        self._local_segs = None
-        self._local_docs = None
-        if self.n_docs > 0:
-            seg_roots = [localio.local_path(catalog.segments_dir(g["dir"]))
-                         for g in self.gens]
-            doc_roots = [localio.local_path(catalog.docs_dir(g["dir"]))
-                         for g in self.gens]
-            if all(r is not None for r in seg_roots + doc_roots):
-                self._local_segs = [
-                    localio.LocalParquetIndex(r, "term_bucket")
-                    for r in seg_roots]
-                self._local_docs = [
-                    localio.LocalParquetIndex(r, "doc_block")
-                    for r in doc_roots]
-
-    @property
-    def _seg_dfs(self) -> list[DataFrame]:
-        if self._seg_dfs_cache is None:
-            self._seg_dfs_cache = [
-                _read_segment_root(self.spark,
-                                   catalog.segments_dir(gen["dir"]),
-                                   self.cfg.store_positions)
-                for gen in self.gens
-            ] if self.n_docs > 0 else []
-        return self._seg_dfs_cache
+        superseded generation dirs, so a stale snapshot would fail."""
+        self._reader = localio.IndexReader([g["dir"] for g in self.gens],
+                                           self.cfg)
 
     def refresh(self) -> "Searcher":
         """Re-bind to the index's current generation set (after an
-        append or in-place compaction). Returns self."""
+        append or in-place compaction): drop every cache and bind a
+        new index reader. Returns self."""
         self._df_cache = None
         self._df_cache_checked = False
         self._post_cache.clear()
         self._post_cache_postings = 0
         self._doc_cache.clear()
-        self._docs_df = None
         self._exp_cache.clear()
         self._exp_cache_terms = 0
         self.n_docs, self.avgdl, self.cfg, self.gens = _load_stats(self.index_dir)
@@ -1697,85 +1644,22 @@ class Searcher:
                            mode=mode).toPandas()
         return out[["rank", "conv_id", "turn_idx", "score"]].reset_index(drop=True)
 
-    def _gen_union(self, terms: list[str], cols: list) -> "DataFrame":
-        """Pruned segment rows of ALL generations as ONE DataFrame
-        (each generation is its own parquet root, so per-gen reads
-        union with a literal generation index). One Spark job instead
-        of one per generation (round-2 paid 2×G jobs per interactive
-        query, VERDICT item 5)."""
-        buckets = sorted({self.cfg.term_bucket_of(t) for t in terms})
-        out = None
-        for gi, seg_df in enumerate(self._seg_dfs):
-            part = (
-                seg_df
-                .where(F.col("term_bucket").isin(buckets))
-                .where(F.col("term").isin(terms))
-                .select(F.lit(gi).alias("_g"), *cols)
-            )
-            out = part if out is None else out.unionByName(part)
-        return out
-
     def _probe_dfs(self, terms: list[str]) -> dict[str, int]:
-        """df per query term from a column-pruned segment scan: only
+        """df per query term from a column-pruned segment read: only
         (term, n_docs) are read — parquet column pruning means the
         blocks bytes never move — so the probe is O(segment rows of
-        the query's buckets), not O(postings). The per-salt rows sum
-        on the driver (terms × salts × generations rows, tens): a
-        groupBy here would add a full shuffle-partition exchange just
-        to add a handful of ints (round-3 paid ~0.2s/query for it).
+        the query's buckets), not O(postings).
 
-        When the whole dictionary fits max_cached_dict_rows it loads
-        once and later probes are dict lookups (no Spark job)."""
+        When the whole dictionary fits max_cached_dict_rows (counted
+        from parquet footers) it loads once and later probes are dict
+        lookups."""
         if not self._df_cache_checked:
             self._df_cache_checked = True
-            if self._local_segs is not None:
-                # local fast path: footer-only row count, then ONE
-                # column-pruned read aggregated in Arrow C++ — no
-                # Spark job at all (localio module docstring)
-                n_rows = sum(ix.count_rows() for ix in self._local_segs)
-                if n_rows <= self.max_cached_dict_rows:
-                    cache = {}
-                    for ix in self._local_segs:
-                        tb = ix.read(None, ["term", "n_docs"])
-                        if tb is None:
-                            continue
-                        agg = tb.group_by("term").aggregate(
-                            [("n_docs", "sum")])
-                        for t, nd in zip(agg.column("term").to_pylist(),
-                                         agg.column("n_docs_sum").to_pylist()):
-                            cache[t] = cache.get(t, 0) + int(nd)
-                    self._df_cache = cache
-            else:
-                # parquet count() is metadata-only — one cheap job, once
-                n_rows = sum(df.count() for df in self._seg_dfs)
-                if self._seg_dfs and n_rows <= self.max_cached_dict_rows:
-                    cache: dict[str, int] = {}
-                    rows = None
-                    for df in self._seg_dfs:
-                        part = df.select("term", "n_docs")
-                        rows = part if rows is None else rows.unionByName(part)
-                    for r in rows.collect():
-                        cache[r["term"]] = cache.get(r["term"], 0) + int(r["n_docs"])
-                    self._df_cache = cache
+            if self._reader.segment_rows() <= self.max_cached_dict_rows:
+                self._df_cache = self._reader.dfs()
         if self._df_cache is not None:
             return {t: self._df_cache[t] for t in terms if t in self._df_cache}
-        dfs: dict[str, int] = {}
-        if self._local_segs is not None:
-            import pyarrow.compute as pc
-
-            buckets = sorted({self.cfg.term_bucket_of(t) for t in terms})
-            filt = pc.field("term").isin(list(terms))
-            for ix in self._local_segs:
-                tb = ix.read(buckets, ["term", "n_docs"], filter=filt)
-                if tb is None:
-                    continue
-                for t, nd in zip(tb.column("term").to_pylist(),
-                                 tb.column("n_docs").to_pylist()):
-                    dfs[t] = dfs.get(t, 0) + int(nd)
-            return dfs
-        for r in self._gen_union(terms, ["term", "n_docs"]).collect():
-            dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["n_docs"])
-        return dfs
+        return self._reader.dfs(terms)
 
     def _fetch_postings(self, terms: list[str]) -> tuple[dict[str, "_TermPostings"], dict[str, int]]:
         """ONE partition-pruned, predicate-pushed scan (across all
@@ -1787,7 +1671,7 @@ class Searcher:
 
         Warm terms serve from the LRU posting cache (bounded by
         cache_postings_budget TOTAL postings) — a query whose vocab
-        was seen recently skips the Spark job entirely."""
+        was seen recently skips the read entirely."""
         cached: dict[str, list] = {}
         cached_dfs: dict[str, int] = {}
         missing = []
@@ -1859,38 +1743,31 @@ class Searcher:
             self._post_cache_postings -= old[2]
 
     def _fetch_postings_scan(self, terms: list[str]) -> tuple[dict[str, "_TermPostings"], dict[str, int]]:
-        """The actual pruned fetch (cache-miss path): a direct pyarrow
-        read for local index roots (same partition pruning + rowgroup
-        pushdown, no Spark job — localio module docstring), the pruned
-        Spark scan as Arrow otherwise. Both decode through the one
-        Arrow decoder, once per term: the cache (and every cursor
-        built from it) shares the flat arrays — warm queries never
-        touch varints."""
-        if self._local_segs is None:
-            return _decode_postings(self._gen_union(
-                terms, ["term", "n_docs", "blocks"]).toArrow())
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        buckets = sorted({self.cfg.term_bucket_of(t) for t in terms})
-        filt = pc.field("term").isin(list(terms))
-        tables = [tb for ix in self._local_segs
-                  if (tb := ix.read(buckets, ["term", "n_docs", "blocks"],
-                                    filter=filt)) is not None]
-        if not tables:
-            return {}, {}
+        """The actual pruned fetch (cache-miss path): one index-reader
+        read (partition pruning + rowgroup pushdown, no Spark job),
+        decoded through the one Arrow decoder, once per term: the cache
+        (and every cursor built from it) shares the flat arrays — warm
+        queries never touch varints."""
         return _decode_postings(
-            pa.concat_tables(tables, promote_options="default"))
+            self._reader.segments(terms, ["term", "n_docs", "blocks"]))
 
     def _attr_cols(self) -> list[str]:
         """Structured-filter attribute columns present in the forward
-        table (cached rows carry them for python_filter)."""
-        if self._local_docs is not None:
-            names = self._local_docs[0].schema_names()
-            if names:
-                return [c for c in ("role", "tool", "ts") if c in names]
+        table of any generation (cached rows carry them for
+        python_filter; a generation without one reads NULL)."""
         return [c for c in ("role", "tool", "ts")
-                if c in self._forward_docs().columns]
+                if c in self._reader.columns()]
+
+    def _check_filter_fields(self, parsed) -> None:
+        """ValueError when a structured filter names a field no
+        generation's forward table has."""
+        missing = {c for c in qs_filter_columns(parsed.filters,
+                                                parsed.neg_filters)
+                   if c not in self._reader.columns()}
+        if missing:
+            raise ValueError(
+                f"query_string filter fields not in index forward table: "
+                f"{missing}")
 
     def _cache_doc(self, doc_ord: int, entry: tuple) -> None:
         while len(self._doc_cache) >= self.doc_cache_max:
@@ -1905,48 +1782,12 @@ class Searcher:
         if not need:
             return
         attrs = self._attr_cols()
-        blocks = sorted({o // self.cfg.doc_block_size for o in need})
-        if self._local_docs is not None:
-            # local fast path: doc_block dir pruning + a doc_ord
-            # rowgroup-statistics filter, straight through pyarrow (the
-            # forward table is written doc_ord-contiguous, so the
-            # stats are tight) — no Spark job, no isin-literal plans
-            import pyarrow.compute as pc
-
-            filt = pc.field("doc_ord").isin(need)
-            cols = ["doc_ord", "conv_id", "turn_idx", *attrs]
-            for ix in self._local_docs:
-                tb = ix.read(blocks, cols, filter=filt)
-                if tb is None or tb.num_rows == 0:
-                    continue
-                tb = localio.strip_tz(tb)
-                # a generation without an attribute column reads NULL
-                for r in tb.to_pylist():
-                    self._cache_doc(int(r["doc_ord"]),
-                                    (r["conv_id"], int(r["turn_idx"]),
-                                     {a: r.get(a) for a in attrs}))
-            return
-        base = (self._forward_docs()
-                .where(F.col("doc_block").isin(blocks)))
-        if len(need) <= 256:
-            base = base.where(F.col("doc_ord").isin(need))
-        else:
-            # thousands of isin literals cost more to ship over py4j
-            # and analyze than the scan itself (a late probe round
-            # probes 8192 ords; profiled ~2 s/round on the ts-range
-            # shape). Ship the ord set as ONE Arrow batch and
-            # broadcast-hash-join instead; keep min/max bounds as a
-            # pushable residual so parquet row groups still prune.
-            need_arr = np.asarray(need, dtype=np.int64)
-            need_df = self.spark.createDataFrame(
-                pd.DataFrame({"doc_ord": need_arr}))
-            base = (base
-                    .where((F.col("doc_ord") >= int(need_arr.min()))
-                           & (F.col("doc_ord") <= int(need_arr.max())))
-                    .join(F.broadcast(need_df), "doc_ord"))
-        rows = base.select("doc_ord", "conv_id", "turn_idx",
-                           *attrs).collect()
-        for r in rows:
+        # doc_block dir pruning + a doc_ord rowgroup-statistics filter
+        # (the forward table is written doc_ord-contiguous, so the
+        # stats are tight)
+        tb = self._reader.docs(need, ["doc_ord", "conv_id", "turn_idx",
+                                      *attrs])
+        for r in tb.to_pylist():
             self._cache_doc(int(r["doc_ord"]),
                             (r["conv_id"], int(r["turn_idx"]),
                              {a: r[a] for a in attrs}))
@@ -2012,15 +1853,6 @@ class Searcher:
                 for t in hit:
                     weights[t] = weights.get(t, 0.0) + boost
         return weights
-
-    def _forward_docs(self) -> DataFrame:
-        """The forward table as a cached DataFrame: repeated filtered
-        searches reuse the resolved file index + parquet footers
-        instead of re-listing the docs tree per query (same idea as
-        _seg_dfs; refresh() rebinds)."""
-        if self._docs_df is None:
-            self._docs_df = catalog.read_docs(self.spark, self.index_dir)
-        return self._docs_df
 
     def _score_all(self, cursors: list["_Cursor"], fmode: str, k1: float,
                    b: float, avgdl: float) -> tuple[np.ndarray, np.ndarray]:
@@ -2092,14 +1924,7 @@ class Searcher:
         resolve (conv_id, turn_idx) rides along for free. Returns
         None when the driver bound or the probe budget says the
         distributed path should run instead."""
-        docs_df = self._forward_docs()
-        missing_f = {c for c in qs_filter_columns(parsed.filters,
-                                                  parsed.neg_filters)
-                     if c not in docs_df.columns}
-        if missing_f:
-            raise ValueError(
-                f"query_string filter fields not in index forward table: "
-                f"{missing_f}")
+        self._check_filter_fields(parsed)
         probe_dfs = self._probe_dfs(sorted(weights))
         if sum(probe_dfs.values()) > self.max_driver_postings:
             return None
@@ -2159,8 +1984,8 @@ class Searcher:
         # predicates evaluate in PYTHON over cached forward rows
         # (querystring.python_filter — documented Catalyst-parity
         # three-valued semantics): a probe chunk fetches only the
-        # UNCACHED rows via one pruned scan, and a warm repeat whose
-        # candidate heads are all cached runs ZERO Spark jobs
+        # UNCACHED rows via one pruned read, and a warm repeat whose
+        # candidate heads are all cached reads nothing
         pred = python_filter(parsed.filters, parsed.neg_filters)
         survivors: list[tuple[float, int, str, int]] = []
         pos = 0
@@ -2185,8 +2010,7 @@ class Searcher:
             for o, s in zip(ords, sc):
                 ent = self._doc_cache.get(o)
                 if ent is None:
-                    # absent from the forward table — or, after the
-                    # bulk round, rejected by the Catalyst filter
+                    # absent from the forward table
                     continue
                 row = {"conv_id": ent[0], "turn_idx": ent[1], **ent[2]}
                 if pred(row):
@@ -2196,14 +2020,14 @@ class Searcher:
             if (not bulk_done and len(survivors) < k and pos < n_cand):
                 # round 1 missed: the filter rejects the score head
                 # (adversarial filter-score correlation — profiled: a
-                # mid-day ts range vs hot-term scores paid one Spark
-                # collect per 4x-growing round, five sequential jobs
-                # at 960k docs and worse at scale). Fetch the ENTIRE
+                # mid-day ts range vs hot-term scores paid one fetch
+                # per 4x-growing round, five sequential fetches at
+                # 960k docs and worse at scale). Fetch the ENTIRE
                 # remaining probe budget (bounded by _PROBE_CAP, under
-                # the doc-cache capacity) with ONE broadcast-join job;
-                # the python predicate stays the sole filter arbiter
-                # over the cached rows, and a warm repeat finds every
-                # row cached and runs ZERO jobs.
+                # the doc-cache capacity) with ONE pruned read; the
+                # python predicate stays the sole filter arbiter over
+                # the cached rows, and a warm repeat finds every row
+                # cached and reads nothing.
                 m = int(min(self._PROBE_CAP, n_cand))
                 if head.size < m:
                     head = ordered_head(m)
@@ -2357,14 +2181,7 @@ class Searcher:
                 "phrase queries need an index built with "
                 "IndexConfig(store_positions=True)")
         if parsed.has_filters:
-            docs_df = self._forward_docs()
-            missing_f = {c for c in qs_filter_columns(parsed.filters,
-                                                      parsed.neg_filters)
-                         if c not in docs_df.columns}
-            if missing_f:
-                raise ValueError(
-                    f"query_string filter fields not in index forward "
-                    f"table: {missing_f}")
+            self._check_filter_fields(parsed)
         # `+` rewrite groups: a group containing the matchall sentinel
         # never gates — split it out as optional scorers. A vacuous
         # NEGATIVE group or no gating group at all → batch path.

@@ -26,7 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from sparkbm25 import catalog
+from sparkbm25 import catalog, localio
 from sparkbm25.build import BuildResult, build_index
 from sparkbm25.config import IndexConfig
 
@@ -67,6 +67,7 @@ def update_index(
     when the append leaves K or more live generations, they fold
     in-place into one (compact_generations) — queries otherwise fan
     out to one pruned scan per generation forever."""
+    localio.require_local_root(spark, index_root)
     os.makedirs(index_root, exist_ok=True)
     import shutil
 
@@ -324,9 +325,7 @@ def stream_index(
             return _ns[0]
         qid = None
         if checkpoint:
-            from sparkbm25.localio import local_path
-
-            p = local_path(checkpoint)
+            p = localio.local_path(checkpoint)
             if p is not None:
                 try:
                     with open(os.path.join(p, "metadata")) as f:

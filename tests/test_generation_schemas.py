@@ -30,34 +30,52 @@ def _role_only(n: int, seed: int, prefix: str) -> pd.DataFrame:
     })
 
 
-def _expected(corpus: pd.DataFrame, role: str, term: str, k: int):
-    """Reference top-k of `term` restricted to one role, BM25 stats
-    still index-wide (ES filter semantics)."""
+def _expected(corpus: pd.DataFrame, field: str, value: str, term: str,
+              k: int):
+    """Reference top-k of `term` restricted to docs whose `field` is
+    `value`, BM25 stats still index-wide (ES filter semantics)."""
     exp = bm25_reference_topk(corpus, pd.DataFrame(
         {"query_id": [0], "query_text": [term], "k": [len(corpus)]}),
         k=len(corpus))
-    keys = corpus.set_index(["conv_id", "turn_idx"])["role"]
-    keep = [keys[(c, t)] == role for c, t in zip(exp["conv_id"], exp["turn_idx"])]
+    keys = corpus.set_index(["conv_id", "turn_idx"])[field]
+    keep = [keys[(c, t)] == value
+            for c, t in zip(exp["conv_id"], exp["turn_idx"])]
     exp = exp[keep].head(k).reset_index(drop=True)
     return exp.assign(rank=np.arange(1, len(exp) + 1, dtype=np.int32))
 
 
+# (generations in append order, filter field, value, conv-id prefix of
+# the generation whose docs must be among the hits)
+ATTRIBUTE_CASES = [
+    # generation 1 has only `role`: its missing tool/ts read NULL
+    ([make_transcripts(600, seed=71), _role_only(40, 72, "zz_")],
+     "role", "user", "zz_"),
+    # only generation 1 has `tool`: the filter must still reach it
+    ([_role_only(40, 73, "a_"), make_transcripts(600, seed=71)],
+     "tool", "search", "conv_"),
+]
+
+
 def test_generations_with_different_attribute_columns(spark, tmp_path):
-    root = str(tmp_path / "root")
-    t0 = make_transcripts(600, seed=71)
-    t1 = _role_only(40, 72, "zz_")
-    update_index(spark, spark.createDataFrame(t0), root, IndexConfig())
-    update_index(spark, spark.createDataFrame(t1), root, IndexConfig())
-    corpus = pd.concat([t0, t1], ignore_index=True)
-    exp = _expected(corpus, "user", "w0003", 30)
-    assert (exp["conv_id"].str.startswith("zz_")).any()
+    for i, (parts, field, value, hit_prefix) in enumerate(ATTRIBUTE_CASES):
+        _check_attribute_case(spark, str(tmp_path / f"root{i}"), parts,
+                              field, value, hit_prefix)
+
+
+def _check_attribute_case(spark, root, parts, field, value, hit_prefix):
+    for part in parts:
+        update_index(spark, spark.createDataFrame(part), root, IndexConfig())
+    corpus = pd.concat(parts, ignore_index=True)
+    exp = _expected(corpus, field, value, "w0003", 30)
+    assert (exp["conv_id"].str.startswith(hit_prefix)).any()
 
     q = pd.DataFrame({"query_id": [0, 1],
-                      "query_text": ["role:user w0003",
+                      "query_text": [f"{field}:{value} w0003",
                                      "role:assistant AND turn_idx:[0 TO 0]"],
                       "k": [30, 500]})
 
     def check(where: str) -> None:
+        where = f"{field}:{value}, {where}"
         got = _sorted(search_batch(spark, root, q).toPandas())
         g0 = got[got["query_id"] == 0].reset_index(drop=True)
         assert g0["conv_id"].tolist() == exp["conv_id"].tolist(), where
@@ -68,8 +86,11 @@ def test_generations_with_different_attribute_columns(spark, tmp_path):
                       & (corpus["turn_idx"] == 0)]
         assert sorted(g1["conv_id"]) == sorted(want["conv_id"]), where
         assert (g1["score"] == 1.0).all()
-        hits = Searcher(spark, root).search("w0003 AND role:user", k=30)
+        s = Searcher(spark, root)
+        hits = s.search(f"w0003 AND {field}:{value}", k=30)
+        assert s.last_path == "filtered", where
         assert hits["conv_id"].tolist() == exp["conv_id"].tolist(), where
+        assert hits["turn_idx"].tolist() == exp["turn_idx"].tolist(), where
         np.testing.assert_allclose(hits["score"].astype(float),
                                    exp["score"], rtol=1e-9)
 
@@ -100,3 +121,35 @@ def test_compaction_folds_a_zero_token_generation(spark, tmp_path):
     assert g["conv_id"].tolist() == e["conv_id"].tolist()
     assert g["turn_idx"].tolist() == e["turn_idx"].tolist()
     np.testing.assert_allclose(g["score"], e["score"], rtol=1e-9)
+
+
+def test_generations_with_different_timestamp_types(spark, tmp_path):
+    """A generation appended from a pyarrow-written parquet input has a
+    TIMESTAMP_NTZ `ts` (int64 micros), one appended from a pandas frame
+    a session-zone timestamp (written as INT96, read back as nanos):
+    driver reads over both answer like search_batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "root")
+    t0 = make_transcripts(300, seed=74)
+    t1 = make_transcripts(300, seed=75).assign(
+        conv_id=lambda d: "zz_" + d["conv_id"])
+    src = str(tmp_path / "t0.parquet")
+    pq.write_table(pa.Table.from_pandas(t0, preserve_index=False), src)
+    update_index(spark, spark.read.parquet(src), root, IndexConfig())
+    update_index(spark, spark.createDataFrame(t1), root, IndexConfig())
+    lo, hi = t0["ts"].iloc[100], t1["ts"].iloc[200]
+    for qt in ("w0001 w0002", f"ts:[{lo:%Y-%m-%dT%H:%M:%S} TO "
+               f"{hi:%Y-%m-%dT%H:%M:%S}] w0001"):
+        q = pd.DataFrame({"query_id": [0], "query_text": [qt], "k": [50]})
+        exp = _sorted(search_batch(spark, root, q).toPandas())
+        s = Searcher(spark, root)
+        hits = s.search(qt, k=50)
+        assert s.last_path != "batch", qt
+        assert exp["conv_id"].str.startswith("zz_").any(), qt
+        assert not exp["conv_id"].str.startswith("zz_").all(), qt
+        assert hits["conv_id"].tolist() == exp["conv_id"].tolist(), qt
+        assert hits["turn_idx"].tolist() == exp["turn_idx"].tolist(), qt
+        np.testing.assert_allclose(hits["score"].astype(float),
+                                   exp["score"], rtol=1e-9)

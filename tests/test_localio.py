@@ -1,9 +1,10 @@
-"""The driver's local pyarrow fast path (localio) must return
-byte-identical results to the Spark fallback for every read it
-serves: postings fetch, df probe, forward-row resolve (including ts
-attrs for filtered queries), across single- and multi-generation
-indexes. The fallback stays live for non-local roots, so both paths
-are permanent and must agree forever."""
+"""The driver's index reader (localio.IndexReader) serves every
+driver-side read of the Searcher — postings fetch, df probe,
+forward-row resolve (including ts attrs for filtered queries) — across
+single- and multi-generation indexes. Each read is checked against a
+reference: bm25_reference_topk for rankings, search_batch (the
+oracle-checked path) for filtered and phrase shapes, and the pandas
+corpus for dfs and forward rows."""
 
 import datetime
 from collections import Counter
@@ -12,10 +13,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from sparkbm25 import IndexConfig, Searcher, bm25_reference_topk, build_index
+from sparkbm25 import (IndexConfig, Searcher, bm25_reference_topk, build_index,
+                       search_batch)
 from sparkbm25.analysis import tokenize_series
 from sparkbm25.fixtures import make_queries, make_transcripts
-from sparkbm25.localio import local_path
+from sparkbm25.localio import IndexReader, local_path
 from sparkbm25.streaming import update_index
 
 N_TURNS = 3000
@@ -45,16 +47,11 @@ def built(spark, tmp_path_factory):
     return index_dir
 
 
-def _spark_forced(spark, index_dir) -> Searcher:
-    s = Searcher(spark, index_dir)
-    s._local_segs = None
-    s._local_docs = None
-    return s
-
-
 def test_local_readers_bound(spark, built):
     s = Searcher(spark, built)
-    assert s._local_segs is not None and s._local_docs is not None
+    reader = s._reader
+    assert isinstance(reader, IndexReader)
+    assert s.refresh()._reader is not reader
 
 
 QUERIES = [
@@ -63,17 +60,45 @@ QUERIES = [
     "w0001 w0005 w0100",           # multi-term
     "zzznotaterm",                 # absent
     "role:user w0001 w0005",       # filtered driver path (attrs)
-    'ts:[2024-01-01 TO 2024-12-31] w0002',  # ts attr through doc cache
+    'ts:[2024-01-01 TO 2024-12-31] w0002',  # ts attr, no doc in range
+    'ts:[2026-01-01T12:00:00 TO 2026-01-02T12:00:00] w0002',  # ts hits
     '"w0001 w0002"',               # phrase (positions untouched here)
 ]
 
 
+def _assert_same_ranking(got, exp, qt):
+    exp = exp.sort_values("rank").reset_index(drop=True)
+    assert got["conv_id"].tolist() == exp["conv_id"].tolist(), qt
+    assert got["turn_idx"].tolist() == exp["turn_idx"].tolist(), qt
+    np.testing.assert_allclose(got["score"].astype(float),
+                               exp["score"].astype(float), rtol=1e-9)
+
+
+def _assert_like_batch(spark, root, got, qt, k, mode="or"):
+    q = pd.DataFrame({"query_id": [0], "query_text": [qt], "k": [k]})
+    _assert_same_ranking(
+        got, search_batch(spark, root, q, k=k, mode=mode).toPandas(), qt)
+
+
+def _assert_ranked_like_reference(got, corpus, qt, mode):
+    exp = bm25_reference_topk(
+        corpus, pd.DataFrame({"query_id": [0], "query_text": [qt]}),
+        k=10, mode=mode)
+    _assert_same_ranking(got, exp, qt)
+
+
 @pytest.mark.parametrize("qt", QUERIES)
 def test_fetch_parity_single_gen(spark, built, qt):
-    a = Searcher(spark, built).search(qt, k=10)
-    b = _spark_forced(spark, built).search(qt, k=10)
-    pd.testing.assert_frame_equal(a.reset_index(drop=True),
-                                  b.reset_index(drop=True))
+    s = Searcher(spark, built)
+    got = s.search(qt, k=10)
+    assert s.last_path != "batch", qt
+    if ":" in qt or '"' in qt:
+        _assert_like_batch(spark, built, got, qt, 10)
+    else:
+        _assert_ranked_like_reference(got, make_transcripts(N_TURNS), qt,
+                                      "or")
+    if qt.startswith("ts:[2026"):
+        assert len(got) == 10
 
 
 def test_fetch_parity_multi_gen(spark, tmp_path_factory):
@@ -82,11 +107,14 @@ def test_fetch_parity_multi_gen(spark, tmp_path_factory):
     spl = N_TURNS // 2
     update_index(spark, spark.createDataFrame(base.iloc[:spl]), root)
     update_index(spark, spark.createDataFrame(base.iloc[spl:]), root)
-    for qt in ("w0000", "w0001 w0005", "role:user w0001"):
-        a = Searcher(spark, root).search(qt, k=10)
-        b = _spark_forced(spark, root).search(qt, k=10)
-        pd.testing.assert_frame_equal(a.reset_index(drop=True),
-                                      b.reset_index(drop=True))
+    for qt in ("w0000", "w0001 w0005"):
+        _assert_ranked_like_reference(Searcher(spark, root).search(qt, k=10),
+                                      base, qt, "or")
+    qt = "role:user w0001"
+    s = Searcher(spark, root)
+    got = s.search(qt, k=10)
+    assert s.last_path == "filtered"
+    _assert_like_batch(spark, root, got, qt, 10)
 
 
 def _two_gens(spark, root, cfg):
@@ -100,22 +128,12 @@ def _two_gens(spark, root, cfg):
     return base
 
 
-def _assert_ranked_like_reference(got, corpus, qt, mode):
-    exp = bm25_reference_topk(
-        corpus, pd.DataFrame({"query_id": [0], "query_text": [qt]}),
-        k=10, mode=mode)
-    assert got["conv_id"].tolist() == exp["conv_id"].tolist(), qt
-    assert got["turn_idx"].tolist() == exp["turn_idx"].tolist(), qt
-    np.testing.assert_allclose(got["score"].astype(float),
-                               exp["score"].astype(float), rtol=1e-9)
-
-
 def test_fetch_parity_multi_gen_positions(spark, tmp_path_factory):
-    """Both postings sources over two generations with positions: a
-    term's blocks and its pos stream come from both generations and
-    decode into one list. Exact and sloppy phrases, a prefix expansion
-    and an AND query answer identically through the local and Spark
-    reads, and like the reference where it applies."""
+    """Postings over two generations with positions: a term's blocks
+    and its pos stream come from both generations and decode into one
+    list. Exact and sloppy phrases, a prefix expansion and an AND query
+    answer on the driver exactly like search_batch, and like the
+    reference where it applies."""
     root = str(tmp_path_factory.mktemp("lio_gen_pos") / "index")
     corpus = _two_gens(spark, root, IndexConfig(store_positions=True))
     cfg = IndexConfig()
@@ -137,15 +155,12 @@ def test_fetch_parity_multi_gen_positions(spark, tmp_path_factory):
     first_conv = corpus["conv_id"].iloc[spl]
     for qt, mode in cases:
         # every hit, not only a top-k: both generations' postings show
-        s_local, s_spark = Searcher(spark, root), _spark_forced(spark, root)
-        got = s_local.search(qt, k=N_TURNS, mode=mode)
-        ref = s_spark.search(qt, k=N_TURNS, mode=mode)
-        assert s_local._local_segs is not None, qt
-        assert "batch" not in (s_local.last_path, s_spark.last_path), qt
+        s = Searcher(spark, root)
+        got = s.search(qt, k=N_TURNS, mode=mode)
+        assert s.last_path != "batch", qt
         assert (got["conv_id"] < first_conv).any(), qt
         assert (got["conv_id"] >= first_conv).any(), qt
-        pd.testing.assert_frame_equal(got.reset_index(drop=True),
-                                      ref.reset_index(drop=True))
+        _assert_like_batch(spark, root, got, qt, N_TURNS, mode)
     _assert_ranked_like_reference(
         Searcher(spark, root).search(f"{prefix}*", k=10),
         corpus, " ".join(expanded), "or")
@@ -154,51 +169,59 @@ def test_fetch_parity_multi_gen_positions(spark, tmp_path_factory):
         corpus, f"{a} {b}", "and")
 
 
+def _reference_dfs(corpus: pd.DataFrame) -> Counter:
+    cfg = IndexConfig()
+    return Counter(t for lst in tokenize_series(
+        corpus["text"], cfg.token_pattern, cfg.max_content_length)
+        for t in set(lst))
+
+
 @pytest.mark.parametrize("terms_dict", [True, False])
 def test_term_dfs_match_reference(spark, tmp_path_factory, terms_dict):
     """Searcher.term_dfs over two generations equals the reference
-    document frequencies, with or without a terms/ table; absent
-    terms are omitted."""
+    document frequencies, with or without a terms/ table, through the
+    whole-dictionary cache and the per-query probe; absent terms are
+    omitted."""
     root = str(tmp_path_factory.mktemp("lio_df") / "index")
     corpus = _two_gens(spark, root,
                        IndexConfig(build_terms_dict=terms_dict))
-    cfg = IndexConfig()
-    ref = Counter(t for lst in tokenize_series(
-        corpus["text"], cfg.token_pattern, cfg.max_content_length)
-        for t in set(lst))
+    ref = _reference_dfs(corpus)
     terms = ["w0000", "w0001", "w0100", "w4721", "zzznotaterm"]
     exp = {t: ref[t] for t in terms if t in ref}
     assert "zzznotaterm" not in exp and len(exp) >= 3
     assert Searcher(spark, root).term_dfs(terms) == exp
-    assert _spark_forced(spark, root).term_dfs(terms) == exp
+    assert Searcher(spark, root, max_cached_dict_rows=0).term_dfs(terms) == exp
 
 
 def test_doc_cache_rows_identical(spark, built):
-    """The cached forward rows (incl. the ts attr rendering) must match
-    between the pyarrow read and the Spark collect — python_filter
-    evaluates structured predicates over these rows."""
-    s_new = Searcher(spark, built)
-    s_old = _spark_forced(spark, built)
+    """The cached forward rows equal the corpus rows in doc_ord order
+    (the dense rank of (conv_id, turn_idx)), attrs included, with ts
+    rendered as a naive UTC datetime like Spark's collect() —
+    python_filter evaluates structured predicates over these rows."""
+    s = Searcher(spark, built)
     ords = list(range(0, 50))
-    s_new._fetch_doc_rows(ords)
-    s_old._fetch_doc_rows(ords)
-    assert set(s_new._doc_cache) == set(s_old._doc_cache)
+    s._fetch_doc_rows(ords)
+    assert set(s._doc_cache) == set(ords)
+    corpus = (make_transcripts(N_TURNS)
+              .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
     for o in ords:
-        a, b = s_new._doc_cache[o], s_old._doc_cache[o]
-        assert a == b, (o, a, b)
-        ts = a[2].get("ts")
-        if ts is not None:
-            assert isinstance(ts, datetime.datetime) and ts.tzinfo is None
+        r = corpus.iloc[o]
+        exp = (r["conv_id"], int(r["turn_idx"]),
+               {"role": r["role"], "tool": r["tool"],
+                "ts": r["ts"].to_pydatetime()})
+        got = s._doc_cache[o]
+        assert got == exp, (o, got, exp)
+        ts = got[2]["ts"]
+        assert isinstance(ts, datetime.datetime) and ts.tzinfo is None
 
 
 def test_probe_dfs_parity(spark, built):
     terms = sorted({t for q in make_queries()["query_text"]
                     for t in q.lower().split()})
-    s_new = Searcher(spark, built)
-    s_old = _spark_forced(spark, built)
-    assert s_new._probe_dfs(terms) == s_old._probe_dfs(terms)
+    ref = _reference_dfs(make_transcripts(N_TURNS))
+    exp = {t: ref[t] for t in terms if t in ref}
+    assert len(exp) >= 10
+    assert Searcher(spark, built)._probe_dfs(terms) == exp
     # per-query (uncached) probe path too
-    s_new2 = Searcher(spark, built, max_cached_dict_rows=0)
-    s_old2 = _spark_forced(spark, built)
-    s_old2.max_cached_dict_rows = 0
-    assert s_new2._probe_dfs(terms) == s_old2._probe_dfs(terms)
+    assert Searcher(spark, built,
+                    max_cached_dict_rows=0)._probe_dfs(terms) == exp

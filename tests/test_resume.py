@@ -153,6 +153,7 @@ def test_empty_corpus_build_and_search(spark, tmp_path):
     assert search_batch(spark, d, q, k=5).count() == 0
     s = Searcher(spark, d)
     assert len(s.search("alpha", k=5)) == 0
+    assert s.term_dfs(["alpha"]) == {}
 
 
 class _Crash(Exception):
@@ -414,8 +415,8 @@ def test_zero_token_corpus_builds(spark, tmp_path, checkpoint_runs):
     """Docs that yield no tokens at all (null and punctuation-only
     text) leave tf/ and segments/ without a single parquet file: the
     build still completes, every term query answers empty on the
-    driver (local and Spark reads) and batch paths, and resume=True on
-    the result does no work."""
+    driver and batch paths, and resume=True on the result does no
+    work."""
     from sparkbm25 import Searcher
 
     pdf = pd.DataFrame({"conv_id": ["c0", "c0"], "turn_idx": [0, 1],
@@ -428,11 +429,10 @@ def test_zero_token_corpus_builds(spark, tmp_path, checkpoint_runs):
     res = build_index(spark, sdf, d, cfg, input_desc="z")
     assert res.n_docs == 2
     queries = ["w0001", "alpha beta", "alpha AND beta", "alp*"]
-    s_spark = Searcher(spark, d)
-    s_spark._local_segs = s_spark._local_docs = None
-    for s in (Searcher(spark, d), s_spark):
-        for qt in queries:
-            assert s.search(qt, k=5).empty, qt
+    s = Searcher(spark, d)
+    for qt in queries:
+        assert s.search(qt, k=5).empty, qt
+    assert s.term_dfs(["w0001", "alpha"]) == {}
     q = pd.DataFrame({"query_id": range(len(queries)),
                       "query_text": queries, "k": 5})
     assert search_batch(spark, d, q, k=5).toPandas().empty
