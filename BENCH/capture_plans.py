@@ -5,7 +5,7 @@ For each key pipeline, dump .explain('formatted') and assert the plan
 properties that matter at 100 TB:
   - segment scan: PartitionFilters on term_bucket + PushedFilters on
     term (partition pruning + rowgroup pushdown)
-  - forward-table resolve: PushedFilters on doc_ord, broadcast join
+  - forward-table point read: PushedFilters on doc_ord
   - build tf agg: partial_count before the exchange (map-side combine)
   - WholeStageCodegen spans on the JVM-side stages
 """
@@ -183,28 +183,6 @@ def main():
                    "hashpartitioning(term" in p and "Generate" not in p
                    and ("MapInArrow" in p or "ArrowEvalPython" in p
                         or "PythonMapInArrow" in p)))
-
-    # 7. round-5 banded multi-term expansion: the prefix leaf's range
-    #    predicates reach the parquet scan of the term-SORTED
-    #    dictionary (row-group min/max pruning), the fuzzy leaf reads
-    #    only (term, length)
-    from sparkbm25.search import _expand_terms_source
-
-    src = _expand_terms_source(spark, idx)
-    pre = src.where((F.col("term") >= "alp") & (F.col("term") < "alq")
-                    & F.col("term").startswith("alp")).select("term")
-    p = explain_str(pre)
-    sections.append(("Prefix expansion (banded dictionary range)", p))
-    checks.append(("prefix expansion: range predicates pushed to parquet",
-                   "GreaterThanOrEqual(term,alp)" in p
-                   and "LessThan(term,alq)" in p))
-    fz = src.where((F.col("length") >= 3) & (F.col("length") <= 7)
-                   & (F.levenshtein(F.col("term"), F.lit("alpha"), 2) >= 0))
-    p = explain_str(fz)
-    sections.append(("Fuzzy expansion (length band + threshold levenshtein)", p))
-    checks.append(("fuzzy expansion: length band pushed, narrow read schema",
-                   "GreaterThanOrEqual(length,3)" in p
-                   and "struct<term:string,length:int>" in p))
 
     out = ["# BENCH/PLANS — physical-plan evidence\n"]
     out.append("## Checks\n")

@@ -1087,11 +1087,10 @@ def build_index(
                 .parquet(catalog.segments_dir(index_dir)))
         # term-SORTED write with a length column (VERDICT r4 item 3):
         # range-partitioned + sorted-within-partition means parquet
-        # row-group min/max statistics on `term` are TIGHT, so a
-        # prefix leaf's range predicate (term >= p AND term < p+1)
-        # prunes to the matching row groups instead of scanning the
-        # whole vocabulary; `length` gives fuzzy leaves a cheap
-        # |len(term)-len(q)| <= d band before any edit-distance work
+        # row-group min/max statistics on `term` are TIGHT, so the
+        # driver expansion's band filter on a prefix leaf
+        # (term >= p AND term < p+1) prunes to the matching row groups
+        # instead of scanning the whole vocabulary
         terms = (
             segs.groupBy("term")
             .agg(F.sum("n_docs").alias("df"), F.first("term_bucket").alias("term_bucket"))

@@ -90,9 +90,12 @@ class IndexConfig:
     # segment merge (single chunk, one fewer write, but a resumed run
     # recomputes stage 1).
     checkpoint_runs: bool = True
-    # Build the term dictionary table (term -> df). Queries don't need
-    # it (routing is hashed; df comes from segment rows) — it exists
-    # for analytics and the J5 inventory; skippable for raw throughput.
+    # Build the term-sorted dictionary table (one row per term).
+    # Multi-term expansion (prefix / fuzzy / wildcard / regexp leaves)
+    # reads it banded by term range, so row-group statistics prune the
+    # read; without it expansion reads every segment row's term. Term
+    # routing is hashed and df comes from segment rows, so no other
+    # query reads it.
     build_terms_dict: bool = True
     # Store within-doc token positions in the posting blocks (the
     # Lucene positions stream analog). Required for phrase queries;

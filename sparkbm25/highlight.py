@@ -16,13 +16,13 @@ Semantics follow the ES unified highlighter's observable behavior:
 * A hit's tokens are re-scanned with the SAME analyzer contract the
   index used (``analysis.DEFAULT_TOKEN_PATTERN``, lowercase), and a
   token is highlighted when any positive text leaf of the parsed
-  query matches it: Term equality, Prefix startswith, Wildcard /
-  Regexp automaton match (the Lucene-dialect regexp goes through
-  ``lucenere.to_portable`` exactly like the expansion path), Fuzzy
-  within max_edits (same ``_levenshtein`` the search path trusts),
-  and each member term of a Phrase (the unified highlighter marks
-  phrase passages term-by-term). Negated leaves and structured
-  filters never highlight — they don't score either.
+  query matches it: Term equality, each member term of a Phrase (the
+  unified highlighter marks phrase passages term-by-term), and for
+  Prefix / Wildcard / Regexp / Fuzzy the same matcher
+  (``search._multiterm_matcher``) the dictionary expansion runs, so a
+  token highlights exactly when it is in its leaf's expansion.
+  Negated leaves and structured filters never highlight — they don't
+  score either.
 * Offsets are computed on the ORIGINAL text (case-insensitive token
   scan), so the emitted fragments splice ``pre_tag``/``post_tag``
   around the user's own characters — no lowercased copies leak out.
@@ -45,7 +45,6 @@ import pandas as pd
 
 from sparkbm25 import querystring as qs
 from sparkbm25.analysis import DEFAULT_TOKEN_PATTERN
-from sparkbm25.lucenere import to_portable
 
 
 def _leaf_matchers(tree, token_pattern: str = DEFAULT_TOKEN_PATTERN):
@@ -55,65 +54,39 @@ def _leaf_matchers(tree, token_pattern: str = DEFAULT_TOKEN_PATTERN):
     None when the query has no highlightable leaf (filter-only /
     match-all queries highlight nothing — constant-score semantics).
     """
+    from sparkbm25.search import _multiterm_matcher
+
     pos, _neg = qs.collect_leaves(tree)
     exact: set[str] = set()
-    prefixes: list[str] = []
-    regexes: list[re.Pattern] = []
-    fuzzies: list[tuple[str, int]] = []
+    matchers = []
     for leaf in pos:
         if isinstance(leaf, qs.Term):
             exact.add(leaf.text)
         elif isinstance(leaf, qs.Phrase):
             exact.update(leaf.terms)
         elif isinstance(leaf, qs.Prefix):
-            prefixes.append(leaf.prefix)
+            matchers.append(_multiterm_matcher("prefix", leaf.prefix)[1])
         elif isinstance(leaf, qs.Wildcard):
-            # same semantics as the dictionary expansion's SQL-LIKE
-            # compile (search._wildcard_parts): `*` = any run, `?` =
-            # exactly one char, everything else literal, full-term
-            # anchored
-            body = "".join(
-                ".*" if ch == "*" else "." if ch == "?" else re.escape(ch)
-                for ch in leaf.pattern)
-            regexes.append(re.compile(body + r"\Z"))
+            matchers.append(_multiterm_matcher("wildcard", leaf.pattern)[1])
         elif isinstance(leaf, qs.Regexp):
-            # (?:...) wrap before the \Z anchor — to_portable's output
-            # may contain top-level alternation, where a bare suffix
-            # anchor binds only to the LAST branch (`cat|dog\Z`
-            # highlighted 'category'; final-round review). The scoring
-            # paths wrap the same way (search.py ^(?:...)$).
-            regexes.append(
-                re.compile("(?:" + to_portable(leaf.pattern) + r")\Z"))
+            matchers.append(_multiterm_matcher("regexp", leaf.pattern)[1])
         elif isinstance(leaf, qs.Fuzzy):
-            fuzzies.append((leaf.term, int(leaf.max_edits)))
-    if not (exact or prefixes or regexes or fuzzies):
+            matchers.append(_multiterm_matcher(
+                "fuzzy", (leaf.term, int(leaf.max_edits)))[1])
+    if not (exact or matchers):
         return None
-
-    from sparkbm25.search import _levenshtein
 
     def mask(tokens: np.ndarray) -> np.ndarray:
         out = np.isin(tokens, sorted(exact)) if exact else np.zeros(
             len(tokens), dtype=bool)
-        if prefixes or regexes or fuzzies:
+        if matchers:
             # dedupe before the python-regex / DP work: a 150-char
             # fragment source repeats stopwords heavily
             uniq = np.unique(tokens[~out])
-            hit = np.zeros(len(uniq), dtype=bool)
-            for i, tok in enumerate(uniq):
-                t = str(tok)
-                if any(t.startswith(p) for p in prefixes):
-                    hit[i] = True
-                elif any(rx.match(t) for rx in regexes):
-                    hit[i] = True
-                else:
-                    for qterm, d in fuzzies:
-                        if (abs(len(t) - len(qterm)) <= d
-                                and _levenshtein(t, qterm) <= d):
-                            hit[i] = True
-                            break
-            matched = set(uniq[hit].tolist())
+            matched = [t for t in uniq.tolist()
+                       if any(m(t) for m in matchers)]
             if matched:
-                out = out | np.isin(tokens, sorted(matched))
+                out = out | np.isin(tokens, matched)
         return out
 
     return mask

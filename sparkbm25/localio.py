@@ -1,5 +1,6 @@
 """Driver-side pyarrow reads of an index root: the one reader behind
-every point read of the interactive Searcher and search_batch's idf map.
+every point read of the interactive Searcher and search_batch's idf
+map, multi-term expansion and top-k resolve.
 
 The interactive Searcher's per-query work is a handful of point reads:
 the pruned posting fetch of a few terms, the (term, n_docs) df probe,
@@ -21,7 +22,8 @@ against a non-local fs.defaultFS, can be neither built nor opened;
 real cluster the analog is the driver reading the hot metadata tier
 through the filesystem client instead of scheduling a job per query —
 the bytes moved are identical. The distributed reads (search_batch's
-range job, catalog.read_docs, compaction) stay on Spark.
+range job and its predicate leg over catalog.read_docs, compaction)
+stay on Spark.
 
 `IndexReader` is bound once per generation set (Searcher binds it at
 construction and on refresh()). Dataset objects cache per directory (a
@@ -216,9 +218,11 @@ class IndexReader:
     """Every driver-side read of one generation set: the segment trees
     (term_bucket routing + term pushdown) and the forward tables
     (doc_block routing + doc_ord pushdown) of all generations, each
-    read through its own LocalParquetIndex and concatenated."""
+    read through its own LocalParquetIndex and concatenated, plus the
+    term dictionaries (row-group pruned term scans)."""
 
     def __init__(self, gen_dirs: list[str], cfg):
+        self._gen_dirs = gen_dirs
         self._bucket_of = cfg.term_bucket_of
         self._doc_block_size = cfg.doc_block_size
         self._segs = [LocalParquetIndex(catalog.segments_dir(g), "term_bucket")
@@ -226,6 +230,7 @@ class IndexReader:
         self._docs = [LocalParquetIndex(catalog.docs_dir(g), "doc_block")
                       for g in gen_dirs]
         self._columns: list[str] | None = None
+        self._dicts: list | None = None
 
     def segments(self, terms: list[str] | None, cols: list[str]):
         """Segment rows of `terms` (None = every row), `cols` only."""
@@ -251,6 +256,28 @@ class IndexReader:
         agg = tb.group_by("term").aggregate([("n_docs", "sum")])
         return dict(zip(agg.column("term").to_pylist(),
                         agg.column("n_docs_sum").to_pylist()))
+
+    def terms(self, filter):
+        """Record batches of the `term` column matching `filter`, read
+        from every generation's term-sorted dictionary (terms/), so a
+        term-range filter prunes row groups by their statistics. When
+        any generation has no dictionary (build_terms_dict=False) the
+        segment rows of every generation stand in; there a term repeats
+        per salt, and in both a term repeats per generation."""
+        if self._dicts is None:
+            import pyarrow.dataset as pads
+
+            files = [_parquet_files(catalog.terms_dir(g))
+                     for g in self._gen_dirs]
+            self._dicts = ([pads.dataset(f, format="parquet") for f in files]
+                           if all(files) else [])
+        if self._dicts:
+            for ds in self._dicts:
+                yield from ds.to_batches(columns=["term"], filter=filter)
+            return
+        tb = self.segments(None, ["term"])
+        if tb.num_rows:
+            yield from tb.filter(filter).to_batches()
 
     def docs(self, ords: list[int], cols: list[str]):
         """Forward rows of `ords`, `cols` only (attribute columns a

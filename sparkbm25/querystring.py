@@ -99,7 +99,7 @@ reference user actually writes:
                            Lucene documents for leading wildcards)
     text~N  text~          fuzzy query, edit distance <= N (0-2,
                            default 2) — dictionary expansion like
-                           prefix, JVM levenshtein
+                           prefix, banded by length
     leaf^B                 clause boost: multiplies the leaf's BM25
                            contribution (terms, phrases, prefixes,
                            fuzzies; ignored on filters — they don't

@@ -501,19 +501,34 @@ def test_or_not_with_filter(spark, built):
 
 
 def test_expansion_guard_is_driver_bounded(spark, built):
-    """VERDICT r3 item 2: the too-many-clauses guard fires from a
-    limit(max_expansions+1) pushed into the scan — the driver never
-    materializes an oversized expansion — and expansion is served from
-    the one-row-per-term terms dictionary, not segment rows."""
-    from sparkbm25.search import _expand_multiterm, _expand_terms_source
+    """The too-many-clauses guard fires while the dictionary read
+    streams, at the (max_expansions+1)-th distinct match, so the driver
+    never materializes an oversized expansion; and expansion reads the
+    one-row-per-term terms dictionary, not segment rows."""
+    from sparkbm25 import localio
+    from sparkbm25.search import _band_filter, _expand_multiterm, _load_stats
 
     _, d, _ = built
+    _, _, cfg, gens = _load_stats(d)
+    reader = localio.IndexReader([g["dir"] for g in gens], cfg)
+    read = reader.terms
+    consumed = []
+
+    def one_term_batches(filt):
+        for b in read(filt):
+            for i in range(b.num_rows):
+                consumed.append(i)
+                yield b.slice(i, 1)
+
+    reader.terms = one_term_batches
     with pytest.raises(ValueError, match="max_expansions"):
-        _expand_multiterm(spark, d, ["w"], [], max_expansions=3)
-    assert _expand_multiterm(spark, d, ["zzzqqq"], [], max_expansions=3) == {
-        "p:zzzqqq": []}
-    src = _expand_terms_source(spark, d)
-    assert src.count() == src.distinct().count()  # terms dict, not segs
+        _expand_multiterm(reader, [("prefix", "w")], max_expansions=3)
+    assert len(consumed) == 4
+    assert _expand_multiterm(reader, [("prefix", "zzzqqq")],
+                             max_expansions=3) == {("prefix", "zzzqqq"): []}
+    terms = [t for b in read(_band_filter(("", None, 0, None)))
+             for t in b.column("term").to_pylist()]
+    assert terms and len(terms) == len(set(terms))  # terms dict, not segs
 
 
 def test_range_filter_with_text(spark, built):

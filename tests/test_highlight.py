@@ -273,6 +273,34 @@ def test_searcher_highlight_interactive(spark, hl_index):
     assert out["score"].tolist() == hits["score"].tolist()
 
 
+@pytest.mark.parametrize("query,leaf", [
+    ("w00*", ("prefix", "w00")),
+    ("w0012~1", ("fuzzy", ("w0012", 1))),
+    ("*00?", ("wildcard", "*00?")),
+    ("/w00[0-3]1|alp.*/", ("regexp", "w00[0-3]1|alp.*")),
+])
+def test_highlight_matches_expansion(hl_index, query, leaf):
+    """Over the whole term dictionary, a token is highlighted exactly
+    when it is in its leaf's expansion: both match through
+    search._multiterm_matcher."""
+    import numpy as np
+
+    from sparkbm25 import localio
+    from sparkbm25.highlight import _leaf_matchers
+    from sparkbm25.querystring import parse_query_string
+    from sparkbm25.search import _band_filter, _expand_multiterm, _load_stats
+
+    d, _ = hl_index
+    _, _, cfg, gens = _load_stats(d)
+    reader = localio.IndexReader([g["dir"] for g in gens], cfg)
+    vocab = np.array([t for b in reader.terms(_band_filter(("", None, 0, None)))
+                      for t in b.column("term").to_pylist()], dtype=object)
+    expansion = _expand_multiterm(reader, [leaf])[leaf]
+    mask = _leaf_matchers(parse_query_string(query).tree)(vocab)
+    assert expansion
+    assert sorted(vocab[mask].tolist()) == expansion
+
+
 def test_searcher_highlight_empty_hits(spark, hl_index):
     from sparkbm25.search import Searcher
 
