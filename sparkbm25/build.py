@@ -16,8 +16,8 @@ Stages (each is a committed, resumable checkpoint):
                 they stream straight into stage 2.
   2. 'segments' per chunk of term_buckets: shuffle runs by (term, salt),
                 sort by min_doc and merge-concatenate them into
-                delta+varint blocks with block-max metadata (mapInArrow,
-                numpy codec). Salt buckets are doc_ord-RANGE-disjoint,
+                self-contained delta+varint blocks (mapInArrow, numpy
+                codec). Salt buckets are doc_ord-RANGE-disjoint,
                 so a hot term's postings are built by n_salt_buckets
                 independent tasks and merge by concatenation — no single
                 reducer ever sees the whole Zipf head (SURVEY §4.2 skew
@@ -56,7 +56,7 @@ def segment_schema(with_pos: bool = False) -> str:
     return (
         "term_bucket int, term string, salt int, n_docs bigint, "
         "blocks array<struct<first_doc:bigint,n:int,gaps:binary,tfs:binary,"
-        f"dls:binary,max_impact:double{pos}>>"
+        f"dls:binary{pos}>>"
     )
 
 
@@ -391,12 +391,21 @@ def _block_pa_type(with_pos: bool = False):
             ("gaps", pa.binary()),
             ("tfs", pa.binary()),
             ("dls", pa.binary()),
-            ("max_impact", pa.float64()),
         ]
         if with_pos:
             fields.append(("pos", pa.binary()))
         _BLOCK_PA_TYPES[with_pos] = pa.list_(pa.struct(fields))
     return _BLOCK_PA_TYPES[with_pos]
+
+
+def segment_pa_schema(with_pos: bool = False):
+    """Arrow schema of one segment file: segment_schema without its
+    term_bucket partition column."""
+    import pyarrow as pa
+
+    return pa.schema([("term", pa.string()), ("salt", pa.int32()),
+                      ("n_docs", pa.int64()),
+                      ("blocks", _block_pa_type(with_pos))])
 
 
 _RESCAN_MISMATCH = (
@@ -671,9 +680,8 @@ def _binary_col_stream(col) -> tuple[bytes, np.ndarray]:
         [len(r or b"") for r in rows], dtype=np.int64)
 
 
-def _make_merge_encoder(k1: float, b: float, avgdl: float, block_size: int,
-                        nb: int, postings_acc=None, rows_acc=None,
-                        with_pos: bool = False):
+def _make_merge_encoder(block_size: int, nb: int, postings_acc=None,
+                        rows_acc=None, with_pos: bool = False):
     """Reduce-side SPIMI merge: input rows are packed
     (term, salt, min_doc, n_runs, runs[, pos]) sorted by
     (term, salt, min_doc) within the partition. Rows of one (term,
@@ -731,8 +739,7 @@ def _make_merge_encoder(k1: float, b: float, avgdl: float, block_size: int,
                     ([0], np.cumsum(tfs))).astype(np.int64)
                 kw = {"positions": positions, "occ_offsets": occ_off}
             blocks = encode_blocks_batch(
-                docs, tfs, dls, go, k1=k1, b=b, avgdl=avgdl,
-                block_size=block_size, **kw)
+                docs, tfs, dls, go, block_size=block_size, **kw)
             if postings_acc is not None:
                 postings_acc.add(int(docs.size))
                 rows_acc.add(int(go.size - 1))
@@ -1053,8 +1060,8 @@ def build_index(
         postings_acc = spark.sparkContext.accumulator(0)
         rows_acc = spark.sparkContext.accumulator(0)
         merge = _make_merge_encoder(
-            config.k1, config.b, float(avgdl), config.block_size,
-            config.n_term_buckets, postings_acc, rows_acc, with_pos=with_pos)
+            config.block_size, config.n_term_buckets, postings_acc, rows_acc,
+            with_pos=with_pos)
         seg = (
             runs.repartition(n_shuffle, "term", "salt")
             .sortWithinPartitions("term", "salt", "min_doc")
@@ -1085,16 +1092,16 @@ def build_index(
         d0 = time.time()
         segs = (spark.read.schema(segment_schema(with_pos))
                 .parquet(catalog.segments_dir(index_dir)))
-        # term-SORTED write with a length column (VERDICT r4 item 3):
-        # range-partitioned + sorted-within-partition means parquet
-        # row-group min/max statistics on `term` are TIGHT, so the
-        # driver expansion's band filter on a prefix leaf
-        # (term >= p AND term < p+1) prunes to the matching row groups
-        # instead of scanning the whole vocabulary
+        # term-SORTED write: range-partitioned + sorted within each
+        # partition, so a row group's min/max statistics on `term` are
+        # tight. The driver expansion's band filter (term >= p AND
+        # term < p+1) can skip row groups only when the dictionary
+        # spans several; Spark's default 128 MB parquet block makes a
+        # small vocabulary one row group (7,508 terms at 20k turns),
+        # which every band then reads whole
         terms = (
             segs.groupBy("term")
             .agg(F.sum("n_docs").alias("df"), F.first("term_bucket").alias("term_bucket"))
-            .withColumn("length", F.length("term").cast("int"))
             .repartitionByRange("term")
             .sortWithinPartitions("term")
         )

@@ -224,8 +224,7 @@ def read_docs(spark, index_root: str):
 
 def global_stats(index_root: str) -> dict:
     """Corpus stats summed across generations, plus the per-generation
-    stats rows (each with the avgdl its block maxima were encoded
-    under)."""
+    stats rows."""
     gens = generation_dirs(index_root)
     if not gens:
         raise FileNotFoundError(f"no index at {index_root}")

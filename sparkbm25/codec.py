@@ -2,9 +2,9 @@
 
 The reference stores postings inside Lucene (opaque to it); the
 north_rule requires us to own the codec: per-term docID lists are
-delta-gapped and varint-encoded into fixed-size blocks, each block
-carrying per-block max-score metadata, stored for block-max pruning
-(no query path reads it yet).
+delta-gapped and varint-encoded into fixed-size blocks. Segment bytes
+depend only on the postings and block_size — not on corpus stats or
+scoring parameters — so generations fold by concatenation.
 
 All encode/decode is vectorized numpy (no per-element Python loops in
 the hot path) and runs inside Arrow UDFs, producing/consuming
@@ -19,8 +19,6 @@ doc_ord-range-disjoint salt-bucket runs merge by concatenation):
     tfs       : binary  varint term frequencies (all n)
     dls       : binary  varint doc lengths (all n; self-contained
                         scoring — no doc-norm join at query time)
-    max_impact: double  max over block of tf/(tf + k1*(1-b+b*dl/avgdl))
-                        → block score upper bound = qtf*idf*(k1+1)*max_impact
     pos       : binary  OPTIONAL (IndexConfig.store_positions): varint
                         within-doc token positions of every occurrence,
                         posting-major; the first position of a posting
@@ -101,9 +99,6 @@ def encode_blocks(
     tfs: np.ndarray,
     dls: np.ndarray,
     *,
-    k1: float,
-    b: float,
-    avgdl: float,
     block_size: int,
 ) -> list[dict]:
     """Cut a sorted (by doc_ord) posting run into self-contained blocks.
@@ -114,7 +109,7 @@ def encode_blocks(
     return encode_blocks_batch(
         np.asarray(doc_ords), np.asarray(tfs), np.asarray(dls),
         np.array([0, n], dtype=np.int64),
-        k1=k1, b=b, avgdl=avgdl, block_size=block_size,
+        block_size=block_size,
     )[0]
 
 
@@ -124,9 +119,6 @@ def encode_blocks_batch(
     dls: np.ndarray,
     group_offsets: np.ndarray,
     *,
-    k1: float,
-    b: float,
-    avgdl: float,
     block_size: int,
     positions: np.ndarray | None = None,
     occ_offsets: np.ndarray | None = None,
@@ -136,8 +128,8 @@ def encode_blocks_batch(
     docs/tfs/dls are the flat concatenation of all groups (each group
     sorted by doc_ord); group_offsets (len G+1) delimits groups.
     Returns a per-group list of block dicts. All heavy math (deltas,
-    varint bytes, per-block max impact) is single-shot numpy; the only
-    per-block Python is byte slicing + dict packing.
+    varint bytes) is single-shot numpy; the only per-block Python is
+    byte slicing + dict packing.
 
     positions (optional): flat OCCURRENCE-space within-doc positions,
     posting-major and ascending within each posting; occ_offsets
@@ -165,10 +157,6 @@ def encode_blocks_batch(
     if n > 1:
         gaps[1:] = (docs[1:] - docs[:-1]).astype(np.uint64)
     gaps[bstarts] = 0  # first-of-block is stored absolutely
-
-    denom = k1 * (1.0 - b + b * (dls / avgdl))
-    impacts = tfs / (tfs + denom)
-    max_imp = np.maximum.reduceat(impacts, bstarts)
 
     gap_buf, gap_off = varint_encode_with_offsets(gaps)
     tf_buf, tf_off = varint_encode_with_offsets(tfs.astype(np.uint64))
@@ -201,7 +189,6 @@ def encode_blocks_batch(
             "gaps": bytes(gap_mv[gap_off[s + 1]:gap_off[e]]) if e - s > 1 else b"",
             "tfs": bytes(tf_mv[tf_off[s]:tf_off[e]]),
             "dls": bytes(dl_mv[dl_off[s]:dl_off[e]]),
-            "max_impact": float(max_imp[i]),
         }
         if pos_mv is not None:
             os_, oe = int(occ_offsets[s]), int(occ_offsets[e])

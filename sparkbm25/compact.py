@@ -2,23 +2,20 @@
 (Lucene forceMerge / ES _forcemerge analog).
 
 An incrementally-grown index (streaming.update_index) is a list of
-self-contained generations; queries union G parquet roots, and each
-generation's block maxima were encoded under its own avgdl.
+self-contained generations; queries union G parquet roots.
 Compaction folds all generations into ONE root:
 
   * segments: all generations' rows physically co-located under a
-    single term_bucket-partitioned root (one pruned scan instead of G),
-    with every block's max_impact RE-COMPUTED against the global avgdl
-    (stored for block-max pruning; no query path reads it yet).
-    Posting bytes (gaps/tfs/dls/pos) are untouched: doc_ord ranges of
-    generations are disjoint and ordered by construction, so block
-    lists merge by concatenation.
+    single term_bucket-partitioned root (one pruned scan instead of G).
+    Segment bytes depend on the postings alone, never on corpus stats,
+    so nothing is re-encoded: doc_ord ranges of generations are
+    disjoint and ordered by construction, so block lists merge by
+    concatenation.
   * docs: one doc_block-partitioned forward table.
   * terms: re-aggregated dictionary; stats.json: the global stats.
 
-Compaction is itself a distributed job: the re-max pass is a
-shuffle-free mapInArrow over segment rows; only the bucket-aligned
-writes shuffle (compact rows, not postings)."""
+Compaction is itself a distributed job: the segment rows take one
+shuffle into their term_bucket partitions and are written as read."""
 
 from __future__ import annotations
 
@@ -26,59 +23,12 @@ import os
 import shutil
 import time
 
-import numpy as np
 from pyspark.sql import SparkSession, functions as F
 
 from sparkbm25 import catalog
-from sparkbm25.build import BuildResult, _mrow, segment_schema, term_bucket_col
-from sparkbm25.codec import varint_decode
+from sparkbm25.build import BuildResult, _mrow, segment_schema
 from sparkbm25.config import IndexConfig
 from sparkbm25.search import _read_segments
-
-
-def _make_remax(k1: float, b: float, avgdl: float):
-    """mapInArrow stage: decode each block's tfs/dls varints, recompute
-    max_impact under the given (global) avgdl, re-emit the row with the
-    posting bytes untouched (any extra struct fields — e.g. pos — pass
-    through by name)."""
-
-    def remax(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tb = pa.Table.from_batches([rb])
-            lv = tb.column("blocks").combine_chunks()
-            flat = lv.flatten()          # values aligned to offsets-min
-            offs = lv.offsets.to_numpy()
-            offs0 = (offs - offs[0]).astype(np.int32)
-            names = [f.name for f in flat.type]
-            cols = {n: flat.field(n) for n in names}
-            tfs_bin = cols["tfs"].to_pylist()
-            dls_bin = cols["dls"].to_pylist()
-            new_max = np.empty(len(tfs_bin), dtype=np.float64)
-            for i in range(len(tfs_bin)):
-                tfs = varint_decode(tfs_bin[i]).astype(np.float64)
-                dls = varint_decode(dls_bin[i]).astype(np.float64)
-                denom = tfs + k1 * (1.0 - b + b * (dls / avgdl))
-                new_max[i] = float((tfs / denom).max()) if tfs.size else 0.0
-            new_fields = [
-                pa.array(new_max, type=pa.float64()) if n == "max_impact"
-                else cols[n]
-                for n in names
-            ]
-            new_flat = pa.StructArray.from_arrays(new_fields, names=names)
-            new_blocks = pa.ListArray.from_arrays(
-                pa.array(offs0, type=pa.int32()), new_flat)
-            arrays = [
-                new_blocks if name == "blocks"
-                else tb.column(name).combine_chunks()
-                for name in tb.column_names
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=tb.column_names)
-
-    return remax
 
 
 def compact_index(spark: SparkSession, index_root: str, out_dir: str) -> BuildResult:
@@ -106,25 +56,16 @@ def compact_index(spark: SparkSession, index_root: str, out_dir: str) -> BuildRe
     catalog.append_manifest(out_dir, _mrow(
         "tf", -1, n_docs, 0, d0, time.time(), lineage))
 
-    # --- segments: union + re-max under the global avgdl -------------
+    # --- segments: every generation's rows, bytes untouched ----------
     s0 = time.time()
     # each generation read with the known schema: a generation whose
-    # turns yield no tokens has no segment file to infer one from
+    # turns yield no tokens has no segment file to infer one from, and
+    # a block field the schema lacks is not carried over
     with_pos = cfg.store_positions
-    segs = _read_segments(spark, index_root, with_pos)
-    # drop the partition column before the Arrow stage (mapInArrow
-    # binds by position; re-derive the bucket from the term after)
-    no_bucket_schema = segment_schema(with_pos).split(", ", 1)[1]
-    remaxed = (
-        segs.select("term", "salt", "n_docs", "blocks")
-        .mapInArrow(_make_remax(cfg.k1, cfg.b, float(avgdl)),
-                    schema=no_bucket_schema)
-        .withColumn("term_bucket",
-                    term_bucket_col(F.col("term"), cfg.n_term_buckets))
-    )
-    remaxed = remaxed.repartition(cfg.n_term_buckets, "term_bucket")
+    segs = (_read_segments(spark, index_root, with_pos)
+            .repartition(cfg.n_term_buckets, "term_bucket"))
     seg_staging = catalog.staging_dir(out_dir, "segments")
-    remaxed.write.mode("overwrite").partitionBy("term_bucket").parquet(seg_staging)
+    segs.write.mode("overwrite").partitionBy("term_bucket").parquet(seg_staging)
     catalog.commit_staging(
         out_dir, "segments", catalog.segments_chunk_dir(out_dir, 0))
     catalog.append_manifest(out_dir, _mrow(
@@ -135,12 +76,11 @@ def compact_index(spark: SparkSession, index_root: str, out_dir: str) -> BuildRe
         t1 = time.time()
         seg_new = spark.read.schema(segment_schema(with_pos)).parquet(
             catalog.segments_dir(out_dir))
-        # same sorted-with-length layout as build.py stage 3, so the
-        # compacted generation keeps prefix/fuzzy band pruning
+        # the term-sorted layout of build.py stage 3 (one row group
+        # at small vocabularies, so no band filter prunes there)
         terms = (seg_new.groupBy("term").agg(
             F.sum("n_docs").alias("df"),
             F.first("term_bucket").alias("term_bucket"))
-            .withColumn("length", F.length("term").cast("int"))
             .repartitionByRange("term")
             .sortWithinPartitions("term"))
         terms.write.mode("overwrite").parquet(

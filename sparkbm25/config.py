@@ -37,7 +37,7 @@ class IndexConfig:
 
     # --- index layout ---
     # Postings are cut into self-contained blocks of this many docs;
-    # each block carries (first_doc, gaps, tfs, dls, max_impact).
+    # each block carries (first_doc, n, gaps, tfs, dls[, pos]).
     block_size: int = 128
     # Terms are hashed into this many directory partitions of the
     # segments table (partition pruning for term lookups; the analog of

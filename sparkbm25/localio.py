@@ -112,14 +112,17 @@ def partition_dirs(root: str, key: str) -> dict[int, list[str]]:
 
 
 class LocalParquetIndex:
-    """Pruned pyarrow reads over ONE hive-partitioned parquet tree.
+    """Pruned pyarrow reads over ONE hive-partitioned parquet tree,
+    with the files' Arrow `schema` when given (None = each
+    directory's own).
 
     Caches the partition-dir map and per-directory datasets (file
     listing + footers); rows are read per call."""
 
-    def __init__(self, root: str, key: str):
+    def __init__(self, root: str, key: str, schema=None):
         self.root = root
         self.key = key
+        self.schema = schema
         self._dirs: dict[int, list[str]] | None = None
         self._datasets: dict[str, object] = {}
 
@@ -136,7 +139,7 @@ class LocalParquetIndex:
             files = _parquet_files(directory)
             if not files:
                 return None
-            ds = pads.dataset(files, format="parquet")
+            ds = pads.dataset(files, format="parquet", schema=self.schema)
             self._datasets[directory] = ds
         return ds
 
@@ -222,10 +225,18 @@ class IndexReader:
     term dictionaries (row-group pruned term scans)."""
 
     def __init__(self, gen_dirs: list[str], cfg):
+        from sparkbm25.build import segment_pa_schema
+
         self._gen_dirs = gen_dirs
         self._bucket_of = cfg.term_bucket_of
         self._doc_block_size = cfg.doc_block_size
-        self._segs = [LocalParquetIndex(catalog.segments_dir(g), "term_bucket")
+        # segment files read with the known schema: a file an older
+        # release wrote carries a per-block score bound this release
+        # dropped, which the cast leaves out, so generations of either
+        # release concatenate
+        seg_schema = segment_pa_schema(cfg.store_positions)
+        self._segs = [LocalParquetIndex(catalog.segments_dir(g), "term_bucket",
+                                        seg_schema)
                       for g in gen_dirs]
         self._docs = [LocalParquetIndex(catalog.docs_dir(g), "doc_block")
                       for g in gen_dirs]

@@ -1118,11 +1118,26 @@ def search_batch(
     sum of matched positive leaves; NOT leaves weigh 0. Phrase leaves
     verify positions per doc-ord range. Filter-only and negative-only
     queries score a constant 1.0 and rank by doc order."""
+    pdf = _search_batch_pdf(spark, index_dir, queries, k, mode)
+    return spark.createDataFrame(pdf if len(pdf) else [],
+                                 "query_id int, rank int, conv_id string, "
+                                 "turn_idx int, score double")
+
+
+def _search_batch_pdf(spark: SparkSession, index_dir: str,
+                      queries: pd.DataFrame, k: int,
+                      mode: str) -> pd.DataFrame:
+    """search_batch's rows as the pandas frame its driver merge
+    resolves, before any Spark wrapping: callers that want pandas skip
+    a createDataFrame + toPandas round trip."""
     n_docs, avgdl, cfg, gens = _load_stats(index_dir)
     plans = _compile_queries(queries, cfg, mode, k)
-    schema = "query_id int, rank int, conv_id string, turn_idx int, score double"
+    empty = pd.DataFrame({
+        "query_id": np.empty(0, np.int32), "rank": np.empty(0, np.int32),
+        "conv_id": np.empty(0, object), "turn_idx": np.empty(0, np.int32),
+        "score": np.empty(0, np.float64)})
     if n_docs == 0:
-        return spark.createDataFrame([], schema)
+        return empty
     # the one driver reader of this call: idf map, multi-term
     # expansion and the final resolve
     reader = localio.IndexReader([g["dir"] for g in gens], cfg)
@@ -1139,7 +1154,7 @@ def search_batch(
         l["terms"] = expansions[key]
     pdf = _ranged_topk(spark, index_dir, reader, plans, cfg, n_docs, avgdl)
     if not len(pdf):
-        return spark.createDataFrame([], schema)
+        return empty
 
     # final exact top-k merge on the driver: <= k rows per (query,
     # range), one lexsort (query asc, score desc, doc asc)
@@ -1165,8 +1180,7 @@ def search_batch(
     out = (topk_pdf.merge(fwd, on="doc_ord")
            .sort_values(["query_id", "rank"])
            .astype({"turn_idx": "int32"}))
-    return spark.createDataFrame(
-        out[["query_id", "rank", "conv_id", "turn_idx", "score"]], schema)
+    return out[["query_id", "rank", "conv_id", "turn_idx", "score"]]
 
 
 # ---------------------------------------------------------------------------
@@ -1289,9 +1303,7 @@ class _TermPostings:
     became THE interactive latency once scoring was vectorized; one
     batched pass decodes the same postings ~50× faster, and caching
     the decoded arrays removes even that from warm queries. tfs/dls
-    are stored float64 so scoring never pays a per-query astype copy.
-    The blocks' max_impact is stored for block-max pruning; no query
-    path reads it yet."""
+    are stored float64 so scoring never pays a per-query astype copy."""
 
     __slots__ = ("all_docs", "all_tfs", "all_dls", "total",
                  "pos_blob", "pos_bytes", "pos_flat", "pos_occ",
@@ -1403,10 +1415,8 @@ class _TermPostings:
         is belt-and-braces."""
         key = (k1, b, avgdl)
         if self.unit is None or self.unit_key != key:
-            # EXACTLY the codec's max_impact association (codec.py:
-            # impacts = tfs/(tfs + k1*(1-b+b*(dls/avgdl)))), so every
-            # contribution weight*unit stays within weight*max_impact
-            # with exact float semantics
+            # denom >= 0, so unit <= 1 and a term's contribution never
+            # exceeds its weight: MaxScore's per-term bound
             denom = k1 * (1.0 - b + b * (self.all_dls / avgdl))
             self.unit = self.all_tfs / (self.all_tfs + denom)
             self.unit_key = key
@@ -1553,8 +1563,7 @@ class Searcher:
         self.last_path = "batch"
         q = pd.DataFrame({"query_id": [0], "query_text": [query_text],
                           "k": [k]})
-        out = search_batch(self.spark, self.index_dir, q, k=k,
-                           mode=mode).toPandas()
+        out = _search_batch_pdf(self.spark, self.index_dir, q, k, mode)
         return out[["rank", "conv_id", "turn_idx", "score"]].reset_index(drop=True)
 
     def _probe_dfs(self, terms: list[str]) -> dict[str, int]:

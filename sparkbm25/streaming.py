@@ -6,13 +6,9 @@ Each micro-batch becomes a self-contained sub-index `gen=K/` whose
 doc_ords start where the previous generation ended. Query-time global
 stats (N, avgdl, df) are summed across generations
 (catalog.global_stats), so EXACT BM25 scores over the merged index
-equal a from-scratch build over the concatenated corpus. Only the
-stored block-max metadata (max_impact) is per-generation, encoded with
-that generation's avgdl; it is stored for block-max pruning and no
-query path reads it yet. A reader that bounds scores with it must
-inflate it by max(1, avgdl_global/avgdl_gen), a sound bound because
-    impact = tf/(tf + k1*(1-b+b*dl/avgdl))
-is monotone in the length norm.
+equal a from-scratch build over the concatenated corpus. Segments
+store postings only, no corpus stats, so a generation's bytes stay
+valid as the root grows.
 
 Rate limiting (T2: --throttle, cli.py:150) maps to
 maxFilesPerTrigger; backpressure (X4: bounded JoinableQueue) is the

@@ -15,9 +15,10 @@ GOLDEN_SEGMENTS = os.path.join(os.path.dirname(__file__),
 def segment_digest(index_dir: str) -> tuple[str, int]:
     """(sha256, row count) over a single-root index's segment content:
     rows in (term, salt) order, each with its n_docs, term_bucket and
-    every block field (max_impact as its exact float64 bits). The
-    chunk directory an index was committed in is not content, so
-    chunked and one-chunk builds of the same corpus hash equal."""
+    every block field except a max_impact left by an older release
+    (the codec no longer writes it). The chunk directory an index was
+    committed in is not content, so chunked and one-chunk builds of
+    the same corpus hash equal."""
     import pyarrow.dataset as ds
 
     tbl = (ds.dataset(os.path.join(index_dir, "segments"),
@@ -30,8 +31,7 @@ def segment_digest(index_dir: str) -> tuple[str, int]:
         h.update(repr((r["term"], r["salt"], r["n_docs"],
                        r["term_bucket"])).encode())
         for blk in r["blocks"]:
-            h.update(struct.pack("<qid", blk["first_doc"], blk["n"],
-                                 blk["max_impact"]))
+            h.update(struct.pack("<qi", blk["first_doc"], blk["n"]))
             for f in ("gaps", "tfs", "dls", "pos"):
                 if f in blk:
                     h.update(struct.pack("<q", len(blk[f])) + blk[f])

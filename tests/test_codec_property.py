@@ -40,8 +40,7 @@ def test_blocks_roundtrip(postings, block_size):
     docs = np.cumsum(gaps + 1) - 1  # strictly increasing
     tfs = np.array([p[1] for p in postings], dtype=np.int64)
     dls = np.array([p[2] for p in postings], dtype=np.int64)
-    blocks = encode_blocks(docs, tfs, dls, k1=1.2, b=0.75, avgdl=37.3,
-                           block_size=block_size)
+    blocks = encode_blocks(docs, tfs, dls, block_size=block_size)
     d, t, l = decode_blocks(blocks)
     assert np.array_equal(d, docs)
     assert np.array_equal(t, tfs)
@@ -65,11 +64,12 @@ def test_batch_equals_per_group(group_sizes, block_size):
         docs[s:e] = np.sort(rng.choice(10**6, size=e - s, replace=False))
     tfs = rng.integers(1, 30, n).astype(np.int64)
     dls = rng.integers(0, 500, n).astype(np.int64)
-    kw = dict(k1=1.2, b=0.75, avgdl=19.0, block_size=block_size)
-    batch = encode_blocks_batch(docs, tfs, dls, offsets, **kw)
+    batch = encode_blocks_batch(docs, tfs, dls, offsets,
+                                block_size=block_size)
     for i in range(len(group_sizes)):
         s, e = offsets[i], offsets[i + 1]
-        solo = encode_blocks(docs[s:e], tfs[s:e], dls[s:e], **kw)
+        solo = encode_blocks(docs[s:e], tfs[s:e], dls[s:e],
+                             block_size=block_size)
         assert batch[i] == solo
 
 
@@ -95,8 +95,7 @@ def test_positions_roundtrip(tfs_list, block_size):
     ]).astype(np.int64)
     blocks = encode_blocks_batch(
         docs, tfs, dls, np.array([0, n], dtype=np.int64),
-        k1=1.2, b=0.75, avgdl=50.0, block_size=block_size,
-        positions=pos, occ_offsets=occ)[0]
+        block_size=block_size, positions=pos, occ_offsets=occ)[0]
     got_pos, got_tfs = [], []
     for blk in blocks:
         _d, t, _l = decode_blocks([blk])

@@ -1,8 +1,8 @@
 """Banded multi-term expansion on the driver: each leaf reads the
 term-SORTED dictionary through the index reader, filtered by its
 matcher's band (term range + length range), so parquet row-group
-min/max statistics prune the read — the columnar analog of Lucene's
-FST prefix walk. Plus parity: the banded read returns exactly the
+min/max statistics can prune the read once the dictionary spans
+several row groups — the columnar analog of Lucene's FST prefix walk. Plus parity: the banded read returns exactly the
 brute-force expansion on single-generation, two-generation and
 dictionary-less roots, and the expansion runs no Spark job."""
 
@@ -146,17 +146,15 @@ def test_band_filter_prunes_row_groups(built, tmp_path):
         assert exp[(kind, payload)] == brute_force(kind, payload, vocab)
 
 
-def test_terms_dict_sorted_with_length(spark, built):
-    """build.py stage 3 writes the dictionary term-sorted with a
-    length column — the physical precondition for range pruning."""
+def test_terms_dict_sorted_without_length(spark, built):
+    """build.py stage 3 writes the dictionary term-sorted — the
+    physical precondition for range pruning — and no length column
+    (the expansion band derives lengths from the term itself)."""
     from sparkbm25 import catalog
 
     d, _ = built
     tdir = catalog.terms_dir(d)
-    tdf = spark.read.parquet(tdir)
-    assert "length" in tdf.columns
-    pdf = tdf.toPandas()
-    assert (pdf["length"] == pdf["term"].str.len()).all()
+    assert spark.read.parquet(tdir).columns == ["term", "df", "term_bucket"]
     # sorted within each parquet file (row-group stats monotone)
     import glob
 
@@ -206,3 +204,28 @@ def test_expansion_runs_no_spark_job(spark, built):
     assert names and len(set(names)) == 1, names
     assert names[0].startswith("toPandas at ") and "search.py" in names[0]
     assert df.count() > 0
+
+
+def test_batch_routed_search_skips_the_dataframe_round_trip(spark, built):
+    """A filter-only Searcher.search goes down the batch path and runs
+    no more Spark jobs than search_batch runs before its caller
+    collects: the Searcher takes the driver's pandas answer, not a
+    DataFrame built from it and collected again."""
+    d, _ = built
+    sc = spark.sparkContext
+    text = "role:user"
+    q = pd.DataFrame({"query_id": [0], "query_text": [text], "k": [5]})
+    df, _ = _group_jobs(sc, "via-batch-ref",
+                        lambda: search_batch(spark, d, q, k=5))
+    s = Searcher(spark, d)
+    hits, _ = _group_jobs(sc, "via-batch-searcher",
+                          lambda: s.search(text, k=5))
+    assert s.last_path == "batch"
+    tracker = sc.statusTracker()
+    assert (len(tracker.getJobIdsForGroup("via-batch-searcher"))
+            <= len(tracker.getJobIdsForGroup("via-batch-ref")))
+    exp = df.toPandas()
+    assert len(hits) == 5
+    assert hits["conv_id"].tolist() == exp["conv_id"].tolist()
+    assert hits["turn_idx"].tolist() == exp["turn_idx"].tolist()
+    assert hits["score"].tolist() == exp["score"].tolist()

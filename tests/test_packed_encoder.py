@@ -5,11 +5,11 @@ partition) instead of one row per token occurrence, then merge-
 concatenates on the reduce side (input-partition doc ranges are
 disjoint and min_doc-ordered). The contract: segments come out
 BYTE-IDENTICAL to the former per-occurrence 'stream' encoder — same
-groups, same blocks, same varint payloads, same per-block max_impact —
-with and without the positions stream, streamed or checkpointed. The
-stream encoder's segments are frozen as digests in
-tests/golden_segments.json, so every downstream consumer (search,
-compaction, annotate, terms dict) stays covered by the existing suite.
+groups, same blocks, same varint payloads — with and without the
+positions stream, streamed or checkpointed. The stream encoder's
+segments are frozen as digests in tests/golden_segments.json, so
+every downstream consumer (search, compaction, annotate, terms dict)
+stays covered by the existing suite.
 """
 
 import os

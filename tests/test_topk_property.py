@@ -49,7 +49,7 @@ def _make_lists(rng, n_docs, n_terms, tie_heavy):
         tfs = (np.ones(df, dtype=np.int64) if tie_heavy
                else rng.integers(1, 5, size=df).astype(np.int64))
         dls = dl_of[docs].astype(np.int64)
-        blocks = encode_blocks(docs, tfs, dls, k1=K1, b=B, avgdl=avgdl,
+        blocks = encode_blocks(docs, tfs, dls,
                                block_size=int(rng.choice([4, 16, 128])))
         n_rows = min(len(blocks), int(rng.integers(1, 4)))
         for part in reversed(np.array_split(np.arange(len(blocks)), n_rows)):
