@@ -4,15 +4,17 @@ map, multi-term expansion and top-k resolve.
 
 The interactive Searcher's per-query work is a handful of point reads:
 the pruned posting fetch of a few terms, the (term, n_docs) df probe,
-and the forward-row resolve of <= a few thousand doc_ords. Routing
-those through a Spark job pays scheduler latency plus a py4j collect
-of the block blobs on every cold query — measured at 960k turns the
-job+collect is 0.25-1.1 s per cold query while the same pruned read
-through pyarrow.dataset is 7-120 ms (guide §1.2: fix the shape before
-the constants; a point lookup does not need a cluster job, the same
-way the reference's ES client GETs a document without running a
-distributed search). The reads keep Spark's pruning: term_bucket= /
-doc_block= hive directories and rowgroup-statistics pushdown.
+and the forward-row resolve of <= a few thousand doc_ords; a
+structured predicate reads its filter columns of every forward row
+once per reader binding. Routing those through a Spark job pays
+scheduler latency plus a py4j collect of the block blobs on every cold
+query — measured at 960k turns the job+collect is 0.25-1.1 s per cold
+query while the same pruned read through pyarrow.dataset is 7-120 ms
+(guide §1.2: fix the shape before the constants; a point lookup does
+not need a cluster job, the same way the reference's ES client GETs a
+document without running a distributed search). The reads keep
+Spark's pruning: term_bucket= / doc_block= hive directories and
+rowgroup-statistics pushdown.
 
 Index roots are local paths. The catalog commits with os.rename, lists
 generations with os.listdir and reads stats.json with open(), so a
@@ -290,13 +292,16 @@ class IndexReader:
         if tb.num_rows:
             yield from tb.filter(filter).to_batches()
 
-    def docs(self, ords: list[int], cols: list[str]):
-        """Forward rows of `ords`, `cols` only (attribute columns a
-        generation lacks read NULL; timestamps naive UTC)."""
+    def docs(self, ords: list[int] | None, cols: list[str]):
+        """Forward rows of `ords` (None = every row), `cols` only
+        (attribute columns a generation lacks read NULL; timestamps
+        naive UTC)."""
         import pyarrow.compute as pc
 
-        parts = sorted({o // self._doc_block_size for o in ords})
-        filt = pc.field("doc_ord").isin(list(ords))
+        parts = filt = None
+        if ords is not None:
+            parts = sorted({o // self._doc_block_size for o in ords})
+            filt = pc.field("doc_ord").isin(list(ords))
         return _concat([ix.read(parts, cols, filter=filt)
                         for ix in self._docs], cols)
 

@@ -4,7 +4,7 @@ Lucene regexp queries (the `/pattern/` leaves of ES query_string —
 the syntax the reference forwards verbatim to ES,
 es_translator/es_translator.py:313-323) are parsed by
 org.apache.lucene.util.automaton.RegExp, a dialect that differs from
-Java regex (Spark `rlike`), Python `re` (querystring.python_filter)
+Java regex (Spark `rlike`), Python `re` (querystring.filter_mask)
 and RE2 (the DuckDB oracle) in ways that silently change results if
 the pattern is handed to any of them raw — exactly the
 silent-misparse class this engine's grammar bans (VERDICT r4 item 1):

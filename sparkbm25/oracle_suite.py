@@ -681,15 +681,15 @@ def q_bm25_filtered(spark, sf_dir):
 def q_bm25_filtered_driver(spark, sf_dir):
     """The INTERACTIVE filtered driver path (VERDICT r4 item 6:
     Searcher serves `terms + role:en` without the distributed batch
-    detour — driver-side postings scoring + doc_block-pruned filter
-    probes in score order) checked against the SAME SQL oracle as the
-    batch path: both routes must be exact."""
+    detour — its kernel route scores the cached postings in-process,
+    filtered by the predicate's doc set) checked against the SAME SQL
+    oracle as the batch path: both routes must be exact."""
     from sparkbm25.search import Searcher
 
     index_dir = _ensure_index(spark, sf_dir)
     s = Searcher(spark, index_dir)
     out = s.search("role:en " + " ".join(BM25_TERMS), k=TOPK)
-    assert s.last_path == "filtered", s.last_path
+    assert s.last_path == "kernel", s.last_path
     out = out.assign(doc_id=out["conv_id"].astype("int64"),
                      score_micro=(out["score"] * 1e6 + 0.5).astype("int64"))
     return spark.createDataFrame(

@@ -458,10 +458,10 @@ def _filter_value(fld: str, val: str) -> str:
       (a Lucene regexp operator) and `^` literal;
     * an unconsumed `^` RAISES (malformed boost — the valid-boost
       strip already ran);
-    * the pure-python twin predicate compiles NOW so malformed
-      ranges, numeric/ts bounds, and regexp dialect errors raise at
-      PARSE time (deferring left the early-return hole where an
-      absent scoring term swallowed the typo).
+    * the Arrow evaluator's compile step (compile_filter) runs NOW so
+      malformed ranges, numeric/ts bounds, and regexp dialect errors
+      raise at PARSE time (deferring left the early-return hole where
+      an absent scoring term swallowed the typo).
     """
     if val.startswith('"'):
         end = val.find('"', 1)
@@ -484,7 +484,7 @@ def _filter_value(fld: str, val: str) -> str:
                 f"malformed '~' suffix in filter value {fld}:{val!r}: "
                 "fuzziness/slop does not apply to filter-context "
                 "equality (escape a literal tilde as \\~)")
-    python_filter([(fld, val)])
+    compile_filter([(fld, val)])
     return val
 
 
@@ -778,7 +778,7 @@ class _Parser:
                 return Filter("_exists_", target)
             if fld in FILTER_FIELDS:
                 # the shared value contract: quoted→literal equality,
-                # unconsumed ~/^ raise, python-twin parse-time
+                # unconsumed ~/^ raise, compile_filter parse-time
                 # validation — see _filter_value
                 return Filter(fld, _filter_value(fld, m.group(2)))
             if fld in TEXT_FIELDS:
@@ -1129,8 +1129,8 @@ _DATE_MATH_OP_RE = re.compile(r"([+-])(\d+)([yMwdhHms])")
 
 def _now_utc():
     """The `now` anchor: naive UTC (the engine pins the Spark session
-    timezone to UTC, so naive-UTC literals compare identically on the
-    Catalyst and python twins). Pin SPARKBM25_NOW (ISO-8601) for
+    timezone to UTC, so naive-UTC literals compare identically in
+    Catalyst and in filter_mask). Pin SPARKBM25_NOW (ISO-8601) for
     reproducible queries — the oracle entries and tests do."""
     import os
     from datetime import datetime, timezone
@@ -1180,7 +1180,7 @@ def _parse_ts_bound(fld: str, v: str):
     Catalyst NULL cast silently matching nothing. A datetime literal
     compiles to a Spark TimestampType literal; with the session
     timezone pinned to UTC (every entry point sets it) the comparison
-    is the naive-UTC compare the python_filter twin performs.
+    is the naive-UTC compare filter_mask performs.
 
     ES date math (late round 5): `now`, `now-1d`, `now+1M-2h` (chains
     apply left to right, months/years clamp the day like ES), and the
@@ -1299,8 +1299,8 @@ def _one_predicate(fld: str, val: str) -> Column:
         # full-value match (Lucene regexps are implicitly anchored;
         # Spark rlike is a substring search, hence the \A(?:)\z wrap —
         # NOT ^(?:)$: Java `$` matches before a trailing newline while
-        # the python twin's fullmatch does not, so a stored value
-        # 'user\n' would pass Catalyst and fail the twin, splitting
+        # filter_mask's fullmatch does not, so a stored value
+        # 'user\n' would pass Catalyst and fail filter_mask, splitting
         # driver/batch answers (final-round review)). The pattern
         # compiles through the Lucene-dialect translator so
         # `\d`/`^`/`$`/`.` keep Lucene semantics in the JVM regex.
@@ -1324,187 +1324,141 @@ def _one_predicate(fld: str, val: str) -> Column:
     return col == bound(val)
 
 
-def python_filter(filters: list[tuple[str, str]],
-                  neg_filters: list[tuple[str, str]] = ()):
-    """Driver-side twin of filter_condition: a callable(row_mapping)
-    -> bool with IDENTICAL semantics (equality, `val*` prefix, general
-    `*`/`?` wildcards, the `field:*` exists alias,
-    inclusive `[A TO B]` ranges with `*` open bounds; numeric fields
-    compare as ints; a NULL field value never satisfies a positive
-    predicate — Catalyst three-valued logic collapses to False at the
-    filter). Used by the Searcher's filtered driver path to evaluate
-    predicates over CACHED forward-table rows without a Spark job;
-    parity with the Catalyst column is covered by the randomized
-    Searcher-vs-batch fuzz (tests/test_query_fuzz.py). Each inner
-    predicate is THREE-valued (True/False/None==NULL) exactly like
-    Catalyst: a NULL field makes equality/prefix/bounded-range NULL —
-    so the row fails BOTH `f:v` and `NOT f:v` (NOT NULL is NULL), and
-    only the fully-open range `[* TO *]` (a constant TRUE) keeps it.
-    ASCII string comparison: python compares by code point, Spark
-    UTF8String by bytes — identical because UTF-8 byte order equals
-    code-point order."""
-    def one(fld: str, val: str):
-        numeric = fld in NUMERIC_FILTER_FIELDS
-        tsfield = fld in TIMESTAMP_FILTER_FIELDS
-        if fld == "_exists_":
-            if val in ALWAYS_PRESENT_FIELDS:
-                return lambda row: True
-            # isNotNull never yields NULL — a two-valued predicate
-            return lambda row, v=val: row.get(v) is not None
+def _compile_one(fld: str, val: str) -> tuple:
+    """One structured predicate as plain data for filter_mask, with
+    _one_predicate's semantics and its parse-time errors: ("true",),
+    ("valid", col), ("cmp", col, pyarrow compare, bound), ("prefix",
+    col, prefix), ("match", col, python regex) or ("and", members).
+    Bounds are resolved values (date math included), so the spec is
+    also the cache key of the predicate's doc set."""
+    if fld == "_exists_":
+        return ("true",) if val in ALWAYS_PRESENT_FIELDS else ("valid", val)
+    keyword = fld not in NUMERIC_FILTER_FIELDS | TIMESTAMP_FILTER_FIELDS
 
-        def coerce(v: str):
-            v = _unescape(v)     # twin of _one_predicate's bound()
-            if numeric:
-                try:
-                    return int(v)
-                except ValueError:
-                    raise ValueError(
-                        f"field {fld!r} expects an integer, got {v!r}"
-                    ) from None
-            if tsfield:
-                return _parse_ts_bound(fld, v)
-            return v
+    def bound(v):
+        v = _unescape(v)     # twin of _one_predicate's bound()
+        if fld in NUMERIC_FILTER_FIELDS:
+            try:
+                return int(v)
+            except ValueError:
+                raise ValueError(
+                    f"field {fld!r} expects an integer, got {v!r}") from None
+        if fld in TIMESTAMP_FILTER_FIELDS:
+            return _parse_ts_bound(fld, v)
+        return v
 
-        m = _RANGE_RE.match(val)
-        if m:
-            lo = None if m.group(2) == "*" else coerce(m.group(2))
-            hi = None if m.group(3) == "*" else coerce(m.group(3))
-            lo_inc, hi_inc = m.group(1) == "[", m.group(4) == "]"
-
-            def rng(row):
-                if lo is None and hi is None:
-                    return True          # lit(True): NULL-safe constant
-                cur = row.get(fld)
-                if cur is None:
-                    return None
-                if numeric:
-                    cur = int(cur)
-                return ((lo is None
-                         or (cur >= lo if lo_inc else cur > lo))
-                        and (hi is None
-                             or (cur <= hi if hi_inc else cur < hi)))
-
-            return rng
-        if val[:1] in ("[", "{"):
-            # twin of _one_predicate's malformed-range guard
+    m = _RANGE_RE.match(val)
+    if m:
+        lo, hi = m.group(2), m.group(3)
+        cmps = []
+        if lo != "*":
+            cmps.append(("cmp", fld, "greater_equal" if m.group(1) == "["
+                         else "greater", bound(lo)))
+        if hi != "*":
+            cmps.append(("cmp", fld, "less_equal" if m.group(4) == "]"
+                         else "less", bound(hi)))
+        return ("and", tuple(cmps))
+    if val[:1] in ("[", "{"):
+        # twin of _one_predicate's malformed-range guard
+        raise ValueError(
+            f"malformed range in filter value {fld}:{val!r}: expected "
+            "[lo TO hi] / {lo TO hi} (either bound may be *)")
+    m = _SIMPLE_RANGE_RE.match(val)
+    if m:
+        return ("cmp", fld, {"<": "less", "<=": "less_equal", ">": "greater",
+                             ">=": "greater_equal"}[m.group(1)],
+                bound(m.group(2)))
+    if val == "*":
+        # exists alias: two-valued, like the Catalyst isNotNull
+        return ("true",) if fld in ALWAYS_PRESENT_FIELDS else ("valid", fld)
+    m = _REGEXP_RE.match(val)
+    if m:
+        if not keyword:
             raise ValueError(
-                f"malformed range in filter value {fld}:{val!r}: "
-                "expected [lo TO hi] / {lo TO hi} (either bound may "
-                "be *)")
-        m = _SIMPLE_RANGE_RE.match(val)
-        if m:
-            op, want = m.group(1), coerce(m.group(2))
-            import operator
-            cmp = {"<": operator.lt, "<=": operator.le,
-                   ">": operator.gt, ">=": operator.ge}[op]
+                f"field {fld!r} is not a keyword field: regexp value "
+                f"{val!r} is not supported (use a range)")
+        from sparkbm25.lucenere import to_portable
+        return ("match", fld, to_portable(m.group(1).replace("\\/", "/")))
+    if "*" in val or "?" in val:
+        if not keyword:
+            raise ValueError(
+                f"field {fld!r} is not a keyword field: wildcard value "
+                f"{val!r} is not supported (use a range)")
+        if val.endswith("*") and "?" not in val and "*" not in val[:-1]:
+            return ("prefix", fld, _unescape(val[:-1]))
+        # general wildcard: regex twin of the Catalyst LIKE (`?` spans
+        # newlines like LIKE `_`; escape sentinels stay literal, twin
+        # of _like_pattern)
+        return ("match", fld, "(?s)" + "".join(
+            re.escape(_unescape(ch)) if "\ue000" <= ch <= "\ue100"
+            else ".*" if ch == "*" else "." if ch == "?"
+            else re.escape(ch)
+            for ch in val))
+    return ("cmp", fld, "equal", bound(val))
 
-            def srng(row):
-                cur = row.get(fld)
-                if cur is None:
-                    return None
-                return cmp(int(cur) if numeric else cur, want)
 
-            return srng
-        if val == "*":
-            # exists alias: two-valued, mirrors the Catalyst isNotNull
-            if fld in ALWAYS_PRESENT_FIELDS:
-                return lambda row: True
-            return lambda row: row.get(fld) is not None
-        m = _REGEXP_RE.match(val)
-        if m:
-            if numeric or tsfield:
-                raise ValueError(
-                    f"field {fld!r} is not a keyword field: regexp "
-                    f"value {val!r} is not supported (use a range)")
-            from sparkbm25.lucenere import to_portable
-            rrx = re.compile(to_portable(m.group(1).replace("\\/", "/")))
+def compile_filter(filters: list, neg_filters: list = ()) -> tuple:
+    """The structured predicates as plain data for filter_mask:
+    (positive entries, negated entries), each entry one predicate or a
+    GROUP ("or", members) from field grouping. Raises ValueError on
+    every malformed value _one_predicate rejects, so the parser calls
+    it to validate at PARSE time."""
+    def entry(e):
+        if e and isinstance(e[0], tuple):
+            return ("or", tuple(_compile_one(f, v) for f, v in e))
+        return _compile_one(e[0], e[1])
 
-            def rex(row):
-                cur = row.get(fld)
-                if cur is None:
-                    return None
-                return rrx.fullmatch(str(cur)) is not None
+    return (tuple(entry(e) for e in filters),
+            tuple(entry(e) for e in neg_filters))
 
-            return rex
-        if "*" in val or "?" in val:
-            if numeric or tsfield:
-                raise ValueError(
-                    f"field {fld!r} is not a keyword field: wildcard "
-                    f"value {val!r} is not supported (use a range)")
-            if val.endswith("*") and "?" not in val and "*" not in val[:-1]:
-                pfx = _unescape(val[:-1])
 
-                def swith(row):
-                    cur = row.get(fld)
-                    if cur is None:
-                        return None
-                    return str(cur).startswith(pfx)
+def filter_mask(spec: tuple, table) -> "np.ndarray":
+    """Evaluate a compile_filter spec over a pyarrow Table of forward
+    columns (a column every generation lacks reads NULL): numpy bool
+    mask of the rows filter_condition keeps. Each predicate is
+    three-valued like Catalyst: a NULL value makes equality, prefix,
+    match and bounded ranges NULL, so the row fails both `f:v` and
+    `NOT f:v`; only exists and the open range `[* TO *]` are
+    two-valued. Comparisons run in pyarrow.compute (string order is
+    UTF-8 byte order, as Spark's). Regexps and general wildcards run
+    Python `re` over each column's DISTINCT values, since RE2 matches
+    neither Java nor Python (lucenere)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-                return swith
-            # general wildcard: regex twin of the Catalyst LIKE
-            # (re.S so `?`/`.` spans newlines exactly like LIKE `_`;
-            # escape sentinels unescape to LITERAL chars, twin of
-            # _like_pattern)
-            rx = re.compile("".join(
-                re.escape(_unescape(ch)) if "\ue000" <= ch <= "\ue100"
-                else ".*" if ch == "*" else "." if ch == "?"
-                else re.escape(ch)
-                for ch in val), re.S)
+    n = table.num_rows
 
-            def wld(row):
-                cur = row.get(fld)
-                if cur is None:
-                    return None
-                return rx.fullmatch(str(cur)) is not None
+    def ev(node):
+        op = node[0]
+        if op == "true":
+            return pa.array(np.ones(n, dtype=bool))
+        if op in ("and", "or"):
+            out = pa.array(np.full(n, op == "and"))
+            for c in node[1]:
+                out = (pc.and_kleene if op == "and" else pc.or_kleene)(
+                    out, ev(c))
+            return out
+        col = table.column(node[1]).combine_chunks()
+        if op == "valid":
+            return pc.is_valid(col)
+        if pa.types.is_null(col.type):
+            return pa.nulls(n, pa.bool_())
+        if op == "cmp":
+            return getattr(pc, node[2])(col, node[3])
+        if op == "prefix":
+            return pc.starts_with(col, node[2])
+        rx = re.compile(node[2])
+        enc = col.dictionary_encode()
+        hit = pa.array([rx.fullmatch(v) is not None
+                        for v in enc.dictionary.to_pylist()], pa.bool_())
+        return hit.take(enc.indices)
 
-            return wld
-        want = coerce(val)
-
-        def eq(row):
-            cur = row.get(fld)
-            if cur is None:
-                return None
-            return (int(cur) if numeric else cur) == want
-
-        return eq
-
-    def compile_entry(entry):
-        """A plain (fld, val) pair, or a GROUP (tuple of pairs) from
-        field grouping — the group ORs its members with Catalyst
-        three-valued OR: True if any True, else None if any None,
-        else False."""
-        if entry and isinstance(entry[0], tuple):
-            members = [one(f, v) for f, v in entry]
-
-            def orred(row):
-                out = False
-                for p in members:
-                    r = p(row)
-                    if r is True:
-                        return True
-                    if r is None:
-                        out = None
-                return out
-
-            return orred
-        return one(entry[0], entry[1])
-
-    pos = [compile_entry(e) for e in filters]
-    neg = [compile_entry(e) for e in neg_filters]
-
-    def pred(row) -> bool:
-        # the filter keeps a row only when the whole conjunction is
-        # definitely TRUE: every positive predicate True, every
-        # negated predicate definitely False (NULL fails both ways)
-        for p in pos:
-            if p(row) is not True:
-                return False
-        for p in neg:
-            if p(row) is not False:
-                return False
-        return True
-
-    return pred
+    pos, neg = spec
+    out = ev(("and", pos))
+    for e in neg:
+        out = pc.and_kleene(out, pc.invert(ev(e)))
+    return out.fill_null(False).to_numpy(zero_copy_only=False)
 
 
 def _entry_predicate(entry) -> Column:

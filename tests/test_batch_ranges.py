@@ -23,7 +23,8 @@ import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
-from sparkbm25 import IndexConfig, bm25_reference_topk, build_index, search_batch
+from sparkbm25 import (IndexConfig, Searcher, bm25_reference_topk, build_index,
+                       search_batch)
 from sparkbm25.codec import decode_block
 from sparkbm25.fixtures import make_transcripts
 from sparkbm25.search import _range_layout
@@ -134,3 +135,35 @@ def test_range_cut_matches_goldens(spark, roots, which):
         np.testing.assert_allclose(g["score"].to_numpy(),
                                    [s for _c, _t, s in exp], rtol=1e-12,
                                    err_msg=text)
+
+
+@pytest.mark.parametrize("which", ["single", "multi", "compacted"])
+def test_searcher_kernel_ranges_match_batch(spark, roots, which,
+                                            monkeypatch):
+    """The Searcher's kernel route scores doc-ord ranges of at most
+    _MAX_RANGE_DOCS docs. With that bound below the corpus size its
+    multi-range answers, over blocks that span range boundaries, equal
+    search_batch's bit for bit, every match included."""
+    import re
+
+    import sparkbm25.search as sm
+
+    monkeypatch.setattr(sm, "_MAX_RANGE_DOCS", 700)
+    nr, width = _range_layout(N_TURNS, 1)
+    assert nr > 1
+    texts = [t for t in GOLDEN_QUERIES if t != "w001*"]
+    terms = sorted({w for t in texts for w in re.findall(r"w\d{4}", t)})
+    assert _spanning_blocks(roots[which], terms, width) > 0
+    q = pd.DataFrame({"query_id": range(len(texts)), "query_text": texts,
+                      "k": [N_TURNS] * len(texts)})
+    exp = (search_batch(spark, roots[which], q, k=N_TURNS).toPandas()
+           .sort_values(["query_id", "rank"]))
+    s = Searcher(spark, roots[which])
+    for qid, text in enumerate(texts):
+        got = s.search(text, k=N_TURNS)
+        assert s.last_path == "kernel", text
+        e = exp[exp["query_id"] == qid]
+        assert len(got) > 0, text
+        assert got["conv_id"].tolist() == e["conv_id"].tolist(), text
+        assert got["turn_idx"].tolist() == e["turn_idx"].tolist(), text
+        assert got["score"].tolist() == e["score"].tolist(), text

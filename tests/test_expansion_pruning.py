@@ -206,18 +206,36 @@ def test_expansion_runs_no_spark_job(spark, built):
     assert df.count() > 0
 
 
-def test_batch_routed_search_skips_the_dataframe_round_trip(spark, built):
-    """A filter-only Searcher.search goes down the batch path and runs
-    no more Spark jobs than search_batch runs before its caller
-    collects: the Searcher takes the driver's pandas answer, not a
-    DataFrame built from it and collected again."""
+def test_kernel_routed_queries_run_no_spark_job(spark, built):
+    """Filter-only, pure-negative-under-filter and nested queries run
+    the kernel route on a COLD Searcher with zero Spark jobs: postings,
+    the predicate's forward columns and the resolve are all reads
+    through the index reader."""
     d, _ = built
     sc = spark.sparkContext
-    text = "role:user"
+    for i, text in enumerate(["role:user AND turn_idx:[0 TO 3]",
+                              "NOT w0005 AND role:user",
+                              "(w0005 AND (w0012 OR NOT w0040)) OR w0100"]):
+        s = Searcher(spark, d)
+        group = f"kernel-cold-{i}"
+        hits, names = _group_jobs(sc, group, lambda: s.search(text, k=5))
+        assert s.last_path == "kernel" and len(hits) > 0, text
+        assert names == [], (text, names)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], text
+
+
+def test_batch_routed_search_skips_the_dataframe_round_trip(spark, built):
+    """A Searcher.search over its max_driver_postings bound goes down
+    the batch path and runs no more Spark jobs than search_batch runs
+    before its caller collects: the Searcher takes the driver's pandas
+    answer, not a DataFrame built from it and collected again."""
+    d, _ = built
+    sc = spark.sparkContext
+    text = "role:user w0001"
     q = pd.DataFrame({"query_id": [0], "query_text": [text], "k": [5]})
     df, _ = _group_jobs(sc, "via-batch-ref",
                         lambda: search_batch(spark, d, q, k=5))
-    s = Searcher(spark, d)
+    s = Searcher(spark, d, max_driver_postings=1)
     hits, _ = _group_jobs(sc, "via-batch-searcher",
                           lambda: s.search(text, k=5))
     assert s.last_path == "batch"

@@ -88,7 +88,7 @@ def _check_attribute_case(spark, root, parts, field, value, hit_prefix):
         assert (g1["score"] == 1.0).all()
         s = Searcher(spark, root)
         hits = s.search(f"w0003 AND {field}:{value}", k=30)
-        assert s.last_path == "filtered", where
+        assert s.last_path == "kernel", where
         assert hits["conv_id"].tolist() == exp["conv_id"].tolist(), where
         assert hits["turn_idx"].tolist() == exp["turn_idx"].tolist(), where
         np.testing.assert_allclose(hits["score"].astype(float),
@@ -153,3 +153,56 @@ def test_generations_with_different_timestamp_types(spark, tmp_path):
         assert hits["turn_idx"].tolist() == exp["turn_idx"].tolist(), qt
         np.testing.assert_allclose(hits["score"].astype(float),
                                    exp["score"], rtol=1e-9)
+
+
+def test_filter_mask_matches_catalyst_across_generations(spark, tmp_path):
+    """filter_mask over the reader's read of every forward row keeps
+    exactly the rows Catalyst's filter_condition keeps over
+    catalog.read_docs, on a root whose generations differ: a role-only
+    generation (its tool and ts read NULL) between a TIMESTAMP_NTZ
+    generation (pyarrow-written input) and a session-zone one (pandas
+    input, INT96)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkbm25 import catalog, localio
+    from sparkbm25.querystring import (compile_filter, filter_columns,
+                                       filter_condition, filter_mask)
+    from sparkbm25.search import _load_stats
+
+    root = str(tmp_path / "root")
+    t0 = make_transcripts(200, seed=76)
+    t2 = make_transcripts(200, seed=78).assign(
+        conv_id=lambda d: "zz_" + d["conv_id"])
+    src = str(tmp_path / "t0.parquet")
+    pq.write_table(pa.Table.from_pandas(t0, preserve_index=False), src)
+    update_index(spark, spark.read.parquet(src), root, IndexConfig())
+    update_index(spark, spark.createDataFrame(_role_only(40, 77, "zy_")),
+                 root, IndexConfig())
+    update_index(spark, spark.createDataFrame(t2), root, IndexConfig())
+    lo = f"{t0['ts'].iloc[50]:%Y-%m-%dT%H:%M:%S}"
+    hi = f"{t2['ts'].iloc[150]:%Y-%m-%dT%H:%M:%S}"
+    cases = [
+        ([("tool", "search")], []),
+        ([], [("tool", "search")]),
+        ([("tool", "*")], []),
+        ([], [("tool", "*")]),
+        ([("ts", f"[{lo} TO {hi}]")], []),
+        ([("ts", f">={lo}")], [("role", "user")]),
+        ([], [("ts", f"<{hi}")]),
+        ([(("tool", "gre*"), ("role", "/us.r/"))], []),
+        ([("_exists_", "ts"), ("role", "u?er")], []),
+    ]
+    n_docs, _, cfg, gens = _load_stats(root)
+    reader = localio.IndexReader([g["dir"] for g in gens], cfg)
+    docs = catalog.read_docs(spark, root)
+    for filters, neg in cases:
+        want = sorted(r.doc_ord for r in docs.where(
+            filter_condition(filters, neg)).select("doc_ord").collect())
+        tb = reader.docs(None, ["doc_ord",
+                                *sorted(filter_columns(filters, neg))])
+        assert tb.num_rows == n_docs
+        keep = filter_mask(compile_filter(filters, neg), tb)
+        got = sorted(tb.column("doc_ord").to_numpy()[keep].tolist())
+        assert got == want, (filters, neg)
+        assert 0 < len(want) < n_docs, (filters, neg)

@@ -113,7 +113,7 @@ def test_fetch_parity_multi_gen(spark, tmp_path_factory):
     qt = "role:user w0001"
     s = Searcher(spark, root)
     got = s.search(qt, k=10)
-    assert s.last_path == "filtered"
+    assert s.last_path == "kernel"
     _assert_like_batch(spark, root, got, qt, 10)
 
 
@@ -195,23 +195,26 @@ def test_term_dfs_match_reference(spark, tmp_path_factory, terms_dict):
 
 def test_doc_cache_rows_identical(spark, built):
     """The cached forward rows equal the corpus rows in doc_ord order
-    (the dense rank of (conv_id, turn_idx)), attrs included, with ts
-    rendered as a naive UTC datetime like Spark's collect() —
-    python_filter evaluates structured predicates over these rows."""
+    (the dense rank of (conv_id, turn_idx)), and the reader's read of
+    every forward row — what structured predicates evaluate over —
+    carries the attributes, with ts a naive UTC datetime like Spark's
+    collect()."""
     s = Searcher(spark, built)
     ords = list(range(0, 50))
     s._fetch_doc_rows(ords)
     assert set(s._doc_cache) == set(ords)
     corpus = (make_transcripts(N_TURNS)
               .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
+    rows = {r["doc_ord"]: r for r in s._reader.docs(
+        None, ["doc_ord", "role", "tool", "ts"]).to_pylist()}
+    assert sorted(rows) == list(range(N_TURNS))
     for o in ords:
         r = corpus.iloc[o]
-        exp = (r["conv_id"], int(r["turn_idx"]),
-               {"role": r["role"], "tool": r["tool"],
-                "ts": r["ts"].to_pydatetime()})
-        got = s._doc_cache[o]
-        assert got == exp, (o, got, exp)
-        ts = got[2]["ts"]
+        assert s._doc_cache[o] == (r["conv_id"], int(r["turn_idx"])), o
+        exp = {"doc_ord": o, "role": r["role"], "tool": r["tool"],
+               "ts": r["ts"].to_pydatetime()}
+        assert rows[o] == exp, (o, rows[o], exp)
+        ts = rows[o]["ts"]
         assert isinstance(ts, datetime.datetime) and ts.tzinfo is None
 
 

@@ -5,8 +5,9 @@ operators with no regex equivalent, and (c) three-dialect parity —
 the same (pattern, candidate) grid fullmatched through Python re,
 Spark rlike (Java regex) and DuckDB regexp_matches (RE2) must agree,
 because the engine evaluates regexp leaves through rlike, evaluates
-keyword-field regexp filters through BOTH rlike and python_filter,
-and the oracle suite re-states them in DuckDB.
+keyword-field regexp filters through BOTH rlike and querystring's
+filter_mask (Python re), and the oracle suite re-states them in
+DuckDB.
 """
 
 import re
@@ -126,6 +127,16 @@ def test_three_dialect_parity(spark):
         "FROM pdf").fetchall()
     for (got,), (_, _, cand, want) in zip(duck, rows):
         assert got == want, ("duckdb", cand, want)
+
+    import pyarrow as pa
+
+    from sparkbm25.querystring import compile_filter, filter_mask
+
+    cands = pa.table({"role": _GRID_CANDIDATES})
+    for pat in _GRID_PATTERNS:
+        got = filter_mask(compile_filter([("role", f"/{pat}/")]), cands)
+        want = [py for p, _, _, py in rows if p == pat]
+        assert got.tolist() == want, ("filter_mask", pat)
 
     sdf = spark.createDataFrame(pdf)
     from pyspark.sql import functions as F

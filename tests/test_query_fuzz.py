@@ -338,9 +338,10 @@ def _gen_queries(rng, vocab):
 
 def test_searcher_driver_paths_match_batch_fuzz(spark, corpus):
     """Randomized parity: every query shape the interactive Searcher
-    serves WITHOUT the batch detour (flat trees, filtered flat trees —
-    round-5 fast paths) must agree with search_batch on the result
-    set, scores (1e-9), and rank order."""
+    serves WITHOUT the batch detour must agree with search_batch on the
+    result set, scores and rank order — bit for bit on the kernel
+    route (the same per-range body), within 1e-9 on the term-at-a-time
+    maxscore / dense / and routes."""
     from sparkbm25.search import Searcher
 
     t, d, docs, df_map, n, avgdl = corpus
@@ -403,20 +404,34 @@ def test_searcher_driver_paths_match_batch_fuzz(spark, corpus):
         lambda: f"turn_idx:>=2 {w()} || {w()}",
         lambda: f"!{w()} {w()}",
     ]
+    # shapes the Searcher once sent to the batch route: filter-only,
+    # pure negative under a filter, nested trees, match-all under a
+    # filter and NOT under OR; each runs once after the random draws
+    kernel_shapes = [
+        lambda: f"role:{rng.choice(roles)} AND turn_idx:[0 TO 3]",
+        lambda: f"NOT {w()} AND role:{rng.choice(roles)}",
+        lambda: f"({w()} AND ({w()} OR NOT {w()})) OR {w()}",
+        lambda: f"*:* role:{rng.choice(roles)}",
+        lambda: f"{w()} OR NOT {w()}",
+    ]
     s = Searcher(spark, d)
     texts = [shapes[int(rng.integers(0, len(shapes)))]() for _ in range(18)]
+    texts += [shape() for shape in kernel_shapes]
     for qt in texts:
         got = s.search(qt, k=15)
-        assert s.last_path in ("filtered", "maxscore", "dense", "and",
-                               "or_merge", None), (qt, s.last_path)
+        assert s.last_path in ("maxscore", "dense", "and", "kernel",
+                               None), (qt, s.last_path)
         q = pd.DataFrame({"query_id": [0], "query_text": [qt], "k": [15]})
         exp = (search_batch(spark, d, q, k=15).toPandas()
                .sort_values("rank").reset_index(drop=True))
         assert got["conv_id"].tolist() == exp["conv_id"].tolist(), qt
         assert got["turn_idx"].tolist() == exp["turn_idx"].tolist(), qt
-        np.testing.assert_allclose(got["score"].astype(float),
-                                   exp["score"].astype(float), rtol=1e-9,
-                                   err_msg=qt)
+        if s.last_path == "kernel":
+            assert got["score"].tolist() == exp["score"].tolist(), qt
+        else:
+            np.testing.assert_allclose(got["score"].astype(float),
+                                       exp["score"].astype(float),
+                                       rtol=1e-9, err_msg=qt)
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])

@@ -148,23 +148,25 @@ def test_quoted_filter_value_is_literal():
     quoted wildcards/regexp delimiters stay literal too. The
     interpreted chars sentinel-ize at parse time; both predicate
     compilers unescape them back at equality."""
-    from sparkbm25.querystring import python_filter
+    import pyarrow as pa
 
-    for q, field, match_row, miss_row in [
-        ('role:"[admin]"', "role", {"role": "[admin]"}, {"role": "admin"}),
-        ('conv_id:"{x}"', "conv_id", {"conv_id": "{x}"}, {"conv_id": "x"}),
-        ('role:"u*er"', "role", {"role": "u*er"}, {"role": "user"}),
-        ('role:"/usr/"', "role", {"role": "/usr/"}, {"role": "usr"}),
-        ('role:(">x" OR tool)', "role", {"role": ">x"}, {"role": "zz"}),
+    from sparkbm25.querystring import compile_filter, filter_mask
+
+    for q, field, match, miss in [
+        ('role:"[admin]"', "role", "[admin]", "admin"),
+        ('conv_id:"{x}"', "conv_id", "{x}", "x"),
+        ('role:"u*er"', "role", "u*er", "user"),
+        ('role:"/usr/"', "role", "/usr/", "usr"),
+        ('role:(">x" OR tool)', "role", ">x", "zz"),
     ]:
         p = parse_query_string(q)
         flat = [p.filters[0][0]] if isinstance(p.filters[0][0], tuple) \
             else p.filters
-        pred = python_filter(flat)
-        assert pred(match_row) is True, q
-        assert pred(miss_row) is False, q
+        got = filter_mask(compile_filter(flat),
+                          pa.table({field: [match, miss]}))
+        assert got.tolist() == [True, False], q
     # the Spark-side compiler shares bound()'s unescape, and the
-    # twin-vs-Catalyst agreement is covered by the escape/regexp
+    # filter_mask-vs-Catalyst agreement is covered by the escape/regexp
     # grammar fuzz (test_query_fuzz) and the filtered-search e2e tests
 
 
@@ -237,6 +239,14 @@ def built(spark, tmp_path_factory):
     return t, d
 
 
+def _arrow_rows(rows: list[tuple], names: tuple):
+    """A parity test's tuple rows as the pyarrow Table of forward
+    columns that filter_mask evaluates."""
+    import pyarrow as pa
+
+    return pa.table({n: [r[i] for r in rows] for i, n in enumerate(names)})
+
+
 def _filtered_oracle(t: pd.DataFrame, query: str, pred, k=10):
     q = pd.DataFrame({"query_id": [0], "query_text": [query], "k": [len(t)]})
     full = bm25_reference_topk(t, q, k=len(t))
@@ -290,8 +300,8 @@ def test_mixed_filtered_and_plain_queries(spark, built):
 
 def test_filtered_driver_fast_path(spark, built):
     """`term AND role:user` serves from the DRIVER (VERDICT r4 item
-    6): postings fetched once, filter applied via doc_block-pruned
-    probes in score order — no distributed batch job. Must agree with
+    6): the kernel route scores the cached postings, filtered by the
+    predicate's doc set — no distributed batch job. Must agree with
     the batch path bit-for-bit on ranks and within 1e-9 on scores."""
     t, d = built
     s = Searcher(spark, d)
@@ -300,7 +310,7 @@ def test_filtered_driver_fast_path(spark, built):
                     ("NOT role:bot alpha", "or"),
                     ("role:user alpha w0001", "and")]:
         got = s.search(q, k=10, mode=mode)
-        assert s.last_path == "filtered", (q, s.last_path)
+        assert s.last_path == "kernel", (q, s.last_path)
         qdf = pd.DataFrame({"query_id": [0], "query_text": [q], "k": [10]})
         exp = (search_batch(spark, d, qdf, k=10, mode=mode)
                .toPandas().sort_values("rank").reset_index(drop=True))
@@ -311,19 +321,20 @@ def test_filtered_driver_fast_path(spark, built):
 
 
 def test_filtered_driver_warm_zero_jobs(spark, built):
-    """A warm repeat of a filtered query runs ZERO Spark work: the
-    postings LRU serves the terms and python_filter evaluates the
-    predicate over cached forward rows."""
+    """A warm repeat of a filtered query runs ZERO Spark work and reads
+    nothing: the postings LRU serves the terms, the predicate cache its
+    doc set and the doc cache the resolve."""
     t, d = built
     s = Searcher(spark, d)
     q = "role:user alpha w0001"
     first = s.search(q, k=10)
-    assert s.last_path == "filtered" and len(first) > 0
+    assert s.last_path == "kernel" and len(first) > 0
 
     def boom(*a, **kw):
         raise AssertionError("Spark access on a warm filtered repeat")
 
     s._fetch_postings_scan = boom
+    s._reader.docs = boom
 
     def strict_rows(ords):
         # every head ord must already sit in the forward-row cache:
@@ -333,18 +344,19 @@ def test_filtered_driver_warm_zero_jobs(spark, built):
 
     s._fetch_doc_rows = strict_rows
     second = s.search(q, k=10)
-    assert s.last_path == "filtered"
+    assert s.last_path == "kernel"
     assert second["conv_id"].tolist() == first["conv_id"].tolist()
     np.testing.assert_allclose(second["score"], first["score"])
 
 
-def test_python_filter_matches_catalyst_nulls(spark):
-    """querystring.python_filter three-valued semantics == Catalyst on
+def test_filter_mask_matches_catalyst_nulls(spark):
+    """querystring.filter_mask three-valued semantics == Catalyst on
     NULL fields: NULL fails both `f:v` AND `NOT f:v`; only the fully
     open range keeps it."""
-    from pyspark.sql import functions as F
+    import pyarrow as pa
 
-    from sparkbm25.querystring import filter_condition, python_filter
+    from sparkbm25.querystring import (compile_filter, filter_condition,
+                                       filter_mask)
 
     rows = [("c0", 0, "user", "grep"), ("c1", 1, None, None),
             ("c2", 2, "bot", "search"), ("c3", 3, "userx", None)]
@@ -362,28 +374,27 @@ def test_python_filter_matches_catalyst_nulls(spark):
     for filters, negs in cases:
         want = sorted(r["conv_id"] for r in df.where(
             filter_condition(filters, negs)).collect())
-        pred = python_filter(filters, negs)
-        got = sorted(c for c, ti, ro, to in rows
-                     if pred({"conv_id": c, "turn_idx": ti,
-                              "role": ro, "tool": to}))
+        keep = filter_mask(compile_filter(filters, negs), _arrow_rows(
+            rows, ("conv_id", "turn_idx", "role", "tool")))
+        got = sorted(r[0] for r, ok in zip(rows, keep) if ok)
         assert got == want, (filters, negs, got, want)
 
 
 def test_filtered_driver_routing_boundaries(spark, built):
     t, d = built
     s = Searcher(spark, d)
-    # filter-only → batch (constant-score semantics live there)
+    # filter-only → kernel (constant-score semantics)
     s.search("role:user", k=5)
-    assert s.last_path == "batch"
-    # complex tree (NOT) + filter → batch (mask machinery)
+    assert s.last_path == "kernel"
+    # complex tree (NOT) + filter → kernel (mask machinery)
     s.search("role:user (alpha OR NOT w0001)", k=5)
-    assert s.last_path == "batch"
-    # flat OR tree + filter → driver
+    assert s.last_path == "kernel"
+    # flat OR tree + filter → kernel
     s.search("role:user (alpha OR w0001)", k=5)
-    assert s.last_path == "filtered"
-    # filter matching nothing: driver path returns empty (not None)
+    assert s.last_path == "kernel"
+    # filter matching nothing: the kernel returns an empty answer
     out = s.search("tool:doesnotexist alpha", k=5)
-    assert len(out) == 0 and s.last_path in ("filtered", "batch")
+    assert len(out) == 0 and s.last_path == "kernel"
     # tiny postings budget → distributed batch fallback
     s_small = Searcher(spark, d, max_driver_postings=1)
     s_small.search("role:user alpha", k=5)
@@ -407,18 +418,18 @@ def test_explicit_flat_trees_on_driver(spark, built):
         assert got["conv_id"].tolist() == exp["conv_id"].tolist(), q
         np.testing.assert_allclose(got["score"].astype(float),
                                    exp["score"].astype(float), rtol=1e-9)
-    # one-level CNF now serves on the driver too (round 5)
+    # one-level CNF serves on the driver through the kernel route
     got = s.search("(alpha OR w0001) AND beta", k=5)
-    assert s.last_path == "or_merge"
+    assert s.last_path == "kernel"
     qdf = pd.DataFrame({"query_id": [0],
                         "query_text": ["(alpha OR w0001) AND beta"],
                         "k": [5]})
     exp = (search_batch(spark, d, qdf, k=5)
            .toPandas().sort_values("rank").reset_index(drop=True))
     assert got["conv_id"].tolist() == exp["conv_id"].tolist()
-    # NOT trees still route to batch (mask algebra)
+    # NOT trees run the kernel's mask algebra on the driver too
     s.search("alpha OR NOT w0001", k=5)
-    assert s.last_path == "batch"
+    assert s.last_path == "kernel"
 
 
 def test_multiterm_leaves_on_driver(spark, built):
@@ -431,7 +442,7 @@ def test_multiterm_leaves_on_driver(spark, built):
                     ("alph* OR w0001", "maxscore"),
                     ("alpha~1", "maxscore"),
                     ("al*a", "maxscore"),
-                    ("role:user alph*", "filtered")]:
+                    ("role:user alph*", "kernel")]:
         got = s.search(q, k=10)
         assert s.last_path == want, (q, s.last_path)
         qdf = pd.DataFrame({"query_id": [0], "query_text": [q], "k": [10]})
@@ -462,9 +473,9 @@ def test_multiterm_leaves_on_driver(spark, built):
     assert len(out) == 0
     out = s.search("role:user zzzqqq*", k=5)
     assert len(out) == 0 and s.last_path is None
-    # AND trees with multi-term leaves serve via the CNF driver path
+    # AND trees with multi-term leaves serve via the kernel route
     got = s.search("alph* AND w0001", k=5)
-    assert s.last_path == "or_merge"
+    assert s.last_path == "kernel"
     qdf = pd.DataFrame({"query_id": [0], "query_text": ["alph* AND w0001"],
                         "k": [5]})
     exp = (search_batch(spark, d, qdf, k=5)
@@ -549,16 +560,16 @@ def test_malformed_range_values_raise():
     the bound coercion; well-formed ranges are untouched."""
     import pytest as _pytest
 
-    from sparkbm25.querystring import filter_condition, python_filter
+    from sparkbm25.querystring import compile_filter, filter_condition
 
     for val in ("[a TO]", "[]", "[a b]", "[x", "{a TO b", "[TO 5]"):
         with _pytest.raises(ValueError, match="malformed range"):
             filter_condition([("role", val)])
         with _pytest.raises(ValueError, match="malformed range"):
-            python_filter([("role", val)])
+            compile_filter([("role", val)])
     # well-formed keyword ranges still compile
     filter_condition([("role", "[a TO z]"), ("conv_id", "{c1 TO c9}")])
-    python_filter([("role", "[a TO z]"), ("conv_id", "{c1 TO c9}")])
+    compile_filter([("role", "[a TO z]"), ("conv_id", "{c1 TO c9}")])
     # and the validation runs at PARSE time, not first-compile: a
     # query whose scoring terms miss the dictionary early-returns
     # before the filter compiles, which used to swallow the typo
@@ -680,7 +691,8 @@ def test_wildcard_filter_values(spark):
     `field:*` is the Lucene exists alias."""
     import pytest as _pytest
 
-    from sparkbm25.querystring import filter_condition, python_filter
+    from sparkbm25.querystring import (compile_filter, filter_condition,
+                                       filter_mask)
 
     rows = [("c1", 0, "user", "bash"), ("c1", 1, "assistant", None),
             ("c2", 0, "useless", "grep"), ("c2", 1, None, "bash")]
@@ -689,9 +701,8 @@ def test_wildcard_filter_values(spark):
 
     def both(filters, neg=()):
         got = df.where(filter_condition(filters, neg)).count()
-        pf = python_filter(filters, neg)
-        py = sum(1 for r in rows if pf(
-            dict(zip(("conv_id", "turn_idx", "role", "tool"), r))))
+        py = int(filter_mask(compile_filter(filters, neg), _arrow_rows(
+            rows, ("conv_id", "turn_idx", "role", "tool"))).sum())
         assert got == py, (filters, neg, got, py)
         return got
 
@@ -707,7 +718,7 @@ def test_wildcard_filter_values(spark):
     with _pytest.raises(ValueError, match="keyword"):
         filter_condition([("turn_idx", "1*")])
     with _pytest.raises(ValueError, match="keyword"):
-        python_filter([("turn_idx", "1*")])
+        compile_filter([("turn_idx", "1*")])
 
 
 def test_wildcard_like_escaping():
@@ -746,7 +757,8 @@ def test_regexp_parse_shapes():
 def test_regexp_filter_predicate(spark):
     import pytest as _pytest
 
-    from sparkbm25.querystring import filter_condition, python_filter
+    from sparkbm25.querystring import (compile_filter, filter_condition,
+                                       filter_mask)
 
     rows = [("c1", 0, "user", "bash"), ("c1", 1, "assistant", None),
             ("c2", 0, "useless", "grep"), ("c2", 1, None, "bash")]
@@ -755,9 +767,8 @@ def test_regexp_filter_predicate(spark):
 
     def both(filters, neg=()):
         got = df.where(filter_condition(filters, neg)).count()
-        pf = python_filter(filters, neg)
-        py = sum(1 for r in rows if pf(
-            dict(zip(("conv_id", "turn_idx", "role", "tool"), r))))
+        py = int(filter_mask(compile_filter(filters, neg), _arrow_rows(
+            rows, ("conv_id", "turn_idx", "role", "tool"))).sum())
         assert got == py, (filters, neg, got, py)
         return got
 
@@ -768,7 +779,7 @@ def test_regexp_filter_predicate(spark):
     with _pytest.raises(ValueError, match="keyword"):
         filter_condition([("turn_idx", "/1./")])
     with _pytest.raises(ValueError, match="keyword"):
-        python_filter([("turn_idx", "/1./")])
+        compile_filter([("turn_idx", "/1./")])
 
 
 def test_regexp_expansion_banding():
@@ -822,13 +833,14 @@ def test_regexp_toplevel_alternation(spark, built):
 
 def test_ts_filter_predicate(spark):
     """ES-style date ranges on the ts column (round 5): ISO-8601
-    bounds validated at parse time, timestamp compare on both the
-    Catalyst and python twins."""
+    bounds validated at parse time, timestamp compare in both the
+    Catalyst column and filter_mask."""
     from datetime import datetime
 
     import pytest as _pytest
 
-    from sparkbm25.querystring import filter_condition, python_filter
+    from sparkbm25.querystring import (compile_filter, filter_condition,
+                                       filter_mask)
 
     rows = [("c1", 0, "user", datetime(2026, 1, 1, 0, i, 0))
             for i in range(4)] + [("c2", 0, "user", None)]
@@ -837,9 +849,8 @@ def test_ts_filter_predicate(spark):
 
     def both(filters, neg=()):
         got = df.where(filter_condition(filters, neg)).count()
-        pf = python_filter(filters, neg)
-        py = sum(1 for r in rows if pf(
-            dict(zip(("conv_id", "turn_idx", "role", "ts"), r))))
+        py = int(filter_mask(compile_filter(filters, neg), _arrow_rows(
+            rows, ("conv_id", "turn_idx", "role", "ts"))).sum())
         assert got == py, (filters, neg, got, py)
         return got
 
@@ -854,7 +865,7 @@ def test_ts_filter_predicate(spark):
     with _pytest.raises(ValueError, match="ISO-8601"):
         filter_condition([("ts", "[junk TO 2026-01-01]")])
     with _pytest.raises(ValueError, match="ISO-8601"):
-        python_filter([("ts", ">=notadate")])
+        compile_filter([("ts", ">=notadate")])
     with _pytest.raises(ValueError, match="keyword"):
         filter_condition([("ts", "2026*")])
     with _pytest.raises(ValueError, match="keyword"):
@@ -884,12 +895,12 @@ def test_ts_filtered_search(spark, built):
 
 
 def test_filtered_probe_bulk_resolution(spark, tmp_path):
-    """Adversarial filter-score correlation (round 5): when every doc
-    scores identically (one giant tie group, head = doc order) and the
-    filter accepts only the LAST docs in that order, the driver path
-    must resolve the whole remaining probe budget with ONE bulk fetch
-    instead of a Spark collect per growing round — and still return
-    exactly the batch path's answer."""
+    """Adversarial filter-score correlation (round 5): every doc scores
+    identically (one giant tie group, head = doc order) and the filter
+    accepts only the LAST docs in that order. The kernel route must
+    return exactly the batch path's answer, and a warm repeat must read
+    no forward rows (the predicate's doc set and the resolved heads are
+    cached)."""
     import pandas as pd
 
     n = 3000
@@ -903,43 +914,33 @@ def test_filtered_probe_bulk_resolution(spark, tmp_path):
     build_index(spark, spark.createDataFrame(t), d,
                 IndexConfig(n_build_chunks=1), input_desc="bulk")
     s = Searcher(spark, d)
-
-    # spy: each _fetch_doc_rows call with uncached ords is one Spark
-    # collect. The cold probe must pay exactly round-1 + ONE bulk
-    # fetch (pre-round-5 this shape collected per 4x-growing round)
-    fetches = []
-    orig_fetch = s._fetch_doc_rows
-
-    def spy(ords):
-        uncached = sum(1 for o in ords if o not in s._doc_cache)
-        if uncached:
-            fetches.append(uncached)
-        return orig_fetch(ords)
-
-    s._fetch_doc_rows = spy
     got = s.search("role:user common", k=10)
-    s._fetch_doc_rows = orig_fetch
-    assert s.last_path == "filtered"
+    assert s.last_path == "kernel"
     # the 20 user docs sit at the tail of the tie group: doc-asc
-    # tie-break makes them the LAST 20 probed candidates
+    # tie-break makes the first 10 of them the answer
     assert got["conv_id"].tolist() == [f"c{i:06d}" for i in
                                        range(n - 20, n - 10)]
-    assert len(fetches) <= 2, f"expected round-1 + one bulk, got {fetches}"
 
-    # warm repeat: every probed row cached -> zero fetch collects
-    fetches.clear()
-    s._fetch_doc_rows = spy
+    # warm repeat: forward rows read through the reader are counted
+    reads = []
+    orig_docs = s._reader.docs
+
+    def spy(ords, cols):
+        tb = orig_docs(ords, cols)
+        reads.append(tb.num_rows)
+        return tb
+
+    s._reader.docs = spy
     got2 = s.search("role:user common", k=10)
-    s._fetch_doc_rows = orig_fetch
+    assert s.last_path == "kernel"
     assert got2["conv_id"].tolist() == got["conv_id"].tolist()
-    assert fetches == [], f"warm repeat fetched {fetches}"
+    assert reads == [], f"warm repeat read forward rows {reads}"
 
     q = pd.DataFrame({"query_id": [0], "query_text": ["role:user common"],
                       "k": [10]})
     gb = search_batch(spark, d, q, k=10).toPandas().sort_values("rank")
     assert gb["conv_id"].tolist() == got["conv_id"].tolist()
-    np.testing.assert_allclose(gb["score"].astype(float),
-                               got["score"].astype(float), rtol=1e-9)
+    assert gb["score"].tolist() == got["score"].tolist()
 
 
 def test_escape_parse_shapes():
@@ -992,11 +993,12 @@ def test_escape_parse_shapes():
 
 def test_escape_filter_values(spark):
     """Escaped chars in structured-predicate VALUES compare as
-    literals on both the Catalyst column and the python twin:
+    literals in both the Catalyst column and filter_mask:
     `role:us\\*er` is equality against `us*er`, `\\ ` keeps a space
     in the value, and an escaped star inside a wildcard value stays
     literal while the unescaped one still expands."""
-    from sparkbm25.querystring import filter_condition, python_filter
+    from sparkbm25.querystring import (compile_filter, filter_condition,
+                                       filter_mask)
 
     rows = [("c1", 0, "us*er", "a b"), ("c1", 1, "usXer", "ab"),
             ("c2", 0, "user", "a*b"), ("c2", 1, "us?er", None)]
@@ -1005,9 +1007,8 @@ def test_escape_filter_values(spark):
 
     def both(filters, neg=()):
         got = df.where(filter_condition(filters, neg)).count()
-        pf = python_filter(filters, neg)
-        py = sum(1 for r in rows if pf(
-            dict(zip(("conv_id", "turn_idx", "role", "tool"), r))))
+        py = int(filter_mask(compile_filter(filters, neg), _arrow_rows(
+            rows, ("conv_id", "turn_idx", "role", "tool"))).sum())
         assert got == py, (filters, neg, got, py)
         return got
 
@@ -1095,13 +1096,13 @@ def test_match_all(spark, built):
 def test_ts_date_math(spark, monkeypatch):
     """ES date math in ts bounds (late round 5): `now` arithmetic
     chains and the `anchor||math` form resolve against a pinnable
-    clock (SPARKBM25_NOW) identically on the Catalyst and python
-    twins; month math clamps the day like ES; `/unit` rounding and
+    clock (SPARKBM25_NOW) identically in Catalyst and filter_mask;
+    month math clamps the day like ES; `/unit` rounding and
     malformed chains raise instead of silently shifting bounds."""
     from datetime import datetime
 
-    from sparkbm25.querystring import (_parse_ts_bound, filter_condition,
-                                       python_filter)
+    from sparkbm25.querystring import (_parse_ts_bound, compile_filter,
+                                       filter_condition, filter_mask)
 
     monkeypatch.setenv("SPARKBM25_NOW", "2026-01-02T00:00:00")
     assert _parse_ts_bound("ts", "now") == datetime(2026, 1, 2)
@@ -1124,9 +1125,8 @@ def test_ts_date_math(spark, monkeypatch):
 
     def both(filters, neg=()):
         got = df.where(filter_condition(filters, neg)).count()
-        pf = python_filter(filters, neg)
-        py = sum(1 for r in rows if pf(
-            dict(zip(("conv_id", "turn_idx", "ts"), r))))
+        py = int(filter_mask(compile_filter(filters, neg), _arrow_rows(
+            rows, ("conv_id", "turn_idx", "ts"))).sum())
         assert got == py, (filters, got, py)
         return got
 
@@ -1244,11 +1244,14 @@ def test_punctuation_only_phrase_drops():
 
 def test_keyword_regexp_rlike_matches_fullmatch_on_trailing_newline(spark):
     """The Catalyst rlike wrap must use \\A...\\z: Java `$` matches
-    before a trailing newline while the python twin's fullmatch does
+    before a trailing newline while filter_mask's fullmatch does
     not — a stored value 'user\\n' previously passed Catalyst and
-    failed the twin, splitting driver/batch answers (final-round
+    failed the driver evaluator, splitting driver/batch answers (final-round
     review)."""
-    from sparkbm25.querystring import filter_condition, python_filter
+    import pyarrow as pa
+
+    from sparkbm25.querystring import (compile_filter, filter_condition,
+                                       filter_mask)
 
     p = parse_query_string("role:/user/")
     df = spark.createDataFrame(
@@ -1256,6 +1259,6 @@ def test_keyword_regexp_rlike_matches_fullmatch_on_trailing_newline(spark):
     got = {r.role for r in
            df.where(filter_condition(p.filters, [])).collect()}
     assert got == {"user"}
-    pred = python_filter(p.filters)
-    assert [pred({"role": v}) for v in ("user\n", "user", "users")] == \
-        [False, True, False]
+    got = filter_mask(compile_filter(p.filters),
+                      pa.table({"role": ["user\n", "user", "users"]}))
+    assert got.tolist() == [False, True, False]
